@@ -264,19 +264,10 @@ object AnnIndex extends QueryModule {
         v
     }
 
-  private def embeddingsStamp(spark: SparkSession, dir: String): String = {
-    val root = new org.apache.hadoop.fs.Path(dir + "/embeddings.parquet")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return "absent"
-    var n = 0L; var bytes = 0L; var maxM = 0L
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      n += 1; bytes += f.getLen
-      if (f.getModificationTime > maxM) maxM = f.getModificationTime
-    }
-    s"$n#$bytes#$maxM"
-  }
+  private def embeddingsStamp(spark: SparkSession, dir: String): String =
+    graft.FileListing.stamp(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(dir + "/embeddings.parquet"))
+      .fold("absent")(_.toString)
 
   def tunedRadius(spark: SparkSession, dir: String,
       targetPpm: Long = LshTargetPpm): Int =
@@ -2221,18 +2212,11 @@ object AnnIndex extends QueryModule {
 
   /** Every parquet data file under an index root, recursively — the
     * manifest-commit primitive shared by the versioned-read rows. */
-  private def listIndexFiles(spark: SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val out = Seq.newBuilder[String]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) out += f.toString
-    }
-    out.result().sorted
-  }
+  private def listIndexFiles(spark: SparkSession, path: String): Seq[String] =
+    graft.FileListing.files(spark.sparkContext.hadoopConfiguration,
+        new org.apache.hadoop.fs.Path(path))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .map(_.toString).toSeq.sorted
 
   /** The scatter-gather layout for the GRAPH family: each shard is its
     * own independently built NSW graph (build, fold, and compaction
@@ -2258,8 +2242,8 @@ object AnnIndex extends QueryModule {
         graft.vector.GraphAnn.buildNswGraph(
           part, "embedding", "vec_id", defaultLsh, m = 8, path)
       }
-      // per-shard RESIDENT serve (one job per shard, pin amortized per
-      // shard version) — the serving-node shape: each shard node holds
+      // per-shard RESIDENT serve (a driver-local walk per shard, pin
+      // amortized per shard version) — the serving-node shape: each shard node holds
       // its own view; parity with the distributed walk is spec-pinned
       graft.vector.GraphAnn.nswServedSearch(
         spark, path, part, "embedding", "vec_id", Seq(0L -> qv), k = 10)
@@ -2954,7 +2938,7 @@ object AnnIndex extends QueryModule {
         "embedding", "vec_id", defaultLsh, m = 8, path, v1Corpus)
     }
     // served through the RESIDENT pin, one per pinned version: the
-    // asOfSeq-keyed pin cache makes the warm read two single-job serves
+    // asOfSeq-keyed pin cache makes the warm read two job-free serves
     // instead of re-walking every rung distributed per version (parity
     // with the distributed versioned walk is pinned by AnnIndexSpec's
     // "hnsw served time travel parity")
@@ -3277,7 +3261,7 @@ object AnnIndex extends QueryModule {
     }
     // served through the RESIDENT pin, one per pinned version (the HNSW
     // time-travel row's r12 move, applied to the flat graph): the
-    // asOfSeq-keyed pin cache makes the warm read two single-job serves
+    // asOfSeq-keyed pin cache makes the warm read two job-free serves
     // instead of re-walking distributed per version; parity with the
     // distributed versioned walk is pinned by AnnIndexSpec's
     // "nsw served time travel parity"
@@ -3361,9 +3345,9 @@ object AnnIndex extends QueryModule {
   /** RESIDENT-VIEW graph serving (`GraphAnn.nswServedSearch`) — the
     * hnswlib online-serving model over the SAME fixture and oracle as
     * the batch walk row: adjacency + shard vectors + tombstones pinned
-    * once as broadcast state, the whole 5-query batch answered by ONE
-    * Spark job whose tasks walk entirely in memory. Removes the per-hop
-    * driver round-trips and plan-construction constant the distributed
+    * once per index version as driver maps, the whole 5-query batch
+    * walked in memory on the calling thread with no Spark job. Removes
+    * the per-hop jobs and plan-construction constant the distributed
     * walk pays; AnnIndexSpec's "served walk parity" pins equality with
     * nswBatchSearch, and the enumerable 50-row planted oracle gates the
     * answers here.

@@ -743,15 +743,11 @@ object Dedup extends QueryModule {
     // corpus-scale over a long deployment — it re-folds the previous
     // fold's output — so it re-clusters on doc_id like the sigs table,
     // never through a single task.
-    val admittedReadable = fs.exists(p("/admitted")) && {
-      val it = fs.listFiles(p("/admitted"), true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next().getPath
-        found = f.getName.endsWith(".parquet") && !f.getName.startsWith("_") &&
-          !f.toString.contains("_temporary")
-      }
-      found
+    val admittedReadable = graft.FileListing.files(
+        spark.sparkContext.hadoopConfiguration, p("/admitted")).exists { s =>
+      val f = s.getPath
+      f.getName.endsWith(".parquet") && !f.getName.startsWith("_") &&
+        !f.toString.contains("_temporary")
     }
     val tables =
       if (admittedReadable) {
@@ -1031,23 +1027,18 @@ object Dedup extends QueryModule {
       baseDocs: DataFrame, path: String, batchId: Long): DataFrame = {
     val epoch = AdmissionEpochBase + batchId
     val admittedPath = path + "/admitted"
-    val hp = new org.apache.hadoop.fs.Path(admittedPath)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // readable iff some OTHER epoch leaf holds a visible data file: the
     // very first admission crashing mid-write leaves only `_temporary`
     // under its own leaf, and a bare read of that would throw (no footer
     // to infer a schema from) instead of replaying — the exactly-once
     // contract must cover the first write too
-    val readableAdmitted = fs.exists(hp) && {
-      val it = fs.listFiles(hp, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next().getPath
-        found = f.getName.endsWith(".parquet") && !f.getName.startsWith("_") &&
-          !f.toString.contains("_temporary") &&
-          !f.toString.contains(s"epoch=$epoch/")
-      }
-      found
+    val readableAdmitted = graft.FileListing.files(
+        spark.sparkContext.hadoopConfiguration,
+        new org.apache.hadoop.fs.Path(admittedPath)).exists { s =>
+      val f = s.getPath
+      f.getName.endsWith(".parquet") && !f.getName.startsWith("_") &&
+        !f.toString.contains("_temporary") &&
+        !f.toString.contains(s"epoch=$epoch/")
     }
     val admittedSoFar =
       if (readableAdmitted) spark.read.parquet(admittedPath)
@@ -1601,9 +1592,8 @@ object Dedup extends QueryModule {
       // scheduling round-trip per sweep). Over-count-safe: a retried or
       // speculative task can only INFLATE the count, which at worst
       // forces one extra sweep (that sweep then observes 0 changes) —
-      // never a wrong label. Under-count is impossible: every partition
-      // of the checkpoint job evaluates the projection exactly once or
-      // retries it.
+      // never a wrong label. An under-count would end the loop early,
+      // so the loop never trusts a zero on its own (see below).
       val changedAcc = labels.sparkSession.sparkContext.longAccumulator
       val probe = udf { changed: Boolean =>
         if (changed) changedAcc.add(1L)
@@ -1619,7 +1609,12 @@ object Dedup extends QueryModule {
           probe(col("label") =!= col("old")).as("chg"))
         .localCheckpoint(true)
       labels = next.select(col("node"), col("label"))
-      converged = changedAcc.value == 0L
+      // the accumulator is the per-sweep signal; a reported convergence
+      // is CONFIRMED once against the checkpointed change column (one
+      // extra job per run, not per sweep), so an accumulator update lost
+      // anywhere can cost a sweep but never end the loop early
+      converged = changedAcc.value == 0L &&
+        next.filter(col("chg")).limit(1).count() == 0L
       iter += 1
     }
     labels

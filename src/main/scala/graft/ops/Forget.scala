@@ -330,7 +330,7 @@ object Forget extends QueryModule {
     *     even coarse-scores;
     *   - hnsw / nsw: the RESIDENT-pinned graph serves, taking the ledger
     *     ids as the serve-tail `exclude` set — deliberately NOT folded
-    *     into the pin stamp, so the pinned broadcasts stay pure
+    *     into the pin stamp, so the pinned view stays pure
     *     index-version state and a forget flips the next serve with ZERO
     *     pin rebuild (stronger than invalidation: no rebuild cost, no
     *     stale-window race; ForgetSpec pins pinBuilds is unchanged

@@ -34,23 +34,10 @@ object ResultCache extends QueryModule {
       case lr: LogicalRelation => lr.relation match {
         case fs: HadoopFsRelation =>
           fs.location.rootPaths.map { root =>
-            val hfs = root.getFileSystem(
-              df.sparkSession.sparkContext.hadoopConfiguration)
-            val files =
-              if (hfs.exists(root))
-                hfs.listFiles(root, true) match { case it =>
-                  val b = Seq.newBuilder[(String, Long, Long)]
-                  while (it.hasNext) {
-                    val f = it.next()
-                    b += ((f.getPath.getName, f.getLen,
-                      f.getModificationTime))
-                  }
-                  b.result()
-                }
-              else Seq.empty
-            val (n, bytes, maxM) = (files.size,
-              files.map(_._2).sum, (0L +: files.map(_._3)).max)
-            s"$root#$n#$bytes#$maxM"
+            val st = graft.FileListing.stamp(
+              df.sparkSession.sparkContext.hadoopConfiguration, root)
+              .getOrElse(graft.FileListing.Stamp(0L, 0L, 0L))
+            s"$root#$st"
           }.mkString(",")
         case other => other.toString
       }

@@ -32,9 +32,15 @@ import org.apache.spark.sql.functions._
   *    the source), scores the new candidates against the query from the
   *    per-corpus-version resident vector pin (the hnswlib serving bound —
   *    see vecPin), and keeps the global best B.
-  *  - Driver-side state is (B + E + H·B·M) (id, score) entries — a few
+  *  - Walk state is (B + E + H·B·M) (id, score) entries — a few
   *    hundred rows, the MMR/pagination serving-path bound, documented
-  *    at each collect. Nothing corpus-sized ever moves.
+  *    at each collect.
+  *  - The corpus' (id, embedding) projection IS collected: once per
+  *    corpus version into the vecPin (LRU, at most 16 corpus versions),
+  *    so the driver must hold |corpus| × dim floats per live version —
+  *    the hnswlib serving-node bound. The resident served path (see
+  *    residentPin) adds the merged adjacency and tombstones per index
+  *    version; corpora past one node's memory serve per shard.
   *
   * Determinism: seeded hyperplanes, windowed ties by id, fixed E/B/H —
   * identical data in, identical graph and identical search result out.
@@ -581,12 +587,8 @@ object GraphAnn {
   def vacuumNswGraph(spark: SparkSession, path: String): Long = {
     val base = new org.apache.hadoop.fs.Path(path)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def countFiles(p: org.apache.hadoop.fs.Path): Long = {
-      var n = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) { it.next(); n += 1 }
-      n
-    }
+    def countFiles(p: org.apache.hadoop.fs.Path): Long =
+      graft.FileListing.files(spark.sparkContext.hadoopConfiguration, p).size
     var reclaimed = 0L
     val tmp = new org.apache.hadoop.fs.Path(path + "._compact.tmp")
     if (fs.exists(tmp)) { reclaimed += countFiles(tmp); fs.delete(tmp, true) }
@@ -637,8 +639,11 @@ object GraphAnn {
     val key = graft.ops.ResultCache.cacheKey(proj)
     val hit = vecPinCache.synchronized(Option(vecPinCache.get(key)))
     hit.getOrElse {
-      val m = proj.collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+      // a null embedding scores nothing (its id is a waypoint at most),
+      // exactly as an id absent from the corpus
+      val m = proj.collect().collect {
+        case r if !r.isNullAt(1) => r.getLong(0) -> r.getSeq[Float](1).toArray
+      }.toMap
       vecPinCache.synchronized(vecPinCache.put(key, m))
       m
     }
@@ -1153,7 +1158,7 @@ object GraphAnn {
   /** The in-memory beam walk over a RESIDENT view — beamWalkCore's exact
     * loop (same frontier selection, same dedup, same left-to-right
     * double dot, same (-score, id) ordering) with Map lookups replacing
-    * the per-hop Spark jobs. Shared by every task of a served batch.
+    * the per-hop Spark jobs. Every served walk, flat or ladder, runs it.
     */
   private def residentWalk(adj: scala.collection.Map[Long, Array[Long]],
       vec: scala.collection.Map[Long, Array[Float]], qv: Array[Float],
@@ -1187,16 +1192,18 @@ object GraphAnn {
   }
 
   /** One pinned resident view of a graph index version: the merged
-    * (latest-wins, optionally asOfSeq-pinned) adjacency per rung, the
-    * shard's vectors, the tombstone set, and the precomputed hash-min
-    * entry points — all broadcast once and reused across serve calls.
+    * (latest-wins, optionally asOfSeq-pinned) adjacency per rung with its
+    * hash-min entry points, layer 0's adjacency and entry points, the
+    * shard's vectors (the corpus' vecPin) and the tombstone set — plain
+    * driver maps, built once per version and walked in place by every
+    * serve.
     */
   private[graft] final case class ResidentPin(
-    rungs: Seq[(org.apache.spark.broadcast.Broadcast[Map[Long, Array[Long]]], Seq[Long])],
-    adj0: org.apache.spark.broadcast.Broadcast[Map[Long, Array[Long]]],
+    rungs: Seq[(Map[Long, Array[Long]], Seq[Long])],
+    adj0: Map[Long, Array[Long]],
     entryIds: Seq[Long],
-    vec: org.apache.spark.broadcast.Broadcast[Map[Long, Array[Float]]],
-    dead: org.apache.spark.broadcast.Broadcast[Set[Long]])
+    vec: Map[Long, Array[Float]],
+    dead: Set[Long])
 
   // ---- resident-pin cache ---------------------------------------------
   // The hnswlib model the served rows cite pins the view ONCE per index
@@ -1207,20 +1214,25 @@ object GraphAnn {
   // AND the corpus' plan+input signature (ResultCache.cacheKey — the
   // LocalRelation-digesting key, so planted-copy corpora invalidate too).
   // Any append/fold/compact/delete changes a listing, the stamp moves,
-  // and the next serve rebuilds; a same-version serve reuses the
-  // broadcasts with ZERO pin jobs. Bounded: one live entry per key,
-  // replaced in place (the superseded pin's broadcasts are unpersisted).
+  // and the next serve rebuilds; a same-version serve reuses the maps
+  // with ZERO pin jobs. Bounded: one live entry per key, replaced in
+  // place.
+  //
+  // Memory bound: one pinned view per (path, asOfSeq, params) key — per
+  // index version the merged adjacency of every rung (ids + ≤ 2M
+  // neighbor ids each) and the tombstone set, plus the corpus' (id,
+  // embedding) map shared with vecPin's cache.
   private val pinCache = scala.collection.concurrent.TrieMap
     .empty[String, (String, ResidentPin)]
   // Striped build locks: two concurrent first serves of the same version
-  // must NOT both collect+broadcast (the loser's broadcasts would leak —
-  // it saw old=None and never unpersists). Builds serialize per key
-  // stripe; the winner's pin is re-read inside the lock, so the racer
-  // reuses it. A FIXED stripe array (not a per-key map) keeps the lock
-  // state bounded over a serving JVM's lifetime — per-key lock objects
-  // would accumulate one entry per (path, asOfSeq, params) forever. Two
-  // distinct keys sharing a stripe merely serialize their builds, which
-  // is harmless (builds are rare: once per index version).
+  // must NOT both collect the view (twice the scans, twice the transient
+  // driver memory). Builds serialize per key stripe; the winner's pin is
+  // re-read inside the lock, so the racer reuses it. A FIXED stripe
+  // array (not a per-key map) keeps the lock state bounded over a
+  // serving JVM's lifetime — per-key lock objects would accumulate one
+  // entry per (path, asOfSeq, params) forever. Two distinct keys sharing
+  // a stripe merely serialize their builds, which is harmless (builds
+  // are rare: once per index version).
   private val pinLocks = Array.fill(64)(new Object)
   private def pinLock(key: String): Object =
     pinLocks(math.floorMod(key.hashCode, pinLocks.length))
@@ -1232,33 +1244,18 @@ object GraphAnn {
 
   /** Drop every cached pin (spec isolation only — serving never needs it:
     * stale pins are invalidated by stamp, not by eviction). */
-  private[graft] def dropPins(): Unit = {
-    pinCache.values.foreach { case (_, p) =>
-      (p.rungs.map(_._1) ++ Seq(p.adj0, p.vec, p.dead))
-        .foreach(_.unpersist(false))
-    }
-    pinCache.clear()
-  }
+  private[graft] def dropPins(): Unit = pinCache.clear()
 
   /** Cheap FS stamp of one directory: file count, total bytes, max mtime
-    * (the embeddingsStamp discipline from the knob cache). */
-  private def dirStamp(spark: SparkSession, p: String): String = {
-    val root = new org.apache.hadoop.fs.Path(p)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return s"$p#absent"
-    var n = 0L; var bytes = 0L; var maxM = 0L
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      n += 1; bytes += f.getLen
-      if (f.getModificationTime > maxM) maxM = f.getModificationTime
-    }
-    s"$p#$n#$bytes#$maxM"
-  }
+    * (the FileListing stamp every knob and result cache shares). */
+  private def dirStamp(spark: SparkSession, p: String): String =
+    graft.FileListing.stamp(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(p)).fold(s"$p#absent")(st => s"$p#$st")
 
   /** The pin for (index version, corpus, params): cache hit when the
     * stamp still matches, else build (bounded collects: one merge scan
-    * per rung, one corpus scan, one tombstone scan) and replace.
+    * per rung, one corpus scan unless vecPin holds it, one tombstone
+    * scan) and replace.
     */
   private def residentPin(spark: SparkSession, path: String,
       corpus: DataFrame, embCol: String, idCol: String, entries: Int,
@@ -1282,7 +1279,7 @@ object GraphAnn {
       val stamp = stampNow()
       pinCache.get(key) match {
       case Some((s, pin)) if s == stamp => pin
-      case old =>
+      case _ =>
         def adjOf(p: String): Map[Long, Array[Long]] =
           withWalkConfs(spark) { s => readNswAdjacencyAsOf(s, p, asOfSeq).collect() }
             .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
@@ -1292,46 +1289,58 @@ object GraphAnn {
             .expressions.XXH64.hashLong(id, 42L), id)).take(e)
         val rungs = rungPaths.filter(p => pathExists(spark, p)).map { p =>
           val m = adjOf(p)
-          (spark.sparkContext.broadcast(m), hashEntries(m, descentBeam))
+          (m, hashEntries(m, descentBeam))
         }
         val adj0 = adjOf(path)
-        val vecMap: Map[Long, Array[Float]] =
-          corpus.select(col(idCol).cast("long"), col(embCol)).collect()
-            .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-        val dead: Set[Long] = readNswTombstones(spark, path)
-          .collect().map(_.getLong(0)).toSet
-        val pin = ResidentPin(rungs,
-          spark.sparkContext.broadcast(adj0), hashEntries(adj0, entries),
-          spark.sparkContext.broadcast(vecMap),
-          spark.sparkContext.broadcast(dead))
+        val pin = ResidentPin(rungs, adj0, hashEntries(adj0, entries),
+          vecPin(corpus, embCol, idCol),
+          readNswTombstones(spark, path).collect().map(_.getLong(0)).toSet)
         pinBuildCounter.incrementAndGet()
         pinCache.put(key, (stamp, pin))
-        // `old` was read under the lock, so this unpersists exactly the
-        // pin evicted from the map. unpersist(false) only drops executor
-        // copies — an in-flight job re-fetches from the driver, so late
-        // readers of the superseded pin stay correct.
-        old.foreach { case (_, p) =>
-          (p.rungs.map(_._1) ++ Seq(p.adj0, p.vec, p.dead))
-            .foreach(_.unpersist(false))
-        }
         pin
       }
       }
     }
   }
 
+  /** The served tail both resident walks share: walk each query on the
+    * calling thread, drop tombstoned and excluded ids at emission, and
+    * return each query's k best as a driver-local (qid, idCol, score)
+    * DataFrame — 6-dp scores, (qid, id) order — so collecting it runs no
+    * Spark job either.
+    *
+    * `exclude` (e.g. the forget ledger's id set), unioned with the
+    * conf-keyed default root's ids, rides the SERVE, never the pin: the
+    * pinned view stays pure index-version state, so a forget committed
+    * after the pin was built flips the very next serve with zero pin
+    * rebuild.
+    */
+  private def servedTopK(spark: SparkSession, pin: ResidentPin,
+      queries: Seq[(Long, Array[Float])], idCol: String, k: Int,
+      exclude: Set[Long])(walk: Array[Float] => Map[Long, Double]): DataFrame = {
+    import spark.implicits._
+    val excluded = exclude ++ graft.ops.Forget.defaultExcludeIds(spark)
+    queries.flatMap { case (qid, qv) =>
+      walk(qv).toSeq.filterNot { case (id, _) =>
+          pin.dead.contains(id) || excluded.contains(id) }
+        .sortBy { case (id, s) => (-s, id) }.take(k)
+        .map { case (id, s) => (qid, id,
+          BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) }
+    }.sortBy { case (qid, id, _) => (qid, id) }
+      .toDF("qid", idCol, "score")
+  }
+
   /** RESIDENT-VIEW batch serving — the hnswlib serving model the walk
     * code cites, made a first-class path: the merged (latest-wins)
     * adjacency, the shard's vectors, and the tombstone set are pinned
-    * ONCE PER INDEX VERSION as broadcast state (the residentPin cache
-    * above — a second serve against an unchanged index reuses the pin
-    * with zero pin jobs), and the whole query batch runs as ONE Spark
-    * job — each task walks its queries entirely in memory (zero per-hop
-    * driver↔executor round-trips, zero per-hop plan construction, the
-    * multi-second scheduling constant the distributed walk pays per
-    * query). Results are exactly `nswSearch`'s per query: the resident
-    * walk replicates beamWalkCore's loop (AnnIndexSpec's "served walk
-    * parity" pins row-for-row equality against nswBatchSearch).
+    * ONCE PER INDEX VERSION as driver maps (the residentPin cache above
+    * — a serve against an unchanged index reuses the pin after one FS
+    * stamp), and every query of the batch walks them on the calling
+    * thread: no Spark job, no per-hop plan, no task scheduling — a warm
+    * walk is about a millisecond of map lookups. Results are exactly
+    * `nswSearch`'s per query: the resident walk replicates
+    * beamWalkCore's loop (AnnIndexSpec's "served walk parity" pins
+    * row-for-row equality against nswBatchSearch).
     *
     * 100 TB posture: the resident view is per-SHARD serving state — ids
     * + M neighbor ids + the vector column, the same memory bound hnswlib
@@ -1342,124 +1351,27 @@ object GraphAnn {
     * union, re-top-k), or fall back to the distributed walk, which
     * bounds memory at (B + E + H·B·2M) ids.
     */
-  /** The served walks' exclusion predicate: the caller's serve-tail set
-    * unioned with the conf-keyed default root's ids, BROADCAST when
-    * non-empty (a large ledger ships once per serve, not per task
-    * closure) and a free constant-false when empty — the conf-unset
-    * standing state must not pay broadcast registration per serve.
-    *
-    * Broadcasts are CACHED per (application, set content): a standing
-    * serve loop over an unchanged ledger reuses ONE broadcast instead of
-    * registering a new one per walk (the registration + ContextCleaner
-    * pressure a long-lived armed driver would otherwise accumulate
-    * between GC cycles). A forget/unforget changes the set content, so
-    * the next serve keys a fresh broadcast — exclusion stays serve-tail
-    * state, never cache state. Bounded LRU; evictees unpersist(false)
-    * (an in-flight job re-fetches from the driver, so late readers of an
-    * evicted broadcast stay correct — the residentPin discipline). */
-  private val ExcludeBcMax = 64
-  // value carries the OWNING context: unpersist routes through the
-  // ACTIVE SparkEnv and broadcast ids restart per context, so calling
-  // it on a dead context's handle would purge a colliding id's LIVE
-  // blocks in the new context — evictees unpersist only while their own
-  // context is still the active, unstopped one; a dead context's blocks
-  // died with it and its entries drop handle-only
-  private val excludeBcCache = new java.util.LinkedHashMap[
-      (String, Set[Long]),
-      (org.apache.spark.SparkContext,
-        org.apache.spark.broadcast.Broadcast[Set[Long]])](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (String, Set[Long]),
-        (org.apache.spark.SparkContext,
-          org.apache.spark.broadcast.Broadcast[Set[Long]])]): Boolean =
-      if (size > ExcludeBcMax) {
-        val (ctx, bc) = e.getValue
-        if (!ctx.isStopped)
-          try bc.unpersist(false)
-          catch { case _: Exception => () } // racing a context stop
-        true
-      } else false
-  }
-
-  private def excludeFn(spark: SparkSession,
-      exclude: Set[Long]): Long => Boolean = {
-    val excl = exclude ++ graft.ops.Forget.defaultExcludeIds(spark)
-    if (excl.isEmpty) _ => false
-    else {
-      // keyed by applicationId too: a broadcast outlives neither its
-      // SparkContext nor this cache — a restarted context must not serve
-      // the dead context's handle
-      val ctx = spark.sparkContext
-      val key = (ctx.applicationId, excl)
-      val bc = excludeBcCache.synchronized {
-        // a context restart orphans the old app's entries (their keys
-        // can never hit again) — drop them handle-only so they neither
-        // occupy LRU slots nor reach the eviction unpersist
-        val it = excludeBcCache.entrySet().iterator()
-        while (it.hasNext)
-          if (it.next().getKey._1 != ctx.applicationId) it.remove()
-        val got = excludeBcCache.get(key)
-        if (got != null) got._2
-        else {
-          val b = ctx.broadcast(excl)
-          excludeBcCache.put(key, (ctx, b))
-          b
-        }
-      }
-      id => bc.value.contains(id)
-    }
-  }
-
   def nswServedSearch(spark: SparkSession, path: String, corpus: DataFrame,
       embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
       k: Int, beam: Int = 32, hops: Int = 4,
       entries: Int = 16, asOfSeq: Long = Long.MaxValue,
       exclude: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
     val pin = residentPin(spark, path, corpus, embCol, idCol, entries,
       Nil, 0, asOfSeq)
-    val bcAdj = pin.adj0
-    val bcVec = pin.vec
-    val bcDead = pin.dead
-    val entryIds = pin.entryIds
-    // `exclude` (e.g. the forget ledger's id set) rides the SERVE, never
-    // the pin: the pinned view stays pure index-version state, so a
-    // forget committed after the pin was built flips the very next serve
-    // — zero pin rebuild, no ledger state baked into cached broadcasts.
-    // Broadcast per serve (NOT folded into the pin stamp): a large
-    // ledger ships once per serve like the pinned state, not once per
-    // task closure. The conf-keyed default root's ids join here too.
-    // Empty set (the conf-unset standing state): no broadcast at all —
-    // registration + cleaner pressure per serve buys nothing there.
-    val excludedBy = excludeFn(spark, exclude)
-    spark.sparkContext
-      .parallelize(queries.map { case (q, v) => (q, v.toSeq) },
-        math.max(1, math.min(queries.size, spark.sparkContext.defaultParallelism)))
-      .flatMap { case (qid, qv) =>
-        residentWalk(bcAdj.value, bcVec.value, qv.toArray, entryIds, beam, hops)
-          .toSeq.filterNot { case (id, _) =>
-            bcDead.value.contains(id) || excludedBy(id) }
-          .sortBy { case (id, s) => (-s, id) }.take(k)
-          .map { case (id, s) => (qid, id,
-            BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) }
-      }
-      .toDF("qid", idCol, "score")
-      // repartition(1), NOT coalesce(1): coalesce folds the parent
-      // partitions into one task, which would serialize the per-query
-      // walks — the shuffle barrier keeps walk tasks parallel and the
-      // single downstream task sorts the bounded |q|·k result
-      .repartition(1).sortWithinPartitions(col("qid"), col(idCol))
+    servedTopK(spark, pin, queries, idCol, k, exclude) { qv =>
+      residentWalk(pin.adj0, pin.vec, qv, pin.entryIds, beam, hops)
+    }
   }
 
   /** Resident-view serving through the HNSW LADDER — nswServedSearch's
     * model extended to the hierarchy, which is exactly what hnswlib
-    * itself serves resident: every rung's (small) adjacency collects
-    * next to layer 0's, and each task descends its queries in memory
-    * (same greedy per-rung walk and carried-seed semantics as
+    * itself serves resident: every rung's (small) adjacency is pinned
+    * next to layer 0's, and each query descends in memory on the calling
+    * thread (same greedy per-rung walk and carried-seed semantics as
     * hnswSearch/hnswBatchSearch: descend with descentBeam/descentHops,
     * layer 0 walks from carried ∪ fixed hash-min entries, preserving the
-    * flat recall floor). One Spark job for the whole batch; parity with
-    * the distributed ladder walk is pinned row-for-row by AnnIndexSpec's
+    * flat recall floor). No Spark job per batch; parity with the
+    * distributed ladder walk is pinned row-for-row by AnnIndexSpec's
     * "hnsw served parity". Upper rungs are geometrically thinner
     * (|V|/fanout^ℓ), so the ladder adds ~15% to the resident view's
     * memory bound. The whole ladder view is pinned once per index
@@ -1475,45 +1387,21 @@ object GraphAnn {
       maxLevel: Int = 2, descentBeam: Int = 4,
       descentHops: Int = 2, asOfSeq: Long = Long.MaxValue,
       exclude: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
     val pin = residentPin(spark, path, corpus, embCol, idCol, entries,
       (maxLevel to 1 by -1).map(l => path + "_l" + l), descentBeam, asOfSeq)
-    val rungs = pin.rungs
-    val bcAdj0 = pin.adj0
-    val bcVec = pin.vec
-    val bcDead = pin.dead
-    val fixed = pin.entryIds
-    // serve-scoped exclude broadcast — see nswServedSearch
-    val excludedBy = excludeFn(spark, exclude)
-    spark.sparkContext
-      .parallelize(queries.map { case (q, v) => (q, v.toSeq) },
-        math.max(1, math.min(queries.size, spark.sparkContext.defaultParallelism)))
-      .flatMap { case (qid, qvs) =>
-        val qv = qvs.toArray
-        var carried = Seq.empty[Long]
-        rungs.foreach { case (bcAdjL, entriesL) =>
-          val seeds = if (carried.nonEmpty) carried else entriesL
-          if (seeds.nonEmpty) {
-            val walked = residentWalk(bcAdjL.value, bcVec.value, qv, seeds,
+    servedTopK(spark, pin, queries, idCol, k, exclude) { qv =>
+      var carried = Seq.empty[Long]
+      pin.rungs.foreach { case (adjL, entriesL) =>
+        val seeds = if (carried.nonEmpty) carried else entriesL
+        if (seeds.nonEmpty)
+          carried = residentWalk(adjL, pin.vec, qv, seeds,
               descentBeam, descentHops)
-            carried = walked.toSeq.sortBy { case (id, s) => (-s, id) }
-              .take(descentBeam).map(_._1)
-          }
-        }
-        residentWalk(bcAdj0.value, bcVec.value, qv,
-            (carried ++ fixed).distinct, beam, hops)
-          .toSeq.filterNot { case (id, _) =>
-            bcDead.value.contains(id) || excludedBy(id) }
-          .sortBy { case (id, s) => (-s, id) }.take(k)
-          .map { case (id, s) => (qid, id,
-            BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) }
+            .toSeq.sortBy { case (id, s) => (-s, id) }
+            .take(descentBeam).map(_._1)
       }
-      .toDF("qid", idCol, "score")
-      // repartition(1), NOT coalesce(1): coalesce folds the parent
-      // partitions into one task, which would serialize the per-query
-      // walks — the shuffle barrier keeps walk tasks parallel and the
-      // single downstream task sorts the bounded |q|·k result
-      .repartition(1).sortWithinPartitions(col("qid"), col(idCol))
+      residentWalk(pin.adj0, pin.vec, qv,
+        (carried ++ pin.entryIds).distinct, beam, hops)
+    }
   }
 
   /** Batch retrieval through the HNSW ladder: the descent ALSO batches —

@@ -1748,4 +1748,72 @@ class AnnIndexSpec extends SparkSpec {
     assert(GraphAnn.readNswAdjacency(spark, path).count() === total,
       "vacuum touched the live base")
   }
+
+  test("warm served walks run no Spark job and reuse the pin") {
+    import graft.vector.GraphAnn
+    val path = Files.createTempDirectory("served_nojob").toString + "/g"
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    GraphAnn.buildHnswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
+    val queries = e.filter(col("vec_id") < 3L).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
+    def nsw() = GraphAnn.nswServedSearch(spark, path, e,
+      "embedding", "vec_id", queries, k = 5).collect().toSeq
+    def hnsw() = GraphAnn.hnswServedSearch(spark, path, e,
+      "embedding", "vec_id", queries, k = 5).collect().toSeq
+    // first serves build both pins
+    val (nsw0, hnsw0) = (nsw(), hnsw())
+    val b0 = GraphAnn.pinBuilds
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(
+          j.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("warm-serve")
+      val (nsw1, hnsw1) = try (nsw(), hnsw()) finally sc.setJobDescription(null)
+      assert(nsw1 === nsw0 && hnsw1 === hnsw0)
+      // the listener bus is asynchronous and FIFO: once a later marker
+      // job is seen, every job the warm serves started has been seen too
+      sc.setJobDescription("served-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains("served-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains("served-marker"), "listener never saw the marker job")
+      assert(seen.asScala.count(_ == "warm-serve") === 0,
+        "a warm served walk ran Spark jobs")
+    } finally sc.removeSparkListener(listener)
+    assert(GraphAnn.pinBuilds === b0, "a warm serve rebuilt its pin")
+  }
+
+  test("null embeddings: pins skip them, their ids are never served") {
+    import graft.vector.GraphAnn
+    val path = Files.createTempDirectory("served_nullemb").toString + "/g"
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    GraphAnn.buildHnswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
+    val qv = e.filter(col("vec_id") === 0L).collect().head.getSeq[Float](1).toArray
+    // vec 0 loses its vector but stays in the graph: it is the query's
+    // own nearest neighbor, so only the pins' null filter keeps it out
+    val holed = e.withColumn("embedding",
+      when(col("vec_id") === 0L, lit(null)).otherwise(col("embedding")))
+    def ids(df: org.apache.spark.sql.DataFrame, idIx: Int) =
+      df.collect().map(_.getLong(idIx)).toSeq
+    val served = Seq(
+      ids(GraphAnn.nswServedSearch(spark, path, holed, "embedding", "vec_id",
+        Seq(0L -> qv), k = 5), 1),
+      ids(GraphAnn.hnswServedSearch(spark, path, holed, "embedding", "vec_id",
+        Seq(0L -> qv), k = 5), 1),
+      ids(GraphAnn.nswSearch(spark, path, holed, "embedding", "vec_id",
+        qv, k = 5), 0))
+    served.foreach { got =>
+      assert(got.size === 5, s"a null embedding starved the walk: $got")
+      assert(!got.contains(0L), s"served the null-embedding id: $got")
+    }
+    assert(ids(GraphAnn.nswServedSearch(spark, path, e, "embedding", "vec_id",
+      Seq(0L -> qv), k = 5), 1).contains(0L), "control: vec 0 serves itself")
+  }
 }

@@ -31,4 +31,24 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "control bytes found (write them as escapes like \"\\u0000\"):\n" + offenders.mkString("\n"))
   }
+
+  test("no Hadoop listFiles(_, recursive) in src/main outside FileListing") {
+    // a recursive listFiles wraps every file in a LocatedFileStatus, which
+    // forks one `ls` per file on the local filesystem; FileListing is the
+    // fork-free walk every stamp and file scan goes through
+    val call = """listFiles\(.*,\s*(true|false)\s*\)""".r
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory, s"expected to run from the repo root; cwd=${new java.io.File(".").getAbsolutePath}")
+    val offenders = scalaFiles(root)
+      .filterNot(_.getName == "FileListing.scala")
+      .flatMap { f =>
+        val lines = new String(java.nio.file.Files.readAllBytes(f.toPath),
+          java.nio.charset.StandardCharsets.UTF_8).split("\n")
+        lines.zipWithIndex.collect {
+          case (l, i) if call.findFirstIn(l).isDefined => s"${f.getPath}:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(offenders.isEmpty,
+      "use graft.FileListing instead of Hadoop listFiles:\n" + offenders.mkString("\n"))
+  }
 }
