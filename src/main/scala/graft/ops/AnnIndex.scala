@@ -1035,7 +1035,7 @@ object AnnIndex extends QueryModule {
     // the standing graph and measure retrieval, not fixture construction.
     // Sidecar state belongs to the cached unit: resets live INSIDE it.
     ResultCache.buildIfAbsent(spark, corpus,
-      s"nsw:m=8:bits=${defaultLsh.nBits}:seed=42:lifecycle=append:v1", path) {
+      s"nsw:m=8:bits=${defaultLsh.nBits}:seed=42:lifecycle=append:v2", path) {
       deleteRecursively(new java.io.File(path + "_delta"))
       graft.vector.GraphAnn.buildNswGraph(
         e, "embedding", "vec_id", defaultLsh, m = 8, path)
@@ -1089,7 +1089,7 @@ object AnnIndex extends QueryModule {
     * from entries already NEAR the answer (plus the fixed hash-min
     * entries, so recall never drops below the flat walk — the parity
     * spec pins that). At scale the descent turns the cold cross-graph
-    * crawl into log-hops: fewer frontier point lookups per query, same
+    * crawl into log-hops: fewer frontier expansions per query, same
     * exact-scored emission. Deterministic end-to-end: level membership
     * is a pure hash of the id, so build and search always agree.
     */
@@ -1127,7 +1127,7 @@ object AnnIndex extends QueryModule {
     // one cached unit for the whole build+ladder-append sequence (see
     // annGraphIncrementalTopk); rung sidecars reset inside the unit
     ResultCache.buildIfAbsent(spark, corpus,
-      s"hnsw:m=8:bits=${defaultLsh.nBits}:seed=42:fanout=8:maxLevel=2:lifecycle=append:v1",
+      s"hnsw:m=8:bits=${defaultLsh.nBits}:seed=42:fanout=8:maxLevel=2:lifecycle=append:v2",
       path) {
       Seq("_delta", "_l1_delta", "_l2_delta")
         .foreach(s => deleteRecursively(new java.io.File(path + s)))
@@ -2244,7 +2244,7 @@ object AnnIndex extends QueryModule {
       }
       // per-shard RESIDENT serve (a driver-local walk per shard, pin
       // amortized per shard version) — the serving-node shape: each shard node holds
-      // its own view; parity with the distributed walk is spec-pinned
+      // its own view
       graft.vector.GraphAnn.nswServedSearch(
         spark, path, part, "embedding", "vec_id", Seq(0L -> qv), k = 10)
         .select("vec_id", "score")
@@ -2927,7 +2927,7 @@ object AnnIndex extends QueryModule {
     val v1Corpus = e.unionByName(
       corpus.filter(col("vec_id").between(100000L, 100004L)))
     ResultCache.buildIfAbsent(spark, corpus,
-      s"hnsw:m=8:bits=${defaultLsh.nBits}:seed=42:fanout=8:maxLevel=2:lifecycle=timetravel:v1",
+      s"hnsw:m=8:bits=${defaultLsh.nBits}:seed=42:fanout=8:maxLevel=2:lifecycle=timetravel:v2",
       path) {
       Seq("_delta", "_l1_delta", "_l2_delta", "_tombstones")
         .foreach(s => deleteRecursively(new java.io.File(path + s)))
@@ -2939,9 +2939,7 @@ object AnnIndex extends QueryModule {
     }
     // served through the RESIDENT pin, one per pinned version: the
     // asOfSeq-keyed pin cache makes the warm read two job-free serves
-    // instead of re-walking every rung distributed per version (parity
-    // with the distributed versioned walk is pinned by AnnIndexSpec's
-    // "hnsw served time travel parity")
+    // (AnnIndexSpec's "hnsw served time travel parity" pins the rows)
     def readVersion(v: Long, asOf: Long, k: Int): DataFrame =
       graft.vector.GraphAnn.hnswServedSearch(
         spark, path, corpus, "embedding", "vec_id",
@@ -3158,7 +3156,7 @@ object AnnIndex extends QueryModule {
     // of the corpus — one cached unit; re-runs measure retrieval over
     // the standing upserted graph
     ResultCache.buildIfAbsent(spark, corpus,
-      s"nsw:m=8:bits=${defaultLsh.nBits}:seed=42:lifecycle=upsert:v1", path) {
+      s"nsw:m=8:bits=${defaultLsh.nBits}:seed=42:lifecycle=upsert:v2", path) {
       deleteRecursively(new java.io.File(path + "_delta"))
       deleteRecursively(new java.io.File(path + "_tombstones"))
       graft.vector.GraphAnn.buildNswGraph(
@@ -3178,9 +3176,9 @@ object AnnIndex extends QueryModule {
   }
 
   /** The hierarchical batch row: same five-family construction and
-    * 50-row oracle, served through `GraphAnn.hnswBatchSearch` — the
-    * descent batches too (one shared walk per rung seeds every query's
-    * next rung) and fetched vectors are reused across rungs.
+    * 50-row oracle, served through `GraphAnn.hnswBatchSearch` — every
+    * query descends the ladder and walks layer 0 in memory over the one
+    * resident pin of the index version, with no Spark job once warm.
     */
   def annHnswBatchTopk(spark: SparkSession, dir: String): DataFrame = {
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -3203,10 +3201,10 @@ object AnnIndex extends QueryModule {
 
   /** RESIDENT-VIEW serving through the HNSW ladder
     * (`GraphAnn.hnswServedSearch`) — the same fixture and 50-row oracle
-    * as the hierarchical batch row, answered in ONE Spark job: every
-    * rung's adjacency joins layer 0 in the broadcast view, and each task
-    * descends its queries in memory with hnswSearch's exact carried-seed
-    * semantics. Parity with the distributed ladder walk is spec-pinned.
+    * as the hierarchical batch row, answered on the calling thread: every
+    * rung's adjacency is pinned next to layer 0's as driver maps, and
+    * each query descends them in memory with no Spark job once warm.
+    * AnnIndexSpec's "hnsw served parity" pins the walk's rows.
     */
   def annHnswServedTopk(spark: SparkSession, dir: String): DataFrame = {
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -3247,7 +3245,7 @@ object AnnIndex extends QueryModule {
     val batchA = corpus.filter(col("vec_id").between(100000L, 100004L))
     val batchB = corpus.filter(col("vec_id") >= 100005L)
     ResultCache.buildIfAbsent(spark, corpus,
-      s"nsw:m=8:bits=${defaultLsh.nBits}:seed=42:lifecycle=timetravel:v1",
+      s"nsw:m=8:bits=${defaultLsh.nBits}:seed=42:lifecycle=timetravel:v2",
       path) {
       deleteRecursively(new java.io.File(path + "_delta"))
       deleteRecursively(new java.io.File(path + "_tombstones"))
@@ -3259,12 +3257,10 @@ object AnnIndex extends QueryModule {
         spark, batchB, "embedding", "vec_id", defaultLsh, m = 8, path,
         e.unionByName(batchA.select("vec_id", "embedding")))
     }
-    // served through the RESIDENT pin, one per pinned version (the HNSW
-    // time-travel row's r12 move, applied to the flat graph): the
-    // asOfSeq-keyed pin cache makes the warm read two job-free serves
-    // instead of re-walking distributed per version; parity with the
-    // distributed versioned walk is pinned by AnnIndexSpec's
-    // "nsw served time travel parity"
+    // served through the RESIDENT pin, one per pinned version (as the
+    // HNSW time-travel row): the asOfSeq-keyed pin cache makes the warm
+    // read two job-free serves (AnnIndexSpec's "nsw served time travel
+    // parity" pins the rows)
     def readVersion(v: Long, asOf: Long, k: Int): DataFrame =
       graft.vector.GraphAnn.nswServedSearch(
         spark, path, corpus, "embedding", "vec_id",
@@ -3293,7 +3289,7 @@ object AnnIndex extends QueryModule {
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
     ResultCache.buildIfAbsent(spark, corpus,
-      s"nsw:m=8:bits=${defaultLsh.nBits}:seed=42:lifecycle=append+compact:v1",
+      s"nsw:m=8:bits=${defaultLsh.nBits}:seed=42:lifecycle=append+compact:v2",
       path) {
       deleteRecursively(new java.io.File(path + "_delta"))
       graft.vector.GraphAnn.buildNswGraph(
@@ -3311,16 +3307,15 @@ object AnnIndex extends QueryModule {
   }
 
   /** BATCH graph retrieval: the five-family planted construction of the
-    * LSH/IVF batch rows served by ONE shared-job walk
-    * (`GraphAnn.nswBatchSearch`) — per hop, one adjacency fetch for the
-    * union of all five frontiers and one embedding fetch for the union
-    * of all new candidates, so batch cost amortizes instead of
-    * multiplying by |q|. Each family is a 10-clique in the graph (its
+    * LSH/IVF batch rows served by `GraphAnn.nswBatchSearch` — all five
+    * queries walk the one resident pin of the index version on the
+    * calling thread, so a warm batch runs no Spark job and batch cost is
+    * |q| in-memory walks. Each family is a 10-clique in the graph (its
     * members are mutually nearest), so a walk that reaches ANY member
     * drains the family; the enumerable 50-row oracle (self + nine copies
     * per query, all at 1.0) is the same one the LSH/IVF batch rows use —
-    * a regression in frontier bookkeeping, the shared fetches, per-query
-    * state isolation, or emission perturbs the set.
+    * a regression in frontier bookkeeping, per-query state isolation, or
+    * emission perturbs the set.
     */
   def annGraphBatchTopk(spark: SparkSession, dir: String): DataFrame = {
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -3346,11 +3341,9 @@ object AnnIndex extends QueryModule {
     * hnswlib online-serving model over the SAME fixture and oracle as
     * the batch walk row: adjacency + shard vectors + tombstones pinned
     * once per index version as driver maps, the whole 5-query batch
-    * walked in memory on the calling thread with no Spark job. Removes
-    * the per-hop jobs and plan-construction constant the distributed
-    * walk pays; AnnIndexSpec's "served walk parity" pins equality with
-    * nswBatchSearch, and the enumerable 50-row planted oracle gates the
-    * answers here.
+    * walked in memory on the calling thread with no Spark job.
+    * AnnIndexSpec's "served walk parity" pins the walk's rows, and the
+    * enumerable 50-row planted oracle gates the answers here.
     */
   def annGraphServedTopk(spark: SparkSession, dir: String): DataFrame = {
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -3447,7 +3440,7 @@ object AnnIndex extends QueryModule {
     val survivors = corpus.filter(col("vec_id") =!= 100000L)
     // one cached unit for the full ladder upsert (see the flat row)
     ResultCache.buildIfAbsent(spark, corpus,
-      s"hnsw:m=8:bits=${defaultLsh.nBits}:seed=42:fanout=8:maxLevel=2:lifecycle=upsert:v1",
+      s"hnsw:m=8:bits=${defaultLsh.nBits}:seed=42:fanout=8:maxLevel=2:lifecycle=upsert:v2",
       path) {
       Seq("_delta", "_l1_delta", "_l2_delta", "_tombstones")
         .foreach(s => deleteRecursively(new java.io.File(path + s)))
@@ -3468,8 +3461,8 @@ object AnnIndex extends QueryModule {
   // ---- graph-ANN tuning (measure, don't guess for the hop budget) ----
 
   /** The graph family's tuning job: the hop budget H is what a walk
-    * actually spends (each hop = one frontier adjacency fetch + one batch
-    * of point-lookup scorings), and unlike the LSH radius / IVF nProbe it
+    * actually spends (each hop expands up to B frontier nodes and scores
+    * their new neighbors), and unlike the LSH radius / IVF nProbe it
     * had no measured curve. ONE traced walk per sample query
     * (`GraphAnn.nswSearchTrace` — hop h's state is a prefix of hop h+1's)
     * yields every hop's (cost, top-k) at once; recall is judged against
@@ -3477,7 +3470,8 @@ object AnnIndex extends QueryModule {
     * sample. Output: one row per hop with integer-ppm mean recall@k and
     * total candidates scored — monotone in hops by construction. At
     * 100 TB this is the graph index's nightly health job: cost is
-    * |sample| walks + one exact scoring sweep, never a corpus pass.
+    * |sample| in-memory walks over the index version's resident pin (its
+    * one corpus collect is shared with serving) + one exact scoring sweep.
     */
   def annGraphHopCurveOf(spark: SparkSession, dir: String,
       maxHops: Int = 4, k: Int = 10): DataFrame = {

@@ -88,8 +88,8 @@ object ProfileGraphRow {
           } }
         case "walk" =>
           // serving-walk constant: warm fixture, repeated searches with
-          // job counts — distributed flat walk vs ladder walk vs the
-          // resident-view served path, plus the walk's setup sub-steps
+          // job counts — flat walk vs ladder walk vs the batch-shaped
+          // served path (one resident kernel), plus the walk's setup
           val path = new java.io.File(System.getProperty("java.io.tmpdir"),
             "graft_prof_walk_" + Integer.toHexString(sfDir.hashCode)).getAbsolutePath
           val corpus = AnnIndex.withPlantedSelfCopies(spark,

@@ -22,25 +22,27 @@ import org.apache.spark.sql.functions._
   *    heuristic), keeping out-degree ≤ 2M while guaranteeing the graph
   *    has no in-only sinks.
   *  - Adjacency persists as (node_id, neighbors array<long>) parquet,
-  *    hash-clustered on node_id so frontier fetches prune.
+  *    hash-clustered on node_id so id-bounded fetches (append, fold)
+  *    prune.
   *
-  * Scale shape, query (the serving path):
-  *  - E entry points = hash-min sample of the corpus (deterministic,
+  * Scale shape, query (the serving path, the hnswlib model): every
+  * search — single, batch, traced, time-travel or filtered; flat NSW is
+  * the ladder with no upper rungs — runs ONE in-memory beam loop
+  * (residentWalk) on the calling thread over a resident pin of the index
+  * version (residentPin).
+  *  - E entry points = hash-min sample of the graph (deterministic,
   *    query-independent — the fixed entry of HNSW generalized).
-  *  - H bounded hops; each hop fetches the frontier's adjacency rows by
-  *    pushed `node_id IN` point lookups (partition/row-group pruning at
-  *    the source), scores the new candidates against the query from the
-  *    per-corpus-version resident vector pin (the hnswlib serving bound —
-  *    see vecPin), and keeps the global best B.
-  *  - Walk state is (B + E + H·B·M) (id, score) entries — a few
-  *    hundred rows, the MMR/pagination serving-path bound, documented
-  *    at each collect.
-  *  - The corpus' (id, embedding) projection IS collected: once per
-  *    corpus version into the vecPin (LRU, at most 16 corpus versions),
-  *    so the driver must hold |corpus| × dim floats per live version —
-  *    the hnswlib serving-node bound. The resident served path (see
-  *    residentPin) adds the merged adjacency and tombstones per index
-  *    version; corpora past one node's memory serve per shard.
+  *  - H bounded hops; each hop expands the beam-best B unexpanded nodes
+  *    by map lookup, scores their new neighbors against the query, and
+  *    keeps the global best B.
+  *  - The pin is built once per index version and validated by an FS +
+  *    corpus stamp, so a warm search runs no Spark job; a metadata
+  *    predicate (`allowed`) adds one pushed `id IN visited` probe.
+  *  - Memory: the driver holds the corpus' (id, embedding) map (vecPin:
+  *    |corpus| × dim floats per live corpus version, at most 16) plus,
+  *    per pinned index version, every rung's merged adjacency (ids and
+  *    ≤ 2M neighbor ids each) and the tombstone set — the hnswlib
+  *    serving-node bound. Corpora past one node's memory serve per shard.
   *
   * Determinism: seeded hyperplanes, windowed ties by id, fixed E/B/H —
   * identical data in, identical graph and identical search result out.
@@ -155,21 +157,8 @@ object GraphAnn {
     * build; `maxSeq = Long.MaxValue` is the current view.
     */
   def readNswAdjacencyAsOf(spark: SparkSession, path: String,
-      maxSeq: Long): DataFrame = {
-    val base = spark.read.schema(adjSchema).parquet(path)
-      .withColumn("seq", lit(0L))
-    val all =
-      if (pathExists(spark, path + "_delta"))
-        base.unionByName(spark.read.schema(adjDeltaSchema)
-          .parquet(path + "_delta")
-          .filter(col("seq") <= maxSeq)
-          .select(col("node_id"), col("neighbors"), col("seq")))
-      else base
-    all.groupBy("node_id")
-      .agg(max_by(struct(col("seq"), col("neighbors")), col("seq"))
-        .getField("neighbors").as("neighbors"))
-      .filter(col("neighbors").isNotNull)
-  }
+      maxSeq: Long): DataFrame =
+    latestWins(adjacencyRows(spark, path, maxSeq))
 
   /** The merged view restricted to `ids` — the id semi-join applied BELOW
     * the latest-wins aggregate (joining on the grouping key commutes with
@@ -177,108 +166,39 @@ object GraphAnn {
     * whole graph through the merge exchange.
     */
   private def readNswAdjacencyFor(spark: SparkSession, path: String,
-      ids: DataFrame): DataFrame = {
+      ids: DataFrame): DataFrame =
+    latestWins(adjacencyRows(spark, path, Long.MaxValue)
+      .join(broadcast(ids.select("node_id")), Seq("node_id")))
+
+  /** Unmerged (node_id, neighbors, seq) rows: the base build as seq 0
+    * plus every delta generation up to `maxSeq`. */
+  private def adjacencyRows(spark: SparkSession, path: String,
+      maxSeq: Long): DataFrame = {
     val base = spark.read.schema(adjSchema).parquet(path)
       .withColumn("seq", lit(0L))
-    val all =
-      if (pathExists(spark, path + "_delta"))
-        base.unionByName(spark.read.schema(adjDeltaSchema)
-          .parquet(path + "_delta")
-          .select(col("node_id"), col("neighbors"), col("seq")))
-      else base
-    all.join(broadcast(ids.select("node_id")), Seq("node_id"))
-      .groupBy("node_id")
+    if (!pathExists(spark, path + "_delta")) base
+    else base.unionByName(spark.read.schema(adjDeltaSchema)
+      .parquet(path + "_delta")
+      .filter(col("seq") <= maxSeq)
+      .select(col("node_id"), col("neighbors"), col("seq")))
+  }
+
+  /** Latest-wins per node (highest seq); a removal marker's node drops. */
+  private def latestWins(rows: DataFrame): DataFrame =
+    rows.groupBy("node_id")
       .agg(max_by(struct(col("seq"), col("neighbors")), col("seq"))
         .getField("neighbors").as("neighbors"))
       .filter(col("neighbors").isNotNull)
-  }
 
-  /** Add vectors to a persisted NSW graph without a rebuild — the HNSW
-    * insert generalized to batches. New nodes link through the SAME LSH
-    * candidate equi-join (against existing + new home buckets); existing
-    * nodes touched by a reverse edge get their adjacency row RECOMPUTED
-    * (current edges re-scored by point lookups + the new in-edges,
-    * re-topped at 2M) and re-landed as a delta row — without this in-edge
-    * maintenance, appended vectors would be unreachable out-only sinks.
-    * Cost scales with |new|·M affected rows, never the graph. Deltas are
-    * seq-stamped (prior max + 1 — deterministic); readers merge
-    * latest-wins via readNswAdjacency.
-    *
-    * BATCH-SIZE CONTRACT: the broadcast hints assume `newNodes` is a
-    * micro-batch (≲ executor broadcast budget once multiplied by M edges
-    * and the embedding width — low millions of rows in practice). A
-    * corpus-scale backfill exceeds the broadcast limit by design; route
-    * it through `buildNswGraph` (the batch rebuild), which shuffles
-    * instead of broadcasting.
+  /** Add vectors to a persisted NSW graph without a rebuild: the HNSW
+    * append with no upper rungs (see appendToHnswGraph — placement walk,
+    * LSH candidate join, reverse-edge maintenance, seq-stamped delta).
     */
   def appendToNswGraph(spark: SparkSession, newNodes: DataFrame,
       embCol: String, idCol: String, lsh: IndexBuilder.RandomHyperplaneLsh,
-      m: Int, path: String, corpus: DataFrame): Unit = {
-    val newN = newNodes.select(col(idCol).as("id"), col(embCol).as("emb"))
-    val nodesAll = corpus.select(col(idCol).as("id"), col(embCol).as("emb"))
-      .unionByName(newN)
-    val home = IndexBuilder.withLshBucket(nodesAll, "emb", lsh)
-    // columnar probe generation (see buildNswGraph)
-    val masks = IndexBuilder.probeMasks(lsh.nBits, radius = 1)
-    val probedNew = IndexBuilder.withLshBucket(newN, "emb", lsh, "sig")
-      .withColumn("mask", explode(typedlit(masks)))
-      .select(col("id"), col("emb"),
-        col("sig").bitwiseXOR(col("mask")).as("bucket"))
-    // the probe side is batch-sized: broadcast it so the corpus-wide home
-    // frame streams through the join without an exchange
-    val pairs = broadcast(probedNew).as("a")
-      .join(home.as("b"), col("a.bucket") === col("b.bucket") &&
-        col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("src"), col("b.id").as("dst"),
-        VectorFunctions.cosineUnit(col("a.emb"), col("b.emb")).as("score"))
-      .groupBy("src", "dst").agg(max("score").as("score"))
-    val wSrc = Window.partitionBy("src")
-      .orderBy(col("score").desc, col("dst").asc)
-    // localCheckpoint: topM feeds four downstream subtrees (new adjacency,
-    // reverse edges, affected set, delta rows); without materialization
-    // each broadcast build re-executes the whole candidate join
-    val topM = pairs.withColumn("rn", row_number().over(wSrc))
-      .filter(col("rn") <= m).select("src", "dst", "score")
-      .localCheckpoint(true)
-    val newAdj0 = topM
-      .groupBy(col("src").as("node_id"))
-      .agg(sort_array(collect_list(struct(
-        (-col("score")).as("neg"), col("dst"))))
-        .getField("dst").as("neighbors"))
-    // total over the arrivals, like the build: a new node alone in its
-    // bucket neighborhood (common in sparse upper HNSW layers) still
-    // lands a row, or layer membership would silently drift
-    val newAdj = newN.select(col("id").as("node_id"))
-      .join(broadcast(newAdj0), Seq("node_id"), "left")
-      .select(col("node_id"), coalesce(col("neighbors"),
-        array().cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType))).as("neighbors"))
-    // reverse edges into EXISTING nodes: recompute those nodes' rows.
-    // topM / affected / the edge recompute are all bounded by |new|·M —
-    // broadcast them so no corpus-sized frame crosses an exchange here
-    val existingIds = corpus.select(col(idCol).as("id"))
-    val rev = broadcast(topM).join(
-        existingIds.withColumnRenamed("id", "dst"), Seq("dst"))
-      .select(col("dst").as("src"), col("src").as("dst"), col("score"))
-    val affected = rev.select(col("src").as("node_id")).distinct()
-    val curEdges = readNswAdjacencyFor(spark, path, affected)
-      .select(col("node_id").as("src"), explode(col("neighbors")).as("dst"))
-    val curSrc = broadcast(curEdges)
-      .join(nodesAll.select(col("id").as("src"), col("emb").as("src_emb")), Seq("src"))
-    val cur = broadcast(curSrc)
-      .join(nodesAll.select(col("id").as("dst"), col("emb").as("dst_emb")), Seq("dst"))
-      .select(col("src"), col("dst"),
-        VectorFunctions.cosineUnit(col("src_emb"), col("dst_emb")).as("score"))
-    val mergedRows = cur.unionByName(rev)
-      .groupBy("src", "dst").agg(max("score").as("score"))
-      .withColumn("rn", row_number().over(wSrc))
-      .filter(col("rn") <= 2 * m)
-      .groupBy(col("src").as("node_id"))
-      .agg(sort_array(collect_list(struct(
-        (-col("score")).as("neg"), col("dst"))))
-        .getField("dst").as("neighbors"))
-    writeDelta(newAdj.unionByName(mergedRows), path, nextDeltaSeq(spark, path))
-  }
+      m: Int, path: String, corpus: DataFrame): Unit =
+    appendToHnswGraph(spark, newNodes, embCol, idCol, lsh, m, path, corpus,
+      maxLevel = 0)
 
   /** Next seq stamp for a graph's delta sidecar (prior max + 1;
     * deterministic — never a wall clock). The seq lives in the DIRECTORY
@@ -311,9 +231,9 @@ object GraphAnn {
     * no adjacency files are touched. Search semantics until the next
     * fold: a tombstoned node may still be hopped THROUGH (its edges keep
     * its neighborhood connected — dropping it from the walk could strand
-    * every region it bridges) but is never EMITTED. The emission filter
-    * is one pushed `id IN` probe over the sidecar, bounded by the visited
-    * set, so serving cost does not grow with the tombstone count.
+    * every region it bridges) but is never EMITTED. The sidecar is read
+    * once per index version into the resident pin (the delete moves the
+    * pin's stamp), and emission filters by set lookup.
     */
   def deleteFromNswGraph(spark: SparkSession, ids: Seq[Long], path: String): Unit = {
     import spark.implicits._
@@ -383,7 +303,7 @@ object GraphAnn {
   private def foldRungTombstones(spark: SparkSession, rungPaths: Seq[String],
       tomb: DataFrame, corpus: DataFrame, embCol: String, idCol: String,
       m: Int): Unit = withWalkConfs(spark) { spark =>
-    // walk confs apply to the fold too: its only corpus-wide touch is the
+    // walk confs apply to the fold: its only corpus-wide touch is the
     // map-side raw scan (no shuffle for AQE to replan), and every shuffle
     // below is bounded by |deleted| × in-degree
     // THE one corpus-wide pass this job fundamentally needs: the graph
@@ -599,32 +519,15 @@ object GraphAnn {
     reclaimed
   }
 
-  /** Deterministic entry points: the E graph ids with the smallest
-    * xxhash64 — a fixed, query-independent sample (catalog-scale read of
-    * id + hash only).
-    */
-  private def entryPoints(spark: SparkSession, adj: DataFrame, e: Int): Seq[Long] =
-    adj.select(col("node_id"), xxhash64(col("node_id")).as("h"))
-      .orderBy(col("h").asc, col("node_id").asc).limit(e)
-      .collect().map(_.getLong(0)).toIndexedSeq // serving-path: E rows
-
-  // ---- scorer-side resident vector pin ---------------------------------
-  // The rescore side of a walk pinned per corpus version — the same
-  // residentPin discipline the `_served`/`_vacuumed` rows already use,
-  // applied to the DISTRIBUTED walk's scorer: the per-hop cosine
-  // previously ran as one Spark job per hop (a pushed `id IN` point
-  // lookup + collect), which at ~40 ms of plan/codegen/scheduling per
-  // job dominated every walk row's wall time while fetching a few
-  // hundred rows. The pin collects the corpus projection (id, emb) ONCE
-  // per corpus signature (ResultCache.cacheKey — plan + input-file
-  // stamps, so any upsert/delete/planted-copy change invalidates) and
-  // hops score by map lookup: per-hop job count halves, and the walk's
-  // own pushed `node_id IN` adjacency point-lookups keep the distributed
-  // walk shape. 100 TB posture: (id, emb) resident per indexed shard is
-  // exactly the memory bound hnswlib requires of a serving node — the
-  // argument residentPin documents; the unpinned cold path is one narrow
-  // projection scan per corpus version, paid inside the serve.
-  // Driver-side map only (the beam loop runs on the driver); LRU-bounded.
+  // ---- corpus vector pin ----------------------------------------------
+  // The corpus' (id, embedding) projection collected ONCE per corpus
+  // signature (corpusKey — plan + input-file stamps + the frame's own file
+  // list, so any upsert/delete/planted-copy change invalidates) into a
+  // driver map: the vector side of every resident pin, shared by all pins
+  // over the same corpus version. Resident (id, emb) per indexed shard is
+  // exactly the memory bound hnswlib requires of a serving node; the cold
+  // path is one narrow projection scan per corpus version. LRU-bounded by
+  // count.
   private val VecPinMax = 16
   private val vecPinCache = new java.util.LinkedHashMap[
       String, Map[Long, Array[Float]]](16, 0.75f, true) {
@@ -633,10 +536,23 @@ object GraphAnn {
       size > VecPinMax
   }
 
+  /** Identity of the data a corpus frame reads: ResultCache's plan +
+    * input-stamp key, plus the file list the frame captured when it was
+    * created. The stamp alone names the directory as it is NOW, so a frame
+    * created before a write (it still reads its old file list) and one
+    * created after it would share a key — and a pin collected from the
+    * stale frame would then serve the fresh one without the new rows.
+    */
+  private def corpusKey(df: DataFrame): String =
+    graft.ops.ResultCache.cacheKey(df) + "#" + java.security.MessageDigest
+      .getInstance("MD5").digest(df.inputFiles.sorted.mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+
   private def vecPin(corpus: DataFrame, embCol: String,
       idCol: String): Map[Long, Array[Float]] = {
     val proj = corpus.select(col(idCol).cast("long"), col(embCol))
-    val key = graft.ops.ResultCache.cacheKey(proj)
+    val key = corpusKey(proj)
     val hit = vecPinCache.synchronized(Option(vecPinCache.get(key)))
     hit.getOrElse {
       // a null embedding scores nothing (its id is a waypoint at most),
@@ -649,199 +565,28 @@ object GraphAnn {
     }
   }
 
-  /** The pinned dot product: double accumulation left-to-right over the
-    * min length — the exact loop of the native DotProduct expression
-    * (org.apache.spark.sql.graft.DotProduct.nullSafeEval) the distributed
-    * scorer evaluated, so pinned scores are bit-identical (the batch-walk
-    * parity spec pins this across the two paths).
-    */
-  private def pinnedDot(e: Array[Float], q: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    val n = math.min(e.length, q.length)
-    while (i < n) { s += e(i).toDouble * q(i).toDouble; i += 1 }
-    s
-  }
-
-  /** Exact query scores for a bounded id set, over the corpus pin — the
-    * per-hop scoring primitive shared by the flat and hierarchical walks.
-    * Ids absent from the corpus score nothing, exactly as the previous
-    * pushed `id IN` point lookup returned no row for them.
-    */
-  private def scorer(corpus: DataFrame, embCol: String, idCol: String,
-      queryVec: Array[Float]): Seq[Long] => Map[Long, Double] = {
-    val pin = vecPin(corpus, embCol, idCol)
-    ids => ids.iterator.flatMap(id =>
-      pin.get(id).map(e => id -> pinnedDot(e, queryVec))).toMap
-  }
-
-  /** The greedy beam walk: H hops over `adj` from `entryIds`, keeping the
-    * global best B visited. Each hop fetches the frontier's adjacency
-    * rows by a pushed `node_id IN` filter (the merge's grouping key, so
-    * Catalyst pushes it below the latest-wins aggregate into both base
-    * and delta scans) — driver state stays (B + E + H·B·2M) entries.
-    */
-  /** ONE walk core serving both consumers: the greedy beam walk
-    * (H hops over `adj` from `entryIds`, global best B kept; each hop's
-    * frontier adjacency fetched by a pushed `node_id IN` filter — the
-    * merge's grouping key, so Catalyst pushes it below the latest-wins
-    * aggregate) AND its per-hop trace — (cumulative candidates scored,
-    * current top-snapshotK visited) after every hop. Serving and the
-    * tuning curve derive from THIS one loop, so the measured hop curve
-    * always describes the walk that is actually served (two drifting
-    * copies was the hazard). An exhausted frontier stops expansion but
-    * keeps recording carry-forward snapshots so the curve has a row per
-    * hop. Driver state stays (B + E + H·B·2M) entries.
-    */
-  private def beamWalkCore(adj: DataFrame,
-      scoreOf: Seq[Long] => Map[Long, Double], entryIds: Seq[Long],
-      beam: Int, hops: Int,
-      snapshotK: Int): (Map[Long, Double], Seq[(Int, Long, Seq[Long])]) = {
-    var visited = scoreOf(entryIds)
-    var scored = visited.size.toLong
-    var expanded = Set.empty[Long]
-    val trace = Seq.newBuilder[(Int, Long, Seq[Long])]
-    var hop = 1
-    var exhausted = false
-    while (hop <= hops) {
-      if (!exhausted) {
-        // frontier: the beam-best visited nodes not yet expanded
-        val frontier = visited.toSeq
-          .sortBy { case (id, s) => (-s, id) }.take(beam)
-          .map(_._1).filterNot(expanded.contains)
-        if (frontier.isEmpty) exhausted = true
-        else {
-          // dedupe driver-side: a .distinct() here costs a shuffle stage
-          // per hop for ≤ B·2M rows — collect the explode narrow instead
-          val nbrs = adj.filter(col("node_id").isin(frontier: _*))
-            .select(explode(col("neighbors")).as("id"))
-            .collect().map(_.getLong(0)).distinct // ≤ B·2M rows per hop
-            .filterNot(visited.contains)
-          visited ++= scoreOf(nbrs.toIndexedSeq)
-          scored += nbrs.length
-          expanded ++= frontier
-        }
-      }
-      if (snapshotK > 0)
-        trace += ((hop, scored, visited.toSeq
-          .sortBy { case (id, s) => (-s, id) }.take(snapshotK).map(_._1)))
-      hop += 1
-    }
-    (visited, trace.result())
-  }
-
-  private def beamWalk(adj: DataFrame, scoreOf: Seq[Long] => Map[Long, Double],
-      entryIds: Seq[Long], beam: Int, hops: Int): Map[Long, Double] =
-    beamWalkCore(adj, scoreOf, entryIds, beam, hops, snapshotK = 0)._1
-
-  /** One TRACED walk: the serving walk's own loop with a snapshot after
-    * every hop — a recall-vs-hops tuning curve costs ONE walk per sample
-    * query instead of one walk per (query, hops) setting (hop h's state
-    * is a prefix of hop h+1's by construction, which also makes the
-    * curve monotone). Returns (hop, scored_so_far, top-k ids) for
-    * hop = 1..maxHops.
-    */
-  def nswSearchTrace(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, queryVec: Array[Float], k: Int,
-      beam: Int = 32, maxHops: Int = 4,
-      entries: Int = 16): Seq[(Int, Long, Seq[Long])] = withWalkConfs(spark) { spark =>
-    val scoreOf = scorer(corpus, embCol, idCol, queryVec)
-    val adj = readNswAdjacency(spark, path)
-    withPinned(Seq(adj)) {
-      beamWalkCore(adj, scoreOf, entryPoints(spark, adj, entries),
-        beam, maxHops, snapshotK = k)._2
-    }
-  }
-
-  /** Emission: drop tombstoned ids (legal waypoints, never results),
-    * apply the optional metadata predicate the same way (the hnswlib
-    * filtered-search semantics: the walk routes through every node, only
-    * emission is filtered — post-filtering a top-k would lose results,
-    * and pruning the WALK by the predicate could strand regions), and
-    * return the k best surviving visited as (idCol, score) rows. The
-    * predicate probe is one pushed `id IN` lookup bounded by the visited
-    * set, like the tombstone probe.
-    */
-  private def emitTopK(spark: SparkSession, path: String,
-      visited: Map[Long, Double], idCol: String, k: Int,
-      allowed: Option[DataFrame] = None,
-      exclude: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val visitedIds = visited.keys.toSeq
-    // conf-keyed forget exclusion joins the caller's serve-tail set —
-    // emission-side like every exclude, so the walk itself is untouched
-    val excl = exclude ++ graft.ops.Forget.defaultExcludeIds(spark)
-    val dead: Set[Long] =
-      if (visitedIds.isEmpty) Set.empty
-      else readNswTombstones(spark, path)
-        .filter(col("node_id").isin(visitedIds: _*))
-        .collect().map(_.getLong(0)).toSet
-    val pass: Long => Boolean = allowed match {
-      case None => _ => true
-      case Some(a) =>
-        if (visitedIds.isEmpty) _ => false
-        else {
-          val ok = a.filter(col(idCol).isin(visitedIds: _*))
-            .select(col(idCol)).collect().map(_.getLong(0)).toSet
-          ok.contains _
-        }
-    }
-    visited.toSeq.filter { case (id, _) =>
-        !dead.contains(id) && !excl.contains(id) && pass(id) }
-      .sortBy { case (id, s) => (-s, id) }.take(k)
-      .map { case (id, s) =>
-        (id, BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      }
-      .toDF(idCol, "score")
-      // k driver-local rows: a single-partition narrow sort gives the
-      // same global order as orderBy without its range-sampling job
-      .coalesce(1).sortWithinPartitions(col("score").desc, col(idCol).asc)
-  }
-
-  /** Pin the merged adjacency for the duration of a walk — the hnswlib
-    * serving model (the graph lives resident) applied to the MOR view:
-    * without this, EVERY hop re-runs the base∪delta latest-wins aggregate
-    * just to fetch a frontier's rows. One merge pass per walk, then hops
-    * are in-memory filters; at 100 TB the pinned view is the serving
-    * tier's standing state (re-pinned per delta version), and the
-    * unpinned cold path stays correct, just slower.
-    */
-  private def withPinned[A](adjs: Seq[DataFrame])(f: => A): A = {
-    adjs.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try f finally adjs.foreach(_.unpersist(false))
-  }
-
-  /** Serving confs for the walk's micro-queries: every hop's frame is
-    * provably bounded (frontier ≤ B rows, neighbors ≤ B·2M) — AQE's
-    * per-stage re-planning spawns extra jobs that cost more than they
-    * could ever save on such rows, and a 32-partition shuffle schedules
-    * 32 near-empty tasks for a few hundred entries. Measured on the hnsw
-    * driver row: ~1 s of pure scheduling overhead.
+  /** Confs for the tombstone fold, whose shuffles are bounded by
+    * |deleted| × in-degree: AQE's per-stage re-planning spawns extra jobs
+    * that cost more than they could save on such frames, and 8 shuffle
+    * partitions are plenty.
     *
-    * The confs live on a DEDICATED walk session (spark.newSession: same
-    * SparkContext, isolated SQL confs), created once per context with
-    * AQE off and 8 shuffle partitions, and handed to the body — which
-    * shadows `spark` with it, so every graph-side frame it builds runs
-    * under walk confs. The previous set/restore on the SHARED session
-    * leaked walk confs to any concurrent non-walk query and needed a
-    * JVM-wide lock that serialized walks against folds; a cloned session
-    * mutates nothing, so the lock is gone and a long fold no longer
-    * blocks serving walks. Caller-built frames (corpus point lookups,
-    * tombstone probes) keep their own session — they are narrow pushed
-    * scans with no exchange, where neither conf matters.
+    * The confs live on a DEDICATED session (spark.newSession: same
+    * SparkContext, isolated SQL confs), created once per context with AQE
+    * off and 8 shuffle partitions, and handed to the body — which shadows
+    * `spark` with it, so every graph-side frame it builds runs under these
+    * confs while the caller's session is never mutated (no leak to
+    * concurrent queries, no lock between serving and folds).
     * Build/append jobs keep the session confs (their shuffles can be
     * corpus-born, where AQE earns its jobs).
     *
-    * CONF-INHERITANCE CUTOFF: the walk session is created ONCE per
+    * CONF-INHERITANCE CUTOFF: the session is created ONCE per
     * SparkContext via `spark.newSession()`, which snapshots only
     * context-level and default confs — runtime SQL confs set on the
-    * caller's session AFTER the first walk never reach walk-side
-    * execution. Deliberate for the two confs pinned here, but a future
-    * session-level conf (an ANSI toggle, a codegen flag) must arrive
-    * context-wide (spark-defaults / -D system property) to influence
-    * walks — or this cache must become a per-caller cloneSession. Walks
-    * also compose caller-session frames (corpus, tombstones) into
-    * walk-session plans; those stay exchange-free pushed scans, where no
-    * session conf changes the result.
+    * caller's session AFTER the first use never reach these jobs.
+    * Deliberate for the two confs pinned here, but a future session-level
+    * conf (an ANSI toggle, a codegen flag) must arrive context-wide
+    * (spark-defaults / -D system property) to influence them — or this
+    * cache must become a per-caller cloneSession.
     */
   @volatile private var walkSessionRef: SparkSession = _
 
@@ -863,34 +608,13 @@ object GraphAnn {
     f(ws)
   }
 
-  /** Beam search over the persisted graph: H hops, global beam B.
-    * `corpus` supplies (idCol, embCol) for scoring — at scale the same
-    * table the graph indexes, fetched by pushed id IN point lookups.
-    * Returns (idCol, score) rows for the k best visited, exact-scored.
-    */
-  def nswSearch(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, queryVec: Array[Float], k: Int,
-      beam: Int = 32, hops: Int = 4, entries: Int = 16,
-      allowed: Option[DataFrame] = None,
-      asOfSeq: Long = Long.MaxValue,
-      exclude: Set[Long] = Set.empty): DataFrame =
-    withWalkConfs(spark) { spark =>
-      val scoreOf = scorer(corpus, embCol, idCol, queryVec)
-      val adj = readNswAdjacencyAsOf(spark, path, asOfSeq)
-      withPinned(Seq(adj)) {
-        val visited =
-          beamWalk(adj, scoreOf, entryPoints(spark, adj, entries), beam, hops)
-        emitTopK(spark, path, visited, idCol, k, allowed, exclude)
-      }
-    }
-
   // ---------------------------------------------------------------------
   // HNSW: a coarse layer ladder above NSW layer 0 (Malkov & Yashunin
   // 2016). Upper layers hold geometrically thinner node subsets with
   // their own small NSW adjacency; a query greedily descends the ladder
   // (log-hops to the right region) and hands the layer-0 beam entry
-  // points already NEAR the answer — cutting the H·B·2M point lookups
-  // a cold flat walk spends crossing the graph.
+  // points already NEAR the answer — cutting the hops a flat walk
+  // spends crossing the graph.
   // ---------------------------------------------------------------------
 
   /** Deterministic HNSW level membership: node id belongs to every layer
@@ -919,18 +643,62 @@ object GraphAnn {
     }
   }
 
-  /** Append to the HNSW ladder without a rebuild — ONE layer-tagged job,
-    * not one append pipeline per rung. Every stage of the NSW append
-    * (LSH candidate equi-join, per-source top-M window, reverse-edge
-    * recompute of affected existing rows, re-top at 2M) runs once over
-    * rows tagged with their layer: layer 0 takes every new node, each
-    * upper layer exactly the new nodes its id hash selects — the SAME
-    * pure level function the build used, so the ladder's membership
-    * invariant survives any append sequence. Joins and windows key on
-    * (layer, …), so rungs never mix; the computed delta rows materialize
-    * once (localCheckpoint) and fan out as per-rung sidecar appends.
-    * The previous per-rung loop ran three near-identical jobs — same
-    * semantics, ~3× the scans and shuffles.
+  /** The append's placement candidates: each arrival's top-M hits from a
+    * walk of the pre-append ladder at the search defaults, as layer-0
+    * (layer, src, dst, score) pairs. Scores are residentWalk's double
+    * dot, bit-equal to the `cosineUnit` the LSH pairs carry, so the
+    * dedup max sees one score per pair. Tombstoned nodes are not offered.
+    */
+  private def placementPairs(spark: SparkSession, newN: DataFrame,
+      path: String, corpus: DataFrame, embCol: String, idCol: String, m: Int,
+      rungPaths: Seq[String]): DataFrame = {
+    import spark.implicits._
+    val pin = residentPin(spark, path, corpus, embCol, idCol, entries = 16,
+      rungPaths, descentBeam = 4, Long.MaxValue)
+    newN.select(col("id").cast("long"), col("emb")).collect().toSeq
+      .filterNot(_.isNullAt(1)).flatMap { r =>
+        val id = r.getLong(0)
+        ladderWalk(pin, r.getSeq[Float](1).toArray, beam = 32, hops = 4,
+            descentBeam = 4, descentHops = 2)._1
+          .filter { case (dst, _) => dst != id && !pin.dead.contains(dst) }
+          .toSeq.sortBy { case (dst, s) => (-s, dst) }.take(m)
+          .map { case (dst, s) => (0, id, dst, s) }
+      }.toDF("layer", "src", "dst", "score")
+  }
+
+  /** Append to the HNSW ladder without a rebuild — the hnswlib insert
+    * generalized to batches, as ONE layer-tagged job (layer 0 takes every
+    * new node, each upper layer exactly the new nodes its id hash selects
+    * — the SAME pure level function the build used, so the ladder's
+    * membership invariant survives any append sequence):
+    *
+    *  - candidates: each arrival walks the PRE-append ladder with the
+    *    serving kernel (residentWalk over the serving pin) and offers its
+    *    top-M hits as layer-0 candidate pairs, next to the bucket-mates
+    *    of its radius-1 LSH probes (against existing + new home buckets).
+    *    The walk is what links an outlier: its probe buckets can all sit
+    *    far from it in cosine while its true neighbors share none of them,
+    *    and then no near node would list it and no beam would reach it.
+    *  - per-source top-M window, then reverse edges into EXISTING nodes:
+    *    their adjacency rows are RECOMPUTED (current edges re-scored + the
+    *    new in-edges, re-topped at 2M) and re-landed as delta rows —
+    *    without this in-edge maintenance appended vectors would be
+    *    unreachable out-only sinks.
+    *  - joins and windows key on (layer, …), so rungs never mix; the delta
+    *    rows materialize once (localCheckpoint) and fan out as per-rung
+    *    `seq=<n>` sidecar appends (prior max + 1 — deterministic), merged
+    *    latest-wins by readNswAdjacency.
+    *
+    * Cost scales with |new|·M affected rows plus one pin of the
+    * pre-append version (reused when that version is already pinned for
+    * serving), never a graph rewrite.
+    *
+    * BATCH-SIZE CONTRACT: the arrivals are collected for the placement
+    * walk and the broadcast hints assume `newNodes` is a micro-batch
+    * (≲ executor broadcast budget once multiplied by M edges and the
+    * embedding width). A corpus-scale backfill exceeds that by design;
+    * route it through `buildHnswGraph` (the batch rebuild), which
+    * shuffles instead of broadcasting.
     */
   def appendToHnswGraph(spark: SparkSession, newNodes: DataFrame,
       embCol: String, idCol: String, lsh: IndexBuilder.RandomHyperplaneLsh,
@@ -970,6 +738,8 @@ object GraphAnn {
       .select(col("a.layer").as("layer"), col("a.id").as("src"),
         col("b.id").as("dst"),
         VectorFunctions.cosineUnit(col("a.emb"), col("b.emb")).as("score"))
+      .unionByName(placementPairs(spark, newN, path, corpus, embCol, idCol,
+        m, (maxLevel to 1 by -1).map(layerPath)))
       .groupBy("layer", "src", "dst").agg(max("score").as("score"))
     val wSrc = Window.partitionBy("layer", "src")
       .orderBy(col("score").desc, col("dst").asc)
@@ -1037,132 +807,24 @@ object GraphAnn {
     }
   }
 
-  /** BATCH graph retrieval: answer ALL queries with shared per-hop jobs —
-    * the lshBatchTopK economics brought to the walk family. Each query
-    * keeps its own driver-side beam state (B + E + H·B·2M entries, the
-    * usual serving bound), but every hop issues ONE adjacency fetch for
-    * the UNION of all frontiers and ONE embedding fetch for the union of
-    * all new candidates, so the per-hop job cost is amortized across the
-    * batch instead of multiplying by it (2 jobs/hop total vs 2·|q|).
-    * Scoring runs driver-side over the fetched (id, vector) rows — the
-    * fetch is bounded by |q|·B·2M rows of embCol width, the same order
-    * as the states themselves. Emission matches nswSearch per query
-    * (tombstones filtered, k best, 6-dp rounding, score-desc/id-asc).
-    */
-  /** Shared embedding state for a batch walk, served from the corpus pin
-    * (see vecPin above): vectors are resident per corpus version and
-    * reused across queries AND across ladder rungs (embeddings are
-    * layer-independent) — the per-hop union fetch job the cold path paid
-    * is gone; `fetch` survives as a no-op seam so the walk loop's shape
-    * (fetch-then-score per hop) reads unchanged.
-    */
-  private final class BatchScorer(corpus: DataFrame, embCol: String,
-      idCol: String) {
-    private val pin = vecPin(corpus, embCol, idCol)
-    def fetch(ids: Seq[Long]): Unit = ()
-    def cosine(id: Long, q: Array[Float]): Option[Double] =
-      pin.get(id).map(pinnedDot(_, q))
-  }
-
-  /** The shared-job batch walk over ONE (caller-pinned) adjacency: every
-    * hop issues one adjacency fetch for the UNION of all frontiers and
-    * one embedding fetch for the union of all new candidates — 2 jobs
-    * per hop total instead of 2·|q| — while each query keeps its own
-    * isolated beam state (B + E + H·B·2M entries).
-    */
-  private def batchBeamWalk(adj: DataFrame,
-      queries: Seq[(Long, Array[Float])], seedsOf: Long => Seq[Long],
-      scorer: BatchScorer, beam: Int,
-      hops: Int): Map[Long, Map[Long, Double]] = {
-    scorer.fetch(queries.flatMap { case (qid, _) => seedsOf(qid) }.distinct)
-    val visited = scala.collection.mutable.Map(queries.map { case (qid, qv) =>
-      qid -> scala.collection.mutable.Map(seedsOf(qid).distinct.flatMap(id =>
-        scorer.cosine(id, qv).map(id -> _)): _*)
-    }: _*)
-    val expanded = scala.collection.mutable.Map(
-      queries.map { case (qid, _) => qid -> Set.empty[Long] }: _*)
-    var hop = 0
-    while (hop < hops) {
-      // per-query frontier, driver-side; ONE union fetch below
-      val frontiers = queries.map { case (qid, _) =>
-        qid -> visited(qid).toSeq
-          .sortBy { case (id, s) => (-s, id) }.take(beam)
-          .map(_._1).filterNot(expanded(qid).contains)
-      }.toMap
-      val frontierUnion = frontiers.values.flatten.toSeq.distinct
-      if (frontierUnion.isEmpty) hop = hops
-      else {
-        val nbrsOf: Map[Long, Seq[Long]] =
-          adj.filter(col("node_id").isin(frontierUnion: _*))
-            .select(col("node_id"), col("neighbors")).collect()
-            .map(r => r.getLong(0) -> r.getSeq[Long](1).toIndexedSeq).toMap
-        scorer.fetch(nbrsOf.values.flatten.toSeq.distinct)
-        queries.foreach { case (qid, qv) =>
-          val vq = visited(qid)
-          frontiers(qid).foreach { f =>
-            nbrsOf.getOrElse(f, Nil).foreach { nb =>
-              if (!vq.contains(nb))
-                scorer.cosine(nb, qv).foreach(vq(nb) = _)
-            }
-          }
-          expanded(qid) ++= frontiers(qid)
-        }
-        hop += 1
-      }
-    }
-    visited.map { case (q, m) => q -> m.toMap }.toMap
-  }
-
-  /** Per-query emission for a batch walk: tombstones filtered, k best,
-    * 6-dp rounding, (qid, id) ordering — nswSearch's contract rowized.
-    */
-  private def emitBatchTopK(spark: SparkSession, path: String,
-      queries: Seq[(Long, Array[Float])],
-      visited: Map[Long, Map[Long, Double]], idCol: String,
-      k: Int, exclude: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val visitedAll = visited.values.flatMap(_.keys).toSeq.distinct
-    // conf-keyed forget exclusion joins the caller's set (see emitTopK)
-    val excl = exclude ++ graft.ops.Forget.defaultExcludeIds(spark)
-    val dead: Set[Long] =
-      if (visitedAll.isEmpty) Set.empty
-      else readNswTombstones(spark, path)
-        .filter(col("node_id").isin(visitedAll: _*))
-        .collect().map(_.getLong(0)).toSet
-    queries.flatMap { case (qid, _) =>
-      visited(qid).toSeq.filterNot { case (id, _) =>
-          dead.contains(id) || excl.contains(id) }
-        .sortBy { case (id, s) => (-s, id) }.take(k)
-        .map { case (id, s) => (qid, id,
-          BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) }
-    }.toDF("qid", idCol, "score")
-      // |q|·k driver-local rows: single-partition narrow sort, no
-      // range-sampling job (same global order as orderBy)
-      .coalesce(1).sortWithinPartitions(col("qid"), col(idCol))
-  }
-
-  def nswBatchSearch(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
-      k: Int, beam: Int = 32, hops: Int = 4,
-      entries: Int = 16,
-      exclude: Set[Long] = Set.empty): DataFrame = withWalkConfs(spark) { spark =>
-    val adj = readNswAdjacency(spark, path)
-    withPinned(Seq(adj)) {
-      val scorer = new BatchScorer(corpus, embCol, idCol)
-      val entryIds = entryPoints(spark, adj, entries)
-      val visited = batchBeamWalk(adj, queries, _ => entryIds, scorer, beam, hops)
-      emitBatchTopK(spark, path, queries, visited, idCol, k, exclude)
-    }
-  }
-
-  /** The in-memory beam walk over a RESIDENT view — beamWalkCore's exact
-    * loop (same frontier selection, same dedup, same left-to-right
-    * double dot, same (-score, id) ordering) with Map lookups replacing
-    * the per-hop Spark jobs. Every served walk, flat or ladder, runs it.
+  /** The one beam loop every search runs — ladder rung or layer 0;
+    * single, batch, traced or placement: H hops over a resident adjacency
+    * from `entryIds`, each hop expanding the beam-best B visited nodes not
+    * yet expanded and scoring their new neighbors against the query by a
+    * left-to-right double dot over the pinned vectors (the exact loop of
+    * the native DotProduct expression, so scores equal `cosineUnit`'s bit
+    * for bit). Ids without a vector score nothing and stay unvisited.
+    * Driver state stays (B + E + H·B·2M) entries.
+    *
+    * With `snapshotK > 0` it also records, after every hop, (hop,
+    * candidates scored so far, top-snapshotK visited ids) — the hop
+    * curve's trace; an exhausted frontier stops expansion but keeps
+    * carrying the last snapshot forward, so the trace has a row per hop.
     */
   private def residentWalk(adj: scala.collection.Map[Long, Array[Long]],
       vec: scala.collection.Map[Long, Array[Float]], qv: Array[Float],
-      entryIds: Seq[Long], beam: Int, hops: Int): Map[Long, Double] = {
+      entryIds: Seq[Long], beam: Int, hops: Int, snapshotK: Int = 0)
+      : (Map[Long, Double], Seq[(Int, Long, Seq[Long])]) = {
     def score(id: Long): Option[Double] = vec.get(id).map { e =>
       var s = 0.0; var i = 0
       val n = math.min(e.length, qv.length)
@@ -1171,24 +833,55 @@ object GraphAnn {
     }
     var visited: Map[Long, Double] =
       entryIds.distinct.flatMap(id => score(id).map(id -> _)).toMap
+    var scored = visited.size.toLong
     var expanded = Set.empty[Long]
+    val trace = Seq.newBuilder[(Int, Long, Seq[Long])]
     var hop = 1
     var exhausted = false
-    while (hop <= hops && !exhausted) {
-      val frontier = visited.toSeq
-        .sortBy { case (id, s) => (-s, id) }.take(beam)
-        .map(_._1).filterNot(expanded.contains)
-      if (frontier.isEmpty) exhausted = true
-      else {
-        val nbrs = frontier.iterator
-          .flatMap(f => adj.getOrElse(f, Array.empty[Long]).iterator)
-          .toSeq.distinct.filterNot(visited.contains)
-        visited ++= nbrs.flatMap(id => score(id).map(id -> _))
-        expanded ++= frontier
+    while (hop <= hops && !(exhausted && snapshotK == 0)) {
+      if (!exhausted) {
+        val frontier = best(visited, beam).filterNot(expanded.contains)
+        if (frontier.isEmpty) exhausted = true
+        else {
+          val nbrs = frontier.iterator
+            .flatMap(f => adj.getOrElse(f, Array.empty[Long]).iterator)
+            .toSeq.distinct.filterNot(visited.contains)
+          visited ++= nbrs.flatMap(id => score(id).map(id -> _))
+          scored += nbrs.size
+          expanded ++= frontier
+        }
       }
+      if (snapshotK > 0) trace += ((hop, scored, best(visited, snapshotK)))
       hop += 1
     }
-    visited
+    (visited, trace.result())
+  }
+
+  /** The n best visited ids, (score desc, id asc) — bit-deterministic ties. */
+  private def best(visited: Map[Long, Double], n: Int): Seq[Long] =
+    visited.toSeq.sortBy { case (id, s) => (-s, id) }.take(n).map(_._1)
+
+  /** One query through a pinned ladder: greedy descent over the upper
+    * rungs top-down (descentBeam/descentHops per rung — the ef=1 descent
+    * of HNSW, widened a little for determinism-safe ties — seeded by the
+    * previous rung's best, else the rung's own hash-min entries), then
+    * the layer-0 beam from the carried seeds UNIONED with the fixed
+    * hash-min entries: the descent buys fast convergence, the fixed
+    * entries keep the flat-NSW recall floor. With no rungs this is the
+    * flat NSW walk.
+    */
+  private def ladderWalk(pin: ResidentPin, qv: Array[Float], beam: Int,
+      hops: Int, descentBeam: Int, descentHops: Int, snapshotK: Int = 0)
+      : (Map[Long, Double], Seq[(Int, Long, Seq[Long])]) = {
+    var carried = Seq.empty[Long]
+    pin.rungs.foreach { case (adjL, entriesL) =>
+      val seeds = if (carried.nonEmpty) carried else entriesL
+      if (seeds.nonEmpty)
+        carried = best(residentWalk(adjL, pin.vec, qv, seeds,
+          descentBeam, descentHops)._1, descentBeam)
+    }
+    residentWalk(pin.adj0, pin.vec, qv, (carried ++ pin.entryIds).distinct,
+      beam, hops, snapshotK)
   }
 
   /** One pinned resident view of a graph index version: the merged
@@ -1196,7 +889,7 @@ object GraphAnn {
     * hash-min entry points, layer 0's adjacency and entry points, the
     * shard's vectors (the corpus' vecPin) and the tombstone set — plain
     * driver maps, built once per version and walked in place by every
-    * serve.
+    * search and by the append's placement walk.
     */
   private[graft] final case class ResidentPin(
     rungs: Seq[(Map[Long, Array[Long]], Seq[Long])],
@@ -1206,13 +899,13 @@ object GraphAnn {
     dead: Set[Long])
 
   // ---- resident-pin cache ---------------------------------------------
-  // The hnswlib model the served rows cite pins the view ONCE per index
-  // version, not per call (the reference's Chroma handle is opened once
+  // The hnswlib serving model pins the view ONCE per index version, not
+  // per call (the reference's Chroma handle is opened once
   // per session, query_rag_database.py:138-149). Keyed by (path, asOfSeq,
   // entry/descent params); validated by a STAMP that folds the FS listing
   // of the index dir + every sidecar (_delta, _tombstones, ladder rungs)
-  // AND the corpus' plan+input signature (ResultCache.cacheKey — the
-  // LocalRelation-digesting key, so planted-copy corpora invalidate too).
+  // AND the corpus' signature (corpusKey — LocalRelation rows digested,
+  // so planted-copy corpora invalidate too).
   // Any append/fold/compact/delete changes a listing, the stamp moves,
   // and the next serve rebuilds; a same-version serve reuses the maps
   // with ZERO pin jobs. Bounded: one live entry per key, replaced in
@@ -1253,20 +946,21 @@ object GraphAnn {
       new org.apache.hadoop.fs.Path(p)).fold(s"$p#absent")(st => s"$p#$st")
 
   /** The pin for (index version, corpus, params): cache hit when the
-    * stamp still matches, else build (bounded collects: one merge scan
-    * per rung, one corpus scan unless vecPin holds it, one tombstone
+    * stamp still matches, else build (bounded collects: one base ∪ delta
+    * scan per rung, one corpus scan unless vecPin holds it, one tombstone
     * scan) and replace.
     */
   private def residentPin(spark: SparkSession, path: String,
       corpus: DataFrame, embCol: String, idCol: String, entries: Int,
       rungPaths: Seq[String], descentBeam: Int,
       asOfSeq: Long): ResidentPin = {
-    val key = s"$path#asOf=$asOfSeq#e=$entries#db=$descentBeam" +
-      s"#rungs=${rungPaths.mkString(",")}"
+    // flat walks share one key whatever their descent params
+    val key = s"$path#asOf=$asOfSeq#e=$entries" + (if (rungPaths.isEmpty) ""
+      else s"#db=$descentBeam#rungs=${rungPaths.mkString(",")}")
     def stampNow() = (Seq(path, path + "_delta", path + "_tombstones") ++
         rungPaths.flatMap(p => Seq(p, p + "_delta")))
       .map(dirStamp(spark, _)).mkString("|") + "\u0000" +
-      graft.ops.ResultCache.cacheKey(corpus.select(col(idCol), col(embCol)))
+      corpusKey(corpus.select(col(idCol), col(embCol)))
     pinCache.get(key) match {
       case Some((s, pin)) if s == stampNow() => pin
       case _ => pinLock(key).synchronized {
@@ -1280,10 +974,16 @@ object GraphAnn {
       pinCache.get(key) match {
       case Some((s, pin)) if s == stamp => pin
       case _ =>
+        // latest-wins resolved here over one plain scan of base ∪ deltas:
+        // the pin holds the merged view anyway, and the scan skips the
+        // merge's shuffle (readNswAdjacencyAsOf's semantics, on the driver)
         def adjOf(p: String): Map[Long, Array[Long]] =
-          withWalkConfs(spark) { s => readNswAdjacencyAsOf(s, p, asOfSeq).collect() }
-            .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
-        // entryPoints' contract on the resident keys: xxhash64 asc, id asc
+          adjacencyRows(spark, p, asOfSeq).collect().groupBy(_.getLong(0))
+            .flatMap { case (id, rs) =>
+              val r = rs.maxBy(_.getLong(2))
+              if (r.isNullAt(1)) None else Some(id -> r.getSeq[Long](1).toArray)
+            }
+        // hash-min entries: Spark's xxhash64(id) (seed 42) asc, id asc
         def hashEntries(m: Map[Long, Array[Long]], e: Int): Seq[Long] =
           m.keys.toSeq.sortBy(id => (org.apache.spark.sql.catalyst
             .expressions.XXH64.hashLong(id, 42L), id)).take(e)
@@ -1303,83 +1003,68 @@ object GraphAnn {
     }
   }
 
-  /** The served tail both resident walks share: walk each query on the
-    * calling thread, drop tombstoned and excluded ids at emission, and
-    * return each query's k best as a driver-local (qid, idCol, score)
-    * DataFrame — 6-dp scores, (qid, id) order — so collecting it runs no
-    * Spark job either.
+  /** The served tail every search shares: pin the index version, walk
+    * each query on the calling thread, and keep each query's k best
+    * visited as (id, 6-dp score) in (score desc, id asc) order.
     *
-    * `exclude` (e.g. the forget ledger's id set), unioned with the
-    * conf-keyed default root's ids, rides the SERVE, never the pin: the
-    * pinned view stays pure index-version state, so a forget committed
-    * after the pin was built flips the very next serve with zero pin
-    * rebuild.
+    * Emission drops tombstoned ids (legal waypoints, never results) and
+    * `exclude` (e.g. the forget ledger's ids) unioned with the conf-keyed
+    * default root's ids — both ride the SERVE, never the walk, and the
+    * exclusion never the pin, so a forget committed after the pin was
+    * built flips the very next serve with zero pin rebuild. `allowed` is
+    * the hnswlib filtered-search semantics: the walk routes through every
+    * node and only emission is filtered (a post-filtered top-k would lose
+    * results; a pruned walk could strand regions); it costs one pushed
+    * `id IN visited` probe, the only Spark job a warm search runs.
     */
-  private def servedTopK(spark: SparkSession, pin: ResidentPin,
-      queries: Seq[(Long, Array[Float])], idCol: String, k: Int,
-      exclude: Set[Long])(walk: Array[Float] => Map[Long, Double]): DataFrame = {
-    import spark.implicits._
-    val excluded = exclude ++ graft.ops.Forget.defaultExcludeIds(spark)
-    queries.flatMap { case (qid, qv) =>
-      walk(qv).toSeq.filterNot { case (id, _) =>
-          pin.dead.contains(id) || excluded.contains(id) }
-        .sortBy { case (id, s) => (-s, id) }.take(k)
-        .map { case (id, s) => (qid, id,
-          BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) }
-    }.sortBy { case (qid, id, _) => (qid, id) }
-      .toDF("qid", idCol, "score")
-  }
-
-  /** RESIDENT-VIEW batch serving — the hnswlib serving model the walk
-    * code cites, made a first-class path: the merged (latest-wins)
-    * adjacency, the shard's vectors, and the tombstone set are pinned
-    * ONCE PER INDEX VERSION as driver maps (the residentPin cache above
-    * — a serve against an unchanged index reuses the pin after one FS
-    * stamp), and every query of the batch walks them on the calling
-    * thread: no Spark job, no per-hop plan, no task scheduling — a warm
-    * walk is about a millisecond of map lookups. Results are exactly
-    * `nswSearch`'s per query: the resident walk replicates
-    * beamWalkCore's loop (AnnIndexSpec's "served walk parity" pins
-    * row-for-row equality against nswBatchSearch).
-    *
-    * 100 TB posture: the resident view is per-SHARD serving state — ids
-    * + M neighbor ids + the vector column, the same memory bound hnswlib
-    * itself requires of a serving node — pinned once per index version
-    * and reused across batches; any append/fold/compact moves the stamp
-    * and the next serve re-pins. Corpora past one node's view run the
-    * sharded scatter-gather rows' pattern (serve each shard's view,
-    * union, re-top-k), or fall back to the distributed walk, which
-    * bounds memory at (B + E + H·B·2M) ids.
-    */
-  def nswServedSearch(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
-      k: Int, beam: Int = 32, hops: Int = 4,
-      entries: Int = 16, asOfSeq: Long = Long.MaxValue,
-      exclude: Set[Long] = Set.empty): DataFrame = {
+  private def servedTopK(spark: SparkSession, path: String,
+      corpus: DataFrame, embCol: String, idCol: String,
+      queries: Seq[(Long, Array[Float])], k: Int, beam: Int, hops: Int,
+      entries: Int, maxLevel: Int, descentBeam: Int, descentHops: Int,
+      asOfSeq: Long, exclude: Set[Long],
+      allowed: Option[DataFrame]): Seq[(Long, Seq[(Long, Double)])] = {
     val pin = residentPin(spark, path, corpus, embCol, idCol, entries,
-      Nil, 0, asOfSeq)
-    servedTopK(spark, pin, queries, idCol, k, exclude) { qv =>
-      residentWalk(pin.adj0, pin.vec, qv, pin.entryIds, beam, hops)
+      (maxLevel to 1 by -1).map(l => path + "_l" + l), descentBeam, asOfSeq)
+    val walked = queries.map { case (qid, qv) =>
+      qid -> ladderWalk(pin, qv, beam, hops, descentBeam, descentHops)._1
+    }
+    val excluded = exclude ++ graft.ops.Forget.defaultExcludeIds(spark)
+    val pass: Long => Boolean = allowed match {
+      case None => _ => true
+      case Some(a) =>
+        val ids = walked.flatMap(_._2.keys).distinct
+        if (ids.isEmpty) _ => false
+        else a.filter(col(idCol).isin(ids: _*)).select(col(idCol))
+          .collect().map(_.getLong(0)).toSet
+    }
+    walked.map { case (qid, visited) =>
+      qid -> visited.toSeq.filter { case (id, _) =>
+          !pin.dead.contains(id) && !excluded.contains(id) && pass(id) }
+        .sortBy { case (id, s) => (-s, id) }.take(k)
+        .map { case (id, s) =>
+          id -> BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble }
     }
   }
 
-  /** Resident-view serving through the HNSW LADDER — nswServedSearch's
-    * model extended to the hierarchy, which is exactly what hnswlib
-    * itself serves resident: every rung's (small) adjacency is pinned
-    * next to layer 0's, and each query descends in memory on the calling
-    * thread (same greedy per-rung walk and carried-seed semantics as
-    * hnswSearch/hnswBatchSearch: descend with descentBeam/descentHops,
-    * layer 0 walks from carried ∪ fixed hash-min entries, preserving the
-    * flat recall floor). No Spark job per batch; parity with the
-    * distributed ladder walk is pinned row-for-row by AnnIndexSpec's
-    * "hnsw served parity". Upper rungs are geometrically thinner
-    * (|V|/fanout^ℓ), so the ladder adds ~15% to the resident view's
-    * memory bound. The whole ladder view is pinned once per index
-    * version via the residentPin cache; `asOfSeq` pins a delta
-    * generation exactly as in `hnswSearch` (each rung's deltas filtered
-    * to `seq <= asOfSeq`, tombstones applied current — the same emission
-    * contract as the distributed versioned walk), so time-travel reads
-    * serve through a cached pin too, keyed per pinned version.
+  /** Batch search through the HNSW ladder (flat NSW: `maxLevel = 0`),
+    * served from the resident pin — the hnswlib serving model: every
+    * rung's merged adjacency (optionally pinned to delta generation
+    * `asOfSeq`, every rung filtered to `seq <= asOfSeq`; tombstones apply
+    * current), the hash-min entries, the corpus vectors and the tombstone
+    * set are pinned ONCE PER INDEX VERSION as driver maps, and every
+    * query of the batch walks them on the calling thread: no Spark job,
+    * no per-hop plan, no task scheduling — a warm walk is about a
+    * millisecond of map lookups. Returns a driver-local (qid, idCol,
+    * score) DataFrame in (qid, id) order, so collecting it runs no Spark
+    * job either. Upper rungs are geometrically thinner (|V|/fanout^ℓ),
+    * so the ladder adds ~15% to the pin's memory bound.
+    *
+    * 100 TB posture: the pin is per-SHARD serving state — ids + 2M
+    * neighbor ids + the vector column, the memory bound hnswlib itself
+    * requires of a serving node — reused across batches until an
+    * append/fold/compact/delete moves its stamp. Corpora past one node's
+    * memory run the sharded rows' pattern (serve each shard's pin, union,
+    * re-top-k).
     */
   def hnswServedSearch(spark: SparkSession, path: String, corpus: DataFrame,
       embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
@@ -1387,72 +1072,27 @@ object GraphAnn {
       maxLevel: Int = 2, descentBeam: Int = 4,
       descentHops: Int = 2, asOfSeq: Long = Long.MaxValue,
       exclude: Set[Long] = Set.empty): DataFrame = {
-    val pin = residentPin(spark, path, corpus, embCol, idCol, entries,
-      (maxLevel to 1 by -1).map(l => path + "_l" + l), descentBeam, asOfSeq)
-    servedTopK(spark, pin, queries, idCol, k, exclude) { qv =>
-      var carried = Seq.empty[Long]
-      pin.rungs.foreach { case (adjL, entriesL) =>
-        val seeds = if (carried.nonEmpty) carried else entriesL
-        if (seeds.nonEmpty)
-          carried = residentWalk(adjL, pin.vec, qv, seeds,
-              descentBeam, descentHops)
-            .toSeq.sortBy { case (id, s) => (-s, id) }
-            .take(descentBeam).map(_._1)
-      }
-      residentWalk(pin.adj0, pin.vec, qv,
-        (carried ++ pin.entryIds).distinct, beam, hops)
-    }
+    import spark.implicits._
+    servedTopK(spark, path, corpus, embCol, idCol, queries, k, beam, hops,
+        entries, maxLevel, descentBeam, descentHops, asOfSeq, exclude, None)
+      .flatMap { case (qid, rows) => rows.map { case (id, s) => (qid, id, s) } }
+      .sortBy { case (qid, id, _) => (qid, id) }
+      .toDF("qid", idCol, "score")
   }
 
-  /** Batch retrieval through the HNSW ladder: the descent ALSO batches —
-    * each rung runs one shared-job batch walk seeding every query's next
-    * rung, and the fetched vectors are reused across rungs (embeddings
-    * are layer-independent). Layer 0 walks from each query's carried
-    * seeds unioned with the fixed hash-min entries, preserving the
-    * flat-batch recall floor per query.
-    */
+  /** hnswServedSearch at the current index version. */
   def hnswBatchSearch(spark: SparkSession, path: String, corpus: DataFrame,
       embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
       k: Int, beam: Int = 32, hops: Int = 4, entries: Int = 16,
       maxLevel: Int = 2, descentBeam: Int = 4,
       descentHops: Int = 2,
-      exclude: Set[Long] = Set.empty): DataFrame = withWalkConfs(spark) { spark =>
-    val scorer = new BatchScorer(corpus, embCol, idCol)
-    var carried = Map.empty[Long, Seq[Long]]
-    var l = maxLevel
-    while (l >= 1) {
-      val layerPath = path + "_l" + l
-      if (pathExists(spark, layerPath)) {
-        val adjL = readNswAdjacency(spark, layerPath)
-        withPinned(Seq(adjL)) {
-          val entriesL = entryPoints(spark, adjL, descentBeam)
-          val walked = batchBeamWalk(adjL, queries,
-            q => carried.getOrElse(q, entriesL), scorer,
-            descentBeam, descentHops)
-          carried = walked.map { case (q, vis) =>
-            q -> vis.toSeq.sortBy { case (id, s) => (-s, id) }
-              .take(descentBeam).map(_._1)
-          }
-        }
-      }
-      l -= 1
-    }
-    val adj0 = readNswAdjacency(spark, path)
-    withPinned(Seq(adj0)) {
-      val fixed = entryPoints(spark, adj0, entries)
-      val visited = batchBeamWalk(adj0, queries,
-        q => (carried.getOrElse(q, Nil) ++ fixed).distinct, scorer, beam, hops)
-      emitBatchTopK(spark, path, queries, visited, idCol, k, exclude)
-    }
-  }
+      exclude: Set[Long] = Set.empty): DataFrame =
+    hnswServedSearch(spark, path, corpus, embCol, idCol, queries, k, beam,
+      hops, entries, maxLevel, descentBeam, descentHops, exclude = exclude)
 
-  /** Hierarchical search: greedy-descend the ladder top-down (small beam
-    * per upper layer — the ef=1 descent of HNSW, widened a little for
-    * determinism-safe ties), then run the layer-0 beam from the descended
-    * entries UNIONED with the fixed hash-min entries — the descent buys
-    * fast convergence, the fixed entries guarantee the flat-NSW recall
-    * floor. Tombstone semantics match nswSearch (waypoints allowed,
-    * emission filtered, one sidecar for the whole ladder).
+  /** Single-query search through the ladder (see hnswServedSearch):
+    * (idCol, score) rows for the k best visited, (score desc, id asc),
+    * with the optional emission predicate `allowed`.
     */
   def hnswSearch(spark: SparkSession, path: String, corpus: DataFrame,
       embCol: String, idCol: String, queryVec: Array[Float], k: Int,
@@ -1461,40 +1101,57 @@ object GraphAnn {
       descentHops: Int = 2,
       allowed: Option[DataFrame] = None,
       asOfSeq: Long = Long.MaxValue,
-      exclude: Set[Long] = Set.empty): DataFrame = withWalkConfs(spark) { spark =>
-    val scoreOf = scorer(corpus, embCol, idCol, queryVec)
-    var carried = Seq.empty[Long] // best nodes so far, passed down the ladder
-    var l = maxLevel
-    while (l >= 1) {
-      val layerPath = path + "_l" + l
-      if (pathExists(spark, layerPath)) {
-        // version pinning applies PER RUNG: every rung's deltas carry
-        // their own seq ladder, and an append stamps all affected rungs
-        // in the same generation — so one asOfSeq pins a consistent
-        // ladder-wide snapshot (the graph time-travel model over rungs)
-        val adjL = readNswAdjacencyAsOf(spark, layerPath, asOfSeq)
-        withPinned(Seq(adjL)) {
-          val seeds =
-            if (carried.nonEmpty) carried
-            else entryPoints(spark, adjL, descentBeam)
-          if (seeds.nonEmpty) {
-            // the descent's only job is seeding layer 0 NEAR the answer —
-            // the HNSW ef=1 descent spends ~2 greedy steps per rung, and
-            // the layer-0 walk's own fixed entries + full hop budget keep
-            // the flat-NSW recall floor whatever the descent returns
-            val walked = beamWalk(adjL, scoreOf, seeds, descentBeam, descentHops)
-            carried = walked.toSeq.sortBy { case (id, s) => (-s, id) }
-              .take(descentBeam).map(_._1)
-          }
-        }
-      }
-      l -= 1
-    }
-    val adj0 = readNswAdjacencyAsOf(spark, path, asOfSeq)
-    withPinned(Seq(adj0)) {
-      val seeds0 = (carried ++ entryPoints(spark, adj0, entries)).distinct
-      val visited = beamWalk(adj0, scoreOf, seeds0, beam, hops)
-      emitTopK(spark, path, visited, idCol, k, allowed, exclude)
-    }
+      exclude: Set[Long] = Set.empty): DataFrame = {
+    import spark.implicits._
+    servedTopK(spark, path, corpus, embCol, idCol, Seq(0L -> queryVec), k,
+        beam, hops, entries, maxLevel, descentBeam, descentHops, asOfSeq,
+        exclude, allowed)
+      // re-sorted after rounding: equal 6-dp scores order by id
+      .head._2.sortBy { case (id, s) => (-s, id) }
+      .toDF(idCol, "score")
+  }
+
+  // Flat NSW search is the ladder walk with no upper rungs.
+
+  def nswSearch(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, queryVec: Array[Float], k: Int,
+      beam: Int = 32, hops: Int = 4, entries: Int = 16,
+      allowed: Option[DataFrame] = None,
+      asOfSeq: Long = Long.MaxValue,
+      exclude: Set[Long] = Set.empty): DataFrame =
+    hnswSearch(spark, path, corpus, embCol, idCol, queryVec, k, beam, hops,
+      entries, maxLevel = 0, allowed = allowed, asOfSeq = asOfSeq,
+      exclude = exclude)
+
+  def nswBatchSearch(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
+      k: Int, beam: Int = 32, hops: Int = 4,
+      entries: Int = 16,
+      exclude: Set[Long] = Set.empty): DataFrame =
+    hnswBatchSearch(spark, path, corpus, embCol, idCol, queries, k, beam,
+      hops, entries, maxLevel = 0, exclude = exclude)
+
+  def nswServedSearch(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, queries: Seq[(Long, Array[Float])],
+      k: Int, beam: Int = 32, hops: Int = 4,
+      entries: Int = 16, asOfSeq: Long = Long.MaxValue,
+      exclude: Set[Long] = Set.empty): DataFrame =
+    hnswServedSearch(spark, path, corpus, embCol, idCol, queries, k, beam,
+      hops, entries, maxLevel = 0, asOfSeq = asOfSeq, exclude = exclude)
+
+  /** One TRACED flat walk: the served walk with a snapshot after every
+    * hop — a recall-vs-hops tuning curve costs ONE walk per sample query
+    * instead of one walk per (query, hops) setting (hop h's state is a
+    * prefix of hop h+1's by construction, which also makes the curve
+    * monotone). Returns (hop, scored_so_far, top-k visited ids) for
+    * hop = 1..maxHops; snapshots do not filter tombstones.
+    */
+  def nswSearchTrace(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, queryVec: Array[Float], k: Int,
+      beam: Int = 32, maxHops: Int = 4,
+      entries: Int = 16): Seq[(Int, Long, Seq[Long])] = {
+    val pin = residentPin(spark, path, corpus, embCol, idCol, entries,
+      Nil, 0, Long.MaxValue)
+    ladderWalk(pin, queryVec, beam, maxHops, 0, 0, snapshotK = k)._2
   }
 }

@@ -844,6 +844,48 @@ class AnnIndexSpec extends SparkSpec {
     assert(!v1.exists(_ >= 100005L), "v1 leaked appended rows")
   }
 
+  // Golden rows of the Spark-job walks the resident kernel replaced
+  // (the former per-hop-job nswBatchSearch / hnswBatchSearch / nswSearch /
+  // hnswSearch), captured on the parity specs' fixtures below; for the
+  // time-travel fixtures the graph is built by the current append. Every
+  // walk entry point must keep reproducing them row for row.
+  private val goldenNswBatch = Seq(
+    (0L, 0L, 1.0), (0L, 12L, 0.311027), (0L, 17L, 0.334456), (0L, 73L, 0.297238),
+    (0L, 212L, 0.281399), (0L, 225L, 0.315127), (0L, 260L, 0.298669), (0L, 347L, 0.274508),
+    (0L, 402L, 0.2745), (0L, 483L, 0.300451), (1L, 1L, 1.0), (1L, 75L, 0.289978),
+    (1L, 129L, 0.35148), (1L, 209L, 0.381544), (1L, 247L, 0.261462), (1L, 257L, 0.391762),
+    (1L, 376L, 0.304811), (1L, 440L, 0.299303), (1L, 455L, 0.282431), (1L, 479L, 0.268921),
+    (2L, 2L, 1.0), (2L, 62L, 0.289997), (2L, 91L, 0.278916), (2L, 132L, 0.246669),
+    (2L, 183L, 0.250606), (2L, 185L, 0.282941), (2L, 234L, 0.277688), (2L, 246L, 0.289771),
+    (2L, 309L, 0.252344), (2L, 441L, 0.253966))
+  private val goldenNswServed = Seq(
+    (0L, 0L, 1.0), (0L, 12L, 0.311027), (0L, 17L, 0.334456), (0L, 73L, 0.297238),
+    (0L, 212L, 0.281399), (0L, 225L, 0.315127), (0L, 260L, 0.298669), (0L, 347L, 0.274508),
+    (0L, 402L, 0.2745), (0L, 483L, 0.300451), (1L, 75L, 0.289978), (1L, 129L, 0.35148),
+    (1L, 209L, 0.381544), (1L, 247L, 0.261462), (1L, 257L, 0.391762), (1L, 260L, 0.255336),
+    (1L, 376L, 0.304811), (1L, 440L, 0.299303), (1L, 455L, 0.282431), (1L, 479L, 0.268921),
+    (2L, 2L, 1.0), (2L, 62L, 0.289997), (2L, 91L, 0.278916), (2L, 132L, 0.246669),
+    (2L, 183L, 0.250606), (2L, 185L, 0.282941), (2L, 234L, 0.277688), (2L, 246L, 0.289771),
+    (2L, 309L, 0.252344), (2L, 441L, 0.253966))
+  private val goldenHnswBatch = Seq(
+    (0L, 0L, 1.0), (0L, 12L, 0.311027), (0L, 17L, 0.334456), (0L, 73L, 0.297238),
+    (0L, 212L, 0.281399), (0L, 225L, 0.315127), (0L, 260L, 0.298669), (0L, 347L, 0.274508),
+    (0L, 402L, 0.2745), (0L, 483L, 0.300451), (1L, 1L, 1.0), (1L, 75L, 0.289978),
+    (1L, 129L, 0.35148), (1L, 209L, 0.381544), (1L, 247L, 0.261462), (1L, 257L, 0.391762),
+    (1L, 376L, 0.304811), (1L, 440L, 0.299303), (1L, 455L, 0.282431), (1L, 479L, 0.268921),
+    (2L, 2L, 1.0), (2L, 62L, 0.289997), (2L, 91L, 0.278916), (2L, 132L, 0.246669),
+    (2L, 183L, 0.250606), (2L, 234L, 0.277688), (2L, 246L, 0.289771), (2L, 309L, 0.252344),
+    (2L, 441L, 0.253966), (2L, 488L, 0.238607))
+  // (id, score) of the vec-0 query, keyed by asOfSeq — the same rows on
+  // the flat and the ladder fixture (the descent does not change them)
+  private val goldenTimeTravel = Map(
+    0L -> Seq(
+      (0L, 1.0), (17L, 0.334456), (12L, 0.311027), (73L, 0.297238), (82L, 0.2494),
+      (59L, 0.248708), (71L, 0.245227), (104L, 0.217828), (3L, 0.205923), (155L, 0.204476)),
+    Long.MaxValue -> Seq(
+      (0L, 1.0), (17L, 0.334456), (225L, 0.315127), (12L, 0.311027), (73L, 0.297238),
+      (212L, 0.281399), (232L, 0.267338), (82L, 0.2494), (59L, 0.248708), (71L, 0.245227)))
+
   test("batch walk parity: shared-job batch equals per-query walks on the raw corpus") {
     import graft.vector.GraphAnn
     val path = java.nio.file.Files
@@ -852,10 +894,13 @@ class AnnIndexSpec extends SparkSpec {
     GraphAnn.buildNswGraph(e, "embedding", "vec_id", AnnIndex.defaultLsh, 8, path)
     val queries = e.filter(col("vec_id") < 3L).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-    val batch = GraphAnn.nswBatchSearch(spark, path, e,
+    val batchRows = GraphAnn.nswBatchSearch(spark, path, e,
         "embedding", "vec_id", queries, k = 10)
-      .collect().groupBy(_.getLong(0))
-      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(batchRows === goldenNswBatch,
+      s"batch walk drifted from the golden rows:\n$batchRows")
+    val batch = batchRows.groupBy(_._1)
+      .map { case (q, rs) => q -> rs.map(_._2).toSet }
     queries.foreach { case (qid, qv) =>
       val single = GraphAnn.nswSearch(spark, path, e,
           "embedding", "vec_id", qv, k = 10)
@@ -935,10 +980,10 @@ class AnnIndexSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val served = rows(GraphAnn.nswServedSearch(spark, path, e,
       "embedding", "vec_id", queries, k = 10))
-    val walked = rows(GraphAnn.nswBatchSearch(spark, path, e,
-      "embedding", "vec_id", queries, k = 10))
-    assert(served === walked,
-      s"served/distributed divergence:\n$served\nvs\n$walked")
+    assert(served === goldenNswServed,
+      s"served walk drifted from the golden rows:\n$served")
+    assert(rows(GraphAnn.nswBatchSearch(spark, path, e,
+      "embedding", "vec_id", queries, k = 10)) === served)
     assert(!served.exists(_._2 == 1L), "served a tombstoned id")
   }
 
@@ -954,10 +999,10 @@ class AnnIndexSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val served = rows(GraphAnn.hnswServedSearch(spark, path, e,
       "embedding", "vec_id", queries, k = 10))
-    val walked = rows(GraphAnn.hnswBatchSearch(spark, path, e,
-      "embedding", "vec_id", queries, k = 10))
-    assert(served === walked,
-      s"hnsw served/distributed divergence:\n$served\nvs\n$walked")
+    assert(served === goldenHnswBatch,
+      s"hnsw served walk drifted from the golden rows:\n$served")
+    assert(rows(GraphAnn.hnswBatchSearch(spark, path, e,
+      "embedding", "vec_id", queries, k = 10)) === served)
   }
 
   test("resident pin amortization: same-version serves build the pin once; a mutation re-pins") {
@@ -1006,8 +1051,10 @@ class AnnIndexSpec extends SparkSpec {
           "embedding", "vec_id", qv, k = 10, asOfSeq = asOf)
         .collect().map(r => (r.getLong(0), r.getDouble(1)))
         .sortBy { case (id, s) => (-s, id) }.toSeq
+      assert(walked === goldenTimeTravel(asOf),
+        s"asOf=$asOf walk drifted from the golden rows:\n$walked")
       assert(served === walked,
-        s"asOf=$asOf served/distributed divergence:\n$served\nvs\n$walked")
+        s"asOf=$asOf served/single divergence:\n$served\nvs\n$walked")
       if (asOf == 0L)
         assert(!served.exists(_._1 >= 200L), "as-of-0 serve leaked appended ids")
     }
@@ -1032,8 +1079,10 @@ class AnnIndexSpec extends SparkSpec {
           "embedding", "vec_id", qv, k = 10, asOfSeq = asOf)
         .collect().map(r => (r.getLong(0), r.getDouble(1)))
         .sortBy { case (id, s) => (-s, id) }.toSeq
+      assert(walked === goldenTimeTravel(asOf),
+        s"asOf=$asOf walk drifted from the golden rows:\n$walked")
       assert(served === walked,
-        s"asOf=$asOf served/distributed divergence:\n$served\nvs\n$walked")
+        s"asOf=$asOf served/single divergence:\n$served\nvs\n$walked")
       if (asOf == 0L)
         assert(!served.exists(_._1 >= 200L), "as-of-0 serve leaked appended ids")
     }
@@ -1715,6 +1764,73 @@ class AnnIndexSpec extends SparkSpec {
       s"appended node $target not reachable, top-5 = ${got.toSeq}")
   }
 
+  test("append places an outlier by its true neighbours: it serves itself top-1 on NSW and HNSW") {
+    import graft.vector.GraphAnn
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import spark.implicits._
+    // Geometry against the LSH planes: the planes' span decides every
+    // bucket, its orthogonal complement decides nothing. The outlier x and
+    // its true neighbours Y share a complement direction u but sit on
+    // opposite sides of every plane (±εt), so Y is never in x's radius-1
+    // probe buckets; x's bucket holds only decoys D that are far from it.
+    val lsh = AnnIndex.defaultLsh
+    val dim = lsh.dim
+    val rnd = new java.util.Random(7L)
+    def dot(a: Array[Double], b: Array[Double]) = a.indices.map(i => a(i) * b(i)).sum
+    def minus(a: Array[Double], b: Array[Double], s: Double) =
+      a.indices.map(i => a(i) - s * b(i)).toArray
+    val basis = lsh.planes.foldLeft(Vector.empty[Array[Double]]) { (qs, p) =>
+      val r = qs.foldLeft(p)((v, q) => minus(v, q, dot(v, q)))
+      qs :+ r.map(_ / math.sqrt(dot(r, r)))
+    }
+    def gauss() = Array.fill(dim)(rnd.nextGaussian())
+    def unit(v: Array[Double]) = v.map(_ / math.sqrt(dot(v, v)))
+    // a random unit direction in the planes' complement, orthogonal to `also`
+    def offPlane(also: Seq[Array[Double]]): Array[Double] =
+      unit((basis ++ also).foldLeft(gauss())((v, q) => minus(v, q, dot(v, q))))
+    val u = offPlane(Nil)
+    val t = unit(basis.map(q => q.map(_ * rnd.nextGaussian()))
+      .reduce((a, b) => a.indices.map(i => a(i) + b(i)).toArray))
+    def vec(parts: (Double, Array[Double])*): Seq[Float] =
+      unit(parts.map { case (s, v) => v.map(_ * s) }
+        .reduce((a, b) => a.indices.map(i => a(i) + b(i)).toArray)).map(_.toFloat).toSeq
+    // ids in hash order: Y takes the hash-min ids, so every entry point
+    // (and every ladder seed) starts in x's true neighbourhood; x takes the
+    // largest hash, so it is never an entry itself
+    val ids = (1L to 400L).sortBy(XXH64.hashLong(_, 42L))
+    val (yIds, dIds, xId) = (ids.take(150), ids.slice(150, 210), ids.last)
+    // each Y also leans ~1 along its own off-plane direction: Y members sit
+    // farther from each other (cos ≈ 0.5) than from x (cos ≈ 0.7)
+    val ys = yIds.map(id => id -> vec(1.0 -> u, -0.1 -> t,
+      (0.8 + 0.4 * rnd.nextDouble()) -> offPlane(Seq(u))))
+    val ds = dIds.map(id => id -> vec(1.0 -> t, 1.0 -> offPlane(Seq(u))))
+    val x = vec(1.0 -> u, 0.1 -> t)
+    val corpus = (ys ++ ds).toDF("vec_id", "embedding")
+    val arrival = Seq(xId -> x).toDF("vec_id", "embedding")
+    val cos = (ys ++ ds).map { case (id, v) =>
+      id -> v.zip(x).map { case (a, b) => a.toDouble * b }.sum }.sortBy(-_._2)
+    val sig = lsh.signature(x)
+    assert(cos.take(8).forall { case (id, _) => yIds.contains(id) })
+    assert(ys.forall { case (_, v) => Integer.bitCount(lsh.signature(v) ^ sig) > 1 },
+      "fixture: x's true neighbours must lie outside its radius-1 probes")
+    assert(ds.forall { case (_, v) => lsh.signature(v) == sig })
+    val root = Files.createTempDirectory("append_outlier").toString
+    val served = corpus.unionByName(arrival)
+    GraphAnn.buildNswGraph(corpus, "embedding", "vec_id", lsh, 8, root + "/nsw")
+    GraphAnn.appendToNswGraph(spark, arrival, "embedding", "vec_id", lsh, 8,
+      root + "/nsw", corpus)
+    GraphAnn.buildHnswGraph(corpus, "embedding", "vec_id", lsh, 8, root + "/hnsw")
+    GraphAnn.appendToHnswGraph(spark, arrival, "embedding", "vec_id", lsh, 8,
+      root + "/hnsw", corpus)
+    val xv = x.toArray
+    val nsw = GraphAnn.nswSearch(spark, root + "/nsw", served, "embedding",
+      "vec_id", xv, k = 3).collect().map(_.getLong(0)).toSeq
+    val hnsw = GraphAnn.hnswSearch(spark, root + "/hnsw", served, "embedding",
+      "vec_id", xv, k = 3).collect().map(_.getLong(0)).toSeq
+    assert(nsw.headOption === Some(xId), s"nsw walk missed the outlier: $nsw")
+    assert(hnsw.headOption === Some(xId), s"hnsw walk missed the outlier: $hnsw")
+  }
+
   test("nsw compaction self-heals a torn base/bak swap and vacuum reclaims the backup") {
     import graft.vector.GraphAnn
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
@@ -1760,8 +1876,20 @@ class AnnIndexSpec extends SparkSpec {
       "embedding", "vec_id", queries, k = 5).collect().toSeq
     def hnsw() = GraphAnn.hnswServedSearch(spark, path, e,
       "embedding", "vec_id", queries, k = 5).collect().toSeq
+    // every other walk entry point runs the same kernel over the same pins
+    val qv = queries.head._2
+    val allowed = Some(e.filter(col("vec_id") % 2 === 0).select("vec_id"))
+    def others() = Seq(
+      GraphAnn.nswSearch(spark, path, e, "embedding", "vec_id", qv, k = 5),
+      GraphAnn.hnswSearch(spark, path, e, "embedding", "vec_id", qv, k = 5),
+      GraphAnn.nswBatchSearch(spark, path, e, "embedding", "vec_id", queries, k = 5),
+      GraphAnn.hnswBatchSearch(spark, path, e, "embedding", "vec_id", queries, k = 5))
+      .map(_.collect().toSeq) :+
+      GraphAnn.nswSearchTrace(spark, path, e, "embedding", "vec_id", qv, 5)
+    def filtered() = GraphAnn.hnswSearch(spark, path, e, "embedding", "vec_id",
+      qv, k = 5, allowed = allowed).collect().toSeq
     // first serves build both pins
-    val (nsw0, hnsw0) = (nsw(), hnsw())
+    val (nsw0, hnsw0, others0, filtered0) = (nsw(), hnsw(), others(), filtered())
     val b0 = GraphAnn.pinBuilds
     val sc = spark.sparkContext
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
@@ -1774,8 +1902,15 @@ class AnnIndexSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       sc.setJobDescription("warm-serve")
-      val (nsw1, hnsw1) = try (nsw(), hnsw()) finally sc.setJobDescription(null)
-      assert(nsw1 === nsw0 && hnsw1 === hnsw0)
+      val (nsw1, hnsw1, others1) =
+        try (nsw(), hnsw(), others()) finally sc.setJobDescription(null)
+      assert(nsw1 === nsw0 && hnsw1 === hnsw0 && others1 === others0)
+      // a metadata predicate is the one job a warm walk may run: its
+      // pushed `id IN visited` probe
+      sc.setJobDescription("warm-allowed")
+      val filtered1 = try filtered() finally sc.setJobDescription(null)
+      assert(filtered1 === filtered0)
+      assert(filtered1.nonEmpty && filtered1.forall(_.getLong(0) % 2 == 0))
       // the listener bus is asynchronous and FIFO: once a later marker
       // job is seen, every job the warm serves started has been seen too
       sc.setJobDescription("served-marker")
@@ -1786,6 +1921,8 @@ class AnnIndexSpec extends SparkSpec {
       assert(seen.contains("served-marker"), "listener never saw the marker job")
       assert(seen.asScala.count(_ == "warm-serve") === 0,
         "a warm served walk ran Spark jobs")
+      assert(seen.asScala.count(_ == "warm-allowed") === 1,
+        "a warm filtered walk must run exactly its one predicate probe")
     } finally sc.removeSparkListener(listener)
     assert(GraphAnn.pinBuilds === b0, "a warm serve rebuilt its pin")
   }
