@@ -3426,7 +3426,7 @@ object AnnIndex extends QueryModule {
   /** The HNSW variant of the graph upsert: delete → LADDER fold (the
     * re-inserted id must leave every stored rung before it can return —
     * the shared sidecar would otherwise hide it on all of them) → re-add
-    * through the layer-tagged append, which re-selects the id's rungs by
+    * through the ladder append, which re-selects the id's rungs by
     * the same pure hash the build used, so membership survives the
     * update. Same oracle (annUpsertTopkSql) served through the full
     * hierarchical descent.

@@ -17,7 +17,10 @@ import graft.{QueryModule, Tables}
   * relation's (path, file count, total bytes, max mtime) — so editing,
   * appending to, or swapping an input produces a NEW key and the stale
   * entry is simply never read again (retention vacuums it; serving
-  * correctness never depends on invalidation races).
+  * correctness never depends on invalidation races). The stamp names a
+  * directory as it is NOW, while a frame reads the file list it captured
+  * when it was created, so the signature also digests that list: a frame
+  * listed before a write and one listed after it never share a key.
   *
   * Contract: a cache hit returns the same ROWS, not the same row order —
   * a parquet round-trip, like any exchange, fixes no order. Callers
@@ -38,7 +41,7 @@ object ResultCache extends QueryModule {
               df.sparkSession.sparkContext.hadoopConfiguration, root)
               .getOrElse(graft.FileListing.Stamp(0L, 0L, 0L))
             s"$root#$st"
-          }.mkString(",")
+          }.mkString(",") + "#files=" + md5(fs.location.inputFiles.sorted.mkString("\n"))
         case other => other.toString
       }
       // LocalRelations carry their rows OUTSIDE the canonicalized plan
@@ -47,17 +50,15 @@ object ResultCache extends QueryModule {
       // change to the copies would silently serve a stale fixture.
       // Bounded by construction: LocalRelations here are copy-row-scale.
       case loc: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val h = java.security.MessageDigest.getInstance("MD5")
-          .digest(loc.data.map(_.toString).mkString("\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .map("%02x".format(_)).mkString
-        s"local#${loc.data.length}#$h"
+        s"local#${loc.data.length}#${md5(loc.data.map(_.toString).mkString("\n"))}"
     }.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest((plan.canonicalized.toString + "\u0000" + sig)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
+    md5(plan.canonicalized.toString + "\u0000" + sig)
   }
+
+  private def md5(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
 
   /** Serve `df` through the cache at `cacheRoot`: hit → bounded parquet
     * read, miss → execute once, materialize, read back. The `_SUCCESS`

@@ -1,8 +1,13 @@
 package graft.vector
 
+import scala.collection.immutable.ArraySeq
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, ShortType}
 
 /** Graph-based ANN — the NSW shape (Malkov et al. 2014; HNSW's layer 0,
   * and the index family behind DiskANN/Vamana): each vector keeps edges
@@ -22,8 +27,7 @@ import org.apache.spark.sql.functions._
   *    heuristic), keeping out-degree ≤ 2M while guaranteeing the graph
   *    has no in-only sinks.
   *  - Adjacency persists as (node_id, neighbors array<long>) parquet,
-  *    hash-clustered on node_id so id-bounded fetches (append, fold)
-  *    prune.
+  *    hash-clustered on node_id.
   *
   * Scale shape, query (the serving path, the hnswlib model): every
   * search — single, batch, traced, time-travel or filtered; flat NSW is
@@ -38,11 +42,19 @@ import org.apache.spark.sql.functions._
   *  - The pin is built once per index version and validated by an FS +
   *    corpus stamp, so a warm search runs no Spark job; a metadata
   *    predicate (`allowed`) adds one pushed `id IN visited` probe.
-  *  - Memory: the driver holds the corpus' (id, embedding) map (vecPin:
-  *    |corpus| × dim floats per live corpus version, at most 16) plus,
-  *    per pinned index version, every rung's merged adjacency (ids and
-  *    ≤ 2M neighbor ids each) and the tombstone set — the hnswlib
-  *    serving-node bound. Corpora past one node's memory serve per shard.
+  *
+  * Mutations (the hnswlib insert and delete): append and tombstone fold
+  * compute their delta rows on the driver from the same resident pin of
+  * the pre-mutation version, and Spark only lands them as one
+  * seq-stamped delta leaf per touched rung. Spark jobs remain for the
+  * batch build, those delta writes, compaction and vacuum.
+  *
+  * Memory: the driver holds the corpus' (id, embedding) map (vecPin:
+  * |corpus| × dim floats per live corpus version, at most 16) plus, per
+  * pinned index version, every rung's merged adjacency (ids and ≤ 2M
+  * neighbor ids each) and the tombstone set — the hnswlib serving-node
+  * bound, which searches and mutations share. Corpora past one node's
+  * memory serve per shard.
   *
   * Determinism: seeded hyperplanes, windowed ties by id, fixed E/B/H —
   * identical data in, identical graph and identical search result out.
@@ -121,19 +133,11 @@ object GraphAnn {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Merged adjacency view: the base build (seq 0) overlaid by append
-    * deltas at `<path>_delta`, latest-wins per node — the MOR discipline
-    * applied to the graph, so appends never rewrite the base files. A
-    * delta row with NULL neighbors is a removal marker (written by
-    * `foldNswTombstones`): latest-wins resolves it like any other
-    * version, then the merged view drops the node entirely.
-    */
   // Explicit read schemas: adjacency/tombstone layouts are fixed by the
-  // writers above, and letting the reader infer them costs a footer-read
-  // Spark job per open — a serving walk opens the graph on every call,
-  // so inference was a per-walk job for information the code already has.
-  // (seq is the delta leaves' directory-partition column; declaring it
-  // long here also replaces the int-discovery + cast dance.)
+  // writers in this object, and letting the reader infer them costs a
+  // footer-read Spark job per open. (seq is the delta leaves'
+  // directory-partition column; declaring it long here also replaces the
+  // int-discovery + cast dance.)
   private val adjSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("node_id",
       org.apache.spark.sql.types.LongType),
@@ -147,6 +151,16 @@ object GraphAnn {
     org.apache.spark.sql.types.StructField("node_id",
       org.apache.spark.sql.types.LongType)))
 
+  /** Merged adjacency view: the base build (seq 0) overlaid by the delta
+    * generations at `<path>_delta`, latest-wins per node — the MOR
+    * discipline applied to the graph, so appends and folds never rewrite
+    * the base files. A delta row with NULL neighbors is a removal marker
+    * (written by the tombstone fold): latest-wins resolves it like any
+    * other version, then the merged view drops the node entirely. This
+    * DataFrame is what compaction rewrites as the new base; searches and
+    * mutations resolve the same latest-wins rule on the driver when they
+    * build their resident pin.
+    */
   def readNswAdjacency(spark: SparkSession, path: String): DataFrame =
     readNswAdjacencyAsOf(spark, path, Long.MaxValue)
 
@@ -158,17 +172,10 @@ object GraphAnn {
     */
   def readNswAdjacencyAsOf(spark: SparkSession, path: String,
       maxSeq: Long): DataFrame =
-    latestWins(adjacencyRows(spark, path, maxSeq))
-
-  /** The merged view restricted to `ids` — the id semi-join applied BELOW
-    * the latest-wins aggregate (joining on the grouping key commutes with
-    * the groupBy), so fetching a bounded node set never shuffles the
-    * whole graph through the merge exchange.
-    */
-  private def readNswAdjacencyFor(spark: SparkSession, path: String,
-      ids: DataFrame): DataFrame =
-    latestWins(adjacencyRows(spark, path, Long.MaxValue)
-      .join(broadcast(ids.select("node_id")), Seq("node_id")))
+    adjacencyRows(spark, path, maxSeq).groupBy("node_id")
+      .agg(max_by(struct(col("seq"), col("neighbors")), col("seq"))
+        .getField("neighbors").as("neighbors"))
+      .filter(col("neighbors").isNotNull)
 
   /** Unmerged (node_id, neighbors, seq) rows: the base build as seq 0
     * plus every delta generation up to `maxSeq`. */
@@ -183,16 +190,10 @@ object GraphAnn {
       .select(col("node_id"), col("neighbors"), col("seq")))
   }
 
-  /** Latest-wins per node (highest seq); a removal marker's node drops. */
-  private def latestWins(rows: DataFrame): DataFrame =
-    rows.groupBy("node_id")
-      .agg(max_by(struct(col("seq"), col("neighbors")), col("seq"))
-        .getField("neighbors").as("neighbors"))
-      .filter(col("neighbors").isNotNull)
-
   /** Add vectors to a persisted NSW graph without a rebuild: the HNSW
-    * append with no upper rungs (see appendToHnswGraph — placement walk,
-    * LSH candidate join, reverse-edge maintenance, seq-stamped delta).
+    * append with no upper rungs (see appendToHnswGraph — LSH and
+    * placement-walk candidates, reverse-edge maintenance, seq-stamped
+    * delta).
     */
   def appendToNswGraph(spark: SparkSession, newNodes: DataFrame,
       embCol: String, idCol: String, lsh: IndexBuilder.RandomHyperplaneLsh,
@@ -218,13 +219,20 @@ object GraphAnn {
     }
   }
 
-  /** One delta generation landed as its own `seq=<n>` leaf (partition-
-    * discovered on read; overwrite makes re-landing a generation
-    * idempotent rather than duplicating rows).
+  /** One delta generation of driver-computed (node_id, neighbors) rows,
+    * landed as the rung's next `seq=<n>` leaf (partition-discovered on
+    * read; overwrite makes re-landing a generation idempotent rather than
+    * duplicating rows). NULL neighbors is a removal marker. No rows, no
+    * leaf.
     */
-  private def writeDelta(df: DataFrame, path: String, seq: Long): Unit =
-    df.repartition(2, col("node_id"))
-      .write.mode("overwrite").parquet(path + s"_delta/seq=$seq")
+  private def writeRows(spark: SparkSession, rows: Seq[(Long, Array[Long])],
+      path: String): Unit =
+    if (rows.nonEmpty)
+      spark.createDataFrame(rows.map { case (id, ns) =>
+          org.apache.spark.sql.Row(id, if (ns == null) null else ns.toSeq) }.asJava,
+          adjSchema)
+        .repartition(2, col("node_id"))
+        .write.mode("overwrite").parquet(path + s"_delta/seq=${nextDeltaSeq(spark, path)}")
 
   /** Delete vectors from a persisted NSW graph — a tombstone sidecar
     * append, the same O(|deleted|) delete the LSH/IVF/BM25 families use;
@@ -253,181 +261,71 @@ object GraphAnn {
 
   /** Fold pending tombstones into the adjacency — the right-to-be-
     * forgotten job the other index families already have. Only AFFECTED
-    * rows are rewritten (nodes listing a deleted neighbor — bounded by
-    * the deleted set's in-degree, never the graph):
+    * rows are rewritten (live nodes whose current adjacency lists a
+    * deleted neighbor — bounded by the deleted set's in-degree, never the
+    * graph):
     *
     *  - each affected node drops its deleted neighbors and inherits the
     *    deleted nodes' own surviving neighbors as BRIDGE candidates (the
     *    HNSW repair heuristic: when a waypoint dies, its endpoints are
     *    wired to each other), re-scored against real embeddings and
     *    re-topped at 2M — so a region reachable only through deleted
-    *    nodes stays reachable around them;
+    *    nodes stays reachable around them; an affected node left with no
+    *    edge gets an empty row, never its stale one;
     *  - deleted nodes' own rows become NULL-neighbor removal markers,
     *    which the merged view resolves latest-wins and drops.
     *
-    * Both land as ONE seq-stamped delta append; the sidecar truncates
-    * LAST (the Compaction ordering), so a crash between the two leaves
-    * tombstones pending — the search filter still hides the deleted ids
-    * and a re-fold is idempotent (its recomputation reads the merged
-    * view, which already resolves to the folded rows).
-    *
-    * BATCH-SIZE CONTRACT: the fold broadcasts frames bounded by the
-    * tombstone set × its in-degree (affected rows, bridge edges). A
-    * delete wave large enough to overflow that broadcast budget — a
-    * sizable fraction of the graph — is cheaper as a rebuild over the
-    * surviving corpus (`buildNswGraph`), which is the documented escape
-    * hatch, not a bigger fold.
+    * The rows are computed on the driver from the resident pin of the
+    * pre-fold version — the pin a serve of the graph holds: its merged
+    * adjacency finds the in-neighbors, its vectors score the rewrite and
+    * its tombstone set is the deleted set — and land as ONE seq-stamped
+    * delta leaf per touched rung. The sidecar truncates LAST (the
+    * Compaction ordering), so a crash between the two leaves tombstones
+    * pending — the search filter still hides the deleted ids and a
+    * re-fold is idempotent (it pins the merged view, which already
+    * resolves to the folded rows). A delete wave covering a sizable
+    * fraction of the graph is cheaper as a rebuild over the surviving
+    * corpus (`buildNswGraph`).
     */
   def foldNswTombstones(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, m: Int): Unit = {
-    val tomb = readNswTombstones(spark, path).cache()
-    if (tomb.isEmpty) return
-    foldRungTombstones(spark, Seq(path), tomb, corpus, embCol, idCol, m)
-    tomb.unpersist()
-    // sidecar truncates LAST: a crash before this point leaves tombstones
-    // pending, which is merely conservative (search keeps filtering them)
-    deletePath(spark, path + "_tombstones")
-  }
-
-  /** The fold body over a SET of rungs as ONE rung-tagged job (the
-    * batched-append discipline applied to deletes): the
-    * bridge/surviving/rewrite pipeline keys on (rung, …) so rungs never
-    * mix, and the computed delta rows materialize once before fanning
-    * out as per-rung sidecar appends. The only corpus-wide touch is a
-    * RAW map-side scan for the deleted set's in-neighbor candidates —
-    * no latest-wins aggregate ever runs over the full graph here (see
-    * the inline notes). Embedding joins use the FULL corpus keyed by id
-    * — scores are layer-independent, and ids are corpus-unique. The
-    * caller owns the tombstone-sidecar lifecycle.
-    */
-  private def foldRungTombstones(spark: SparkSession, rungPaths: Seq[String],
-      tomb: DataFrame, corpus: DataFrame, embCol: String, idCol: String,
-      m: Int): Unit = withWalkConfs(spark) { spark =>
-    // walk confs apply to the fold: its only corpus-wide touch is the
-    // map-side raw scan (no shuffle for AQE to replan), and every shuffle
-    // below is bounded by |deleted| × in-degree
-    // THE one corpus-wide pass this job fundamentally needs: the graph
-    // stores OUT-edges only, so finding the deleted set's in-neighbors
-    // must touch every rung's adjacency once. It runs over the RAW
-    // base∪delta rows — a map-side scan + broadcast join, NO latest-wins
-    // shuffle — yielding a stale-version SUPERSET of the in-neighbors
-    // (bounded by in-degree across versions); only those candidates then
-    // pay the merge, as an id-pruned fetch whose current edges decide
-    // true affectedness. Everything downstream is |deleted| × in-degree
-    // bounded; the full merged view is never aggregated, materialized,
-    // or pinned anywhere in the fold.
-    val rawRows = rungPaths.zipWithIndex.map { case (p, i) =>
-      val base = spark.read.parquet(p).select(col("node_id"), col("neighbors"))
-      val all =
-        if (pathExists(spark, p + "_delta"))
-          base.unionByName(spark.read.parquet(p + "_delta")
-            .select(col("node_id"), col("neighbors")))
-        else base
-      all.withColumn("rung", lit(i))
-    }.reduce(_ unionByName _)
-    val candIds = rawRows
-      .select(col("rung"), col("node_id"), explode(col("neighbors")).as("dst"))
-      .join(broadcast(tomb.withColumnRenamed("node_id", "dst")), Seq("dst"))
-      .join(broadcast(tomb), Seq("node_id"), "left_anti")
-      .select("rung", "node_id").distinct()
-      .localCheckpoint(true)
-    // ONE bounded fetch for every merged row the fold needs — the
-    // in-neighbor candidates AND the deleted nodes themselves — as a
-    // per-rung id semi-join below the latest-wins aggregate,
-    // materialized once; splitting back out is a broadcast filter over
-    // the checkpointed blocks, never another read of the rung files.
-    val fetched = rungPaths.zipWithIndex.map { case (p, i) =>
-      readNswAdjacencyFor(spark, p,
-        candIds.filter(col("rung") === i).select("node_id")
-          .unionByName(tomb).distinct())
-        .withColumn("rung", lit(i))
-    }.reduce(_ unionByName _).localCheckpoint(true)
-    // the candidates' CURRENT merged rows: their edges split into the
-    // dying endpoints (⇒ true affectedness + bridge anchors) and the
-    // surviving ones (⇒ the rewrite's base edge set) — a stale-only
-    // in-edge makes a candidate drop out here
-    val candEdges = fetched
-      .join(broadcast(tomb), Seq("node_id"), "left_anti")
-      .select(col("rung"), col("node_id").as("src"),
-        explode(col("neighbors")).as("dst"))
-    val affected = candEdges
-      .join(broadcast(tomb.withColumnRenamed("node_id", "dst")), Seq("dst"))
-      .select(col("rung"), col("src"), col("dst").as("via"))
-    val affectedIds = affected.select(col("rung"), col("src").as("node_id")).distinct()
-    // the deleted nodes' own rows: feed bridge candidates AND removal
-    // markers — tombstone-bounded
-    val deadAdj = fetched.join(broadcast(tomb), Seq("node_id"))
-    // bridge candidates: deleted node d's surviving neighbors, offered to
-    // every surviving node that listed d (within the same rung)
-    val deadOut = deadAdj.select(col("rung"), col("node_id").as("via"),
-        explode(col("neighbors")).as("dst"))
-      .join(broadcast(tomb.withColumnRenamed("node_id", "dst")), Seq("dst"), "left_anti")
-    val bridges = broadcast(affected)
-      .join(deadOut, Seq("rung", "via"))
-      .select(col("rung"), col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-    // affected nodes' surviving edges — from the same fetched candidate
-    // rows, restricted to TRUE affected sources (a candidate whose only
-    // tomb edge was stale must not be rewritten)
-    val surviving = candEdges
-      .join(broadcast(tomb.withColumnRenamed("node_id", "dst")), Seq("dst"), "left_anti")
-      .join(broadcast(affectedIds.withColumnRenamed("node_id", "src")),
-        Seq("rung", "src"))
-      .select("rung", "src", "dst")
-    val nodes = corpus.select(col(idCol).as("id"), col(embCol).as("emb"))
-    val rewriteEdges = surviving.unionByName(bridges).distinct()
-    val rewriteSrc = broadcast(rewriteEdges)
-      .join(nodes.select(col("id").as("src"), col("emb").as("src_emb")), Seq("src"))
-    val rewritten = broadcast(rewriteSrc)
-      .join(nodes.select(col("id").as("dst"), col("emb").as("dst_emb")), Seq("dst"))
-      .select(col("rung"), col("src"), col("dst"),
-        VectorFunctions.cosineUnit(col("src_emb"), col("dst_emb")).as("score"))
-      .withColumn("rn", row_number().over(Window.partitionBy("rung", "src")
-        .orderBy(col("score").desc, col("dst").asc)))
-      .filter(col("rn") <= 2 * m)
-      .groupBy(col("rung"), col("src").as("node_id"))
-      .agg(sort_array(collect_list(struct(
-        (-col("score")).as("neg"), col("dst"))))
-        .getField("dst").as("neighbors"))
-    // an affected node whose every edge died still needs a NEW row —
-    // an empty list, not its stale one surviving latest-wins
-    val rewrittenAll = affectedIds
-      .join(broadcast(rewritten), Seq("rung", "node_id"), "left")
-      .select(col("rung"), col("node_id"), coalesce(col("neighbors"),
-        array().cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType))).as("neighbors"))
-    val removals = deadAdj
-      .select(col("rung"), col("node_id"), lit(null)
-        .cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType)).as("neighbors"))
-    // one job computes every rung's delta rows; the per-rung appends are
-    // cheap scans of the checkpointed blocks
-    val delta = rewrittenAll.unionByName(removals).localCheckpoint(true)
-    val present = delta.select("rung").distinct()
-      .collect().map(_.getInt(0)).sorted // ≤ |rungs| rows
-    present.foreach { i =>
-      writeDelta(delta.filter(col("rung") === i).drop("rung"),
-        rungPaths(i), nextDeltaSeq(spark, rungPaths(i)))
-    }
-  }
+      embCol: String, idCol: String, m: Int): Unit =
+    foldTombstones(spark, path, Nil, corpus, embCol, idCol, m)
 
   /** Fold pending tombstones through the WHOLE HNSW ladder — layer 0 and
-    * every persisted `_l<ℓ>` rung, as ONE rung-tagged job. Deleted ids
-    * must leave the stored upper layers too (right-to-be-forgotten is
-    * about the bytes on disk, not just the emission filter), and the
-    * upper-layer bridge repair keeps a region whose hash-selected
-    * waypoints all died descendable around them. The one shared sidecar
-    * truncates after the deltas land: a crash mid-fold leaves tombstones
-    * pending and a re-fold is idempotent.
+    * every persisted `_l<ℓ>` rung, each rewritten as above from the one
+    * pin of the ladder. Deleted ids must leave the stored upper layers too
+    * (right-to-be-forgotten is about the bytes on disk, not just the
+    * emission filter), and the upper-layer bridge repair keeps a region
+    * whose hash-selected waypoints all died descendable around them. The
+    * one shared sidecar truncates after the deltas land.
     */
   def foldHnswTombstones(spark: SparkSession, path: String, corpus: DataFrame,
-      embCol: String, idCol: String, m: Int, maxLevel: Int = 2): Unit = {
-    val tomb = readNswTombstones(spark, path).cache()
-    if (tomb.isEmpty) return
-    val rungs = path +: (1 to maxLevel).map(path + "_l" + _)
-      .filter(pathExists(spark, _))
-    foldRungTombstones(spark, rungs, tomb, corpus, embCol, idCol, m)
-    tomb.unpersist()
+      embCol: String, idCol: String, m: Int, maxLevel: Int = 2): Unit =
+    foldTombstones(spark, path, (maxLevel to 1 by -1).map(path + "_l" + _),
+      corpus, embCol, idCol, m)
+
+  private def foldTombstones(spark: SparkSession, path: String,
+      rungPaths: Seq[String], corpus: DataFrame, embCol: String,
+      idCol: String, m: Int): Unit = {
+    if (!pathExists(spark, path + "_tombstones")) return
+    val pin = servingPin(spark, path, corpus, embCol, idCol, rungPaths)
+    val dead = pin.dead
+    if (dead.isEmpty) return
+    (path +: pin.rungs.reverse.map(_._1)).foreach { p =>
+      val adj = pin.adjacency(p)
+      val rewritten = adj.toSeq.collect {
+        case (x, ns) if !dead(x) && ns.exists(dead) =>
+          val bridges = ns.filter(dead)
+            .flatMap(d => adj.getOrElse(d, Array.empty[Long]))
+            .filter(b => !dead(b) && b != x)
+          x -> topEdges(scoredEdges(pin.vec, x,
+            (ns.filterNot(dead) ++ bridges).distinct), 2 * m).map(_._1).toArray
+      }
+      writeRows(spark, rewritten ++
+        dead.toSeq.filter(adj.contains).map(_ -> (null: Array[Long])), p)
+    }
+    // sidecar truncates LAST: a crash before this point leaves tombstones
+    // pending, which is merely conservative (search keeps filtering them)
     deletePath(spark, path + "_tombstones")
   }
 
@@ -521,8 +419,10 @@ object GraphAnn {
 
   // ---- corpus vector pin ----------------------------------------------
   // The corpus' (id, embedding) projection collected ONCE per corpus
-  // signature (corpusKey — plan + input-file stamps + the frame's own file
-  // list, so any upsert/delete/planted-copy change invalidates) into a
+  // signature (ResultCache.cacheKey — plan + input-file stamps + the
+  // frame's own file list, so any upsert/delete/planted-copy change
+  // invalidates, and a frame listed before a write never fills the pin
+  // of one listed after it) into a
   // driver map: the vector side of every resident pin, shared by all pins
   // over the same corpus version. Resident (id, emb) per indexed shard is
   // exactly the memory bound hnswlib requires of a serving node; the cold
@@ -536,23 +436,10 @@ object GraphAnn {
       size > VecPinMax
   }
 
-  /** Identity of the data a corpus frame reads: ResultCache's plan +
-    * input-stamp key, plus the file list the frame captured when it was
-    * created. The stamp alone names the directory as it is NOW, so a frame
-    * created before a write (it still reads its old file list) and one
-    * created after it would share a key — and a pin collected from the
-    * stale frame would then serve the fresh one without the new rows.
-    */
-  private def corpusKey(df: DataFrame): String =
-    graft.ops.ResultCache.cacheKey(df) + "#" + java.security.MessageDigest
-      .getInstance("MD5").digest(df.inputFiles.sorted.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-
   private def vecPin(corpus: DataFrame, embCol: String,
       idCol: String): Map[Long, Array[Float]] = {
     val proj = corpus.select(col(idCol).cast("long"), col(embCol))
-    val key = corpusKey(proj)
+    val key = graft.ops.ResultCache.cacheKey(proj)
     val hit = vecPinCache.synchronized(Option(vecPinCache.get(key)))
     hit.getOrElse {
       // a null embedding scores nothing (its id is a waypoint at most),
@@ -563,49 +450,6 @@ object GraphAnn {
       vecPinCache.synchronized(vecPinCache.put(key, m))
       m
     }
-  }
-
-  /** Confs for the tombstone fold, whose shuffles are bounded by
-    * |deleted| × in-degree: AQE's per-stage re-planning spawns extra jobs
-    * that cost more than they could save on such frames, and 8 shuffle
-    * partitions are plenty.
-    *
-    * The confs live on a DEDICATED session (spark.newSession: same
-    * SparkContext, isolated SQL confs), created once per context with AQE
-    * off and 8 shuffle partitions, and handed to the body — which shadows
-    * `spark` with it, so every graph-side frame it builds runs under these
-    * confs while the caller's session is never mutated (no leak to
-    * concurrent queries, no lock between serving and folds).
-    * Build/append jobs keep the session confs (their shuffles can be
-    * corpus-born, where AQE earns its jobs).
-    *
-    * CONF-INHERITANCE CUTOFF: the session is created ONCE per
-    * SparkContext via `spark.newSession()`, which snapshots only
-    * context-level and default confs — runtime SQL confs set on the
-    * caller's session AFTER the first use never reach these jobs.
-    * Deliberate for the two confs pinned here, but a future session-level
-    * conf (an ANSI toggle, a codegen flag) must arrive context-wide
-    * (spark-defaults / -D system property) to influence them — or this
-    * cache must become a per-caller cloneSession.
-    */
-  @volatile private var walkSessionRef: SparkSession = _
-
-  private def withWalkConfs[A](spark: SparkSession)(f: SparkSession => A): A = {
-    val cur = walkSessionRef
-    val ws =
-      if (cur != null && (cur.sparkContext eq spark.sparkContext)) cur
-      else synchronized {
-        val again = walkSessionRef
-        if (again != null && (again.sparkContext eq spark.sparkContext)) again
-        else {
-          val s = spark.newSession()
-          s.conf.set("spark.sql.adaptive.enabled", "false")
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          walkSessionRef = s
-          s
-        }
-      }
-    f(ws)
   }
 
   // ---------------------------------------------------------------------
@@ -643,168 +487,125 @@ object GraphAnn {
     }
   }
 
-  /** The append's placement candidates: each arrival's top-M hits from a
-    * walk of the pre-append ladder at the search defaults, as layer-0
-    * (layer, src, dst, score) pairs. Scores are residentWalk's double
-    * dot, bit-equal to the `cosineUnit` the LSH pairs carry, so the
-    * dedup max sees one score per pair. Tombstoned nodes are not offered.
+  /** The top layer of an id under layerFilter's level function,
+    * evaluated on the driver: the largest ℓ ≤ maxLevel with xxhash64(id)
+    * ≡ 0 (mod fanout^ℓ) — the id belongs to every layer up to it. Spark
+    * hashes an integral id by its column type, int-sized types as ints.
     */
-  private def placementPairs(spark: SparkSession, newN: DataFrame,
-      path: String, corpus: DataFrame, embCol: String, idCol: String, m: Int,
-      rungPaths: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val pin = residentPin(spark, path, corpus, embCol, idCol, entries = 16,
-      rungPaths, descentBeam = 4, Long.MaxValue)
-    newN.select(col("id").cast("long"), col("emb")).collect().toSeq
-      .filterNot(_.isNullAt(1)).flatMap { r =>
-        val id = r.getLong(0)
-        ladderWalk(pin, r.getSeq[Float](1).toArray, beam = 32, hops = 4,
-            descentBeam = 4, descentHops = 2)._1
-          .filter { case (dst, _) => dst != id && !pin.dead.contains(dst) }
-          .toSeq.sortBy { case (dst, s) => (-s, dst) }.take(m)
-          .map { case (dst, s) => (0, id, dst, s) }
-      }.toDF("layer", "src", "dst", "score")
+  private def topLevel(idType: DataType, fanout: Int,
+      maxLevel: Int): Long => Int = {
+    val intSized = idType match {
+      case IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    id => {
+      val h = if (intSized) XXH64.hashInt(id.toInt, 42L) else XXH64.hashLong(id, 42L)
+      (1 to maxLevel).takeWhile(l => Math.floorMod(h,
+        math.pow(fanout.toDouble, l.toDouble).toLong) == 0L).lastOption.getOrElse(0)
+    }
   }
 
   /** Append to the HNSW ladder without a rebuild — the hnswlib insert
-    * generalized to batches, as ONE layer-tagged job (layer 0 takes every
-    * new node, each upper layer exactly the new nodes its id hash selects
-    * — the SAME pure level function the build used, so the ladder's
-    * membership invariant survives any append sequence):
+    * generalized to batches. Layer 0 takes every new node, each upper
+    * layer exactly the new nodes its id hash selects (the SAME pure level
+    * function the build used, so the ladder's membership invariant
+    * survives any append sequence). The delta rows are computed on the
+    * driver, from the arrivals (collected once) and the resident pin of
+    * the pre-append version (reused when a serve already holds it):
     *
-    *  - candidates: each arrival walks the PRE-append ladder with the
-    *    serving kernel (residentWalk over the serving pin) and offers its
-    *    top-M hits as layer-0 candidate pairs, next to the bucket-mates
-    *    of its radius-1 LSH probes (against existing + new home buckets).
+    *  - candidates per arrival and layer: the bucket-mates of its radius-1
+    *    LSH probes among that layer's corpus ∪ arrival nodes (the build's
+    *    candidate rule) and, on layer 0, the top-M hits of a walk of the
+    *    pre-append ladder with the serving kernel at the search defaults.
     *    The walk is what links an outlier: its probe buckets can all sit
     *    far from it in cosine while its true neighbors share none of them,
     *    and then no near node would list it and no beam would reach it.
-    *  - per-source top-M window, then reverse edges into EXISTING nodes:
-    *    their adjacency rows are RECOMPUTED (current edges re-scored + the
-    *    new in-edges, re-topped at 2M) and re-landed as delta rows —
-    *    without this in-edge maintenance appended vectors would be
-    *    unreachable out-only sinks.
-    *  - joins and windows key on (layer, …), so rungs never mix; the delta
-    *    rows materialize once (localCheckpoint) and fan out as per-rung
-    *    `seq=<n>` sidecar appends (prior max + 1 — deterministic), merged
-    *    latest-wins by readNswAdjacency.
+    *    The walk offers no tombstoned node.
+    *  - per-(layer, arrival) top-M by (score desc, id asc), scored by the
+    *    pin's double dot (bit-equal to `cosineUnit`); then reverse edges
+    *    into EXISTING nodes: each one's pinned adjacency plus its new
+    *    in-edges is re-scored and re-topped at 2M — without this in-edge
+    *    maintenance appended vectors would be unreachable out-only sinks.
+    *  - one `seq=<n>` delta leaf per touched rung (prior max + 1 —
+    *    deterministic), merged latest-wins by every reader.
     *
-    * Cost scales with |new|·M affected rows plus one pin of the
-    * pre-append version (reused when that version is already pinned for
-    * serving), never a graph rewrite.
-    *
-    * BATCH-SIZE CONTRACT: the arrivals are collected for the placement
-    * walk and the broadcast hints assume `newNodes` is a micro-batch
-    * (≲ executor broadcast budget once multiplied by M edges and the
-    * embedding width). A corpus-scale backfill exceeds that by design;
-    * route it through `buildHnswGraph` (the batch rebuild), which
-    * shuffles instead of broadcasting.
+    * Cost scales with |new|·M rewritten rows plus one pin of the
+    * pre-append version, never a graph rewrite; Spark runs the arrivals
+    * collect and the per-rung writes. A corpus-scale backfill belongs in
+    * `buildHnswGraph`, the batch rebuild.
     */
   def appendToHnswGraph(spark: SparkSession, newNodes: DataFrame,
       embCol: String, idCol: String, lsh: IndexBuilder.RandomHyperplaneLsh,
       m: Int, path: String, corpus: DataFrame,
       fanout: Int = 8, maxLevel: Int = 2): Unit = {
     def layerPath(l: Int): String = if (l == 0) path else path + "_l" + l
-    // tag a (id, …) frame with every layer its id hash belongs to — as a
-    // single explode over the computed membership list, NOT a union of
-    // maxLevel+1 filtered copies: the union form re-scans (and re-hashes)
-    // the corpus once per rung, tripling the job's scan volume
-    val layerList = filter(
-      array((0 to maxLevel).map { l =>
-        when(pmod(xxhash64(col("id")),
-          lit(math.pow(fanout.toDouble, l.toDouble).toLong)) === 0L, lit(l))
-      }: _*), x => x.isNotNull)
-    def tagged(df: DataFrame): DataFrame =
-      df.withColumn("layer", explode(layerList))
-    val newN = newNodes.select(col(idCol).as("id"), col(embCol).as("emb"))
-    val nodesAll = corpus.select(col(idCol).as("id"), col(embCol).as("emb"))
-      .unionByName(newN)
-    // signature ONCE per row, tag after — the ladder's membership tagging
-    // replicates the already-computed bucket instead of re-hashing the
-    // corpus per rung; probes are the columnar mask explode (see
-    // buildNswGraph), never the per-row probes() UDF
-    val homeT = tagged(IndexBuilder.withLshBucket(nodesAll, "emb", lsh))
+    val arrivals = newNodes.select(col(idCol).cast("long"), col(embCol))
+      .collect().toSeq.map(r =>
+        (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray))
+    if (arrivals.isEmpty) return
+    val pin = servingPin(spark, path, corpus, embCol, idCol,
+      (maxLevel to 1 by -1).map(layerPath))
+    val vec = pin.vec ++ arrivals.filter(_._2 != null)
+    val corpusTop = topLevel(corpus.schema(idCol).dataType, fanout, maxLevel)
+    val arrivalTop = topLevel(newNodes.schema(idCol).dataType, fanout, maxLevel)
+    def sig(e: Array[Float]): Int = lsh.signature(ArraySeq.unsafeWrapArray(e))
+    // every node with a vector in its home bucket, with its top layer
+    val home = (pin.vec.toSeq.map { case (id, e) => (id, e, corpusTop(id)) } ++
+        arrivals.collect { case (id, e) if e != null => (id, e, arrivalTop(id)) })
+      .groupBy(t => sig(t._2))
     val masks = IndexBuilder.probeMasks(lsh.nBits, radius = 1)
-    val probedNewT = tagged(IndexBuilder.withLshBucket(newN, "emb", lsh, "sig"))
-      .withColumn("mask", explode(typedlit(masks)))
-      .select(col("layer"), col("id"), col("emb"),
-        col("sig").bitwiseXOR(col("mask")).as("bucket"))
-    // batch-sized sides are broadcast throughout, so the corpus-wide
-    // frames (homeT, existingT, nodesAll) never cross an exchange —
-    // exchange count, not compute, dominates this job's wall time
-    val pairs = broadcast(probedNewT).as("a")
-      .join(homeT.as("b"), col("a.layer") === col("b.layer") &&
-        col("a.bucket") === col("b.bucket") && col("a.id") =!= col("b.id"))
-      .select(col("a.layer").as("layer"), col("a.id").as("src"),
-        col("b.id").as("dst"),
-        VectorFunctions.cosineUnit(col("a.emb"), col("b.emb")).as("score"))
-      .unionByName(placementPairs(spark, newN, path, corpus, embCol, idCol,
-        m, (maxLevel to 1 by -1).map(layerPath)))
-      .groupBy("layer", "src", "dst").agg(max("score").as("score"))
-    val wSrc = Window.partitionBy("layer", "src")
-      .orderBy(col("score").desc, col("dst").asc)
-    // localCheckpoint: same four-consumer shape as the flat append — one
-    // candidate-join evaluation, not one per broadcast subtree
-    val topM = pairs.withColumn("rn", row_number().over(wSrc))
-      .filter(col("rn") <= m).select("layer", "src", "dst", "score")
-      .localCheckpoint(true)
-    val newAdj0 = topM
-      .groupBy(col("layer"), col("src").as("node_id"))
-      .agg(sort_array(collect_list(struct(
-        (-col("score")).as("neg"), col("dst"))))
-        .getField("dst").as("neighbors"))
-    // total over the arrivals per rung: a new node alone in its bucket
-    // neighborhood (common in sparse upper layers) still lands a row
-    val newAdj = tagged(newN).select(col("layer"), col("id").as("node_id"))
-      .join(broadcast(newAdj0), Seq("layer", "node_id"), "left")
-      .select(col("layer"), col("node_id"), coalesce(col("neighbors"),
-        array().cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType))).as("neighbors"))
-    // reverse edges into EXISTING nodes, per rung: recompute those rows
-    val existingT = tagged(corpus.select(col(idCol).as("id")))
-    val rev = broadcast(topM)
-      .join(existingT.select(col("layer"), col("id").as("dst")), Seq("layer", "dst"))
-      .select(col("layer"), col("dst").as("src"), col("src").as("dst"), col("score"))
-    // materialized once: affected drives a per-rung filtered merge below
-    // AND the rewrite's id set — without it each subtree re-runs the
-    // candidate join
-    val affected = rev.select(col("layer"), col("src").as("node_id"))
-      .distinct().localCheckpoint(true)
-    // per-rung merge restricted to that rung's affected ids, the semi-join
-    // BELOW the latest-wins aggregate — never the whole graph through it
-    val curAdj = (0 to maxLevel).flatMap { l =>
-      if (l == 0 || pathExists(spark, layerPath(l)))
-        Some(readNswAdjacencyFor(spark, layerPath(l),
-          affected.filter(col("layer") === l).select("node_id"))
-          .withColumn("layer", lit(l)))
-      else None
-    }.reduce(_ unionByName _)
-    val curEdges = curAdj
-      .select(col("layer"), col("node_id").as("src"),
-        explode(col("neighbors")).as("dst"))
-    val curSrc = broadcast(curEdges)
-      .join(nodesAll.select(col("id").as("src"), col("emb").as("src_emb")), Seq("src"))
-    val cur = broadcast(curSrc)
-      .join(nodesAll.select(col("id").as("dst"), col("emb").as("dst_emb")), Seq("dst"))
-      .select(col("layer"), col("src"), col("dst"),
-        VectorFunctions.cosineUnit(col("src_emb"), col("dst_emb")).as("score"))
-    val mergedRows = cur.unionByName(rev)
-      .groupBy("layer", "src", "dst").agg(max("score").as("score"))
-      .withColumn("rn", row_number().over(wSrc))
-      .filter(col("rn") <= 2 * m)
-      .groupBy(col("layer"), col("src").as("node_id"))
-      .agg(sort_array(collect_list(struct(
-        (-col("score")).as("neg"), col("dst"))))
-        .getField("dst").as("neighbors"))
-    // one job computes every rung's delta rows; the per-rung appends below
-    // are cheap scans of the checkpointed blocks
-    val delta = newAdj.unionByName(mergedRows).localCheckpoint(true)
-    val rungs = delta.select("layer").distinct()
-      .collect().map(_.getInt(0)).sorted // ≤ maxLevel+1 rows
-    rungs.foreach { l =>
-      writeDelta(delta.filter(col("layer") === l).drop("layer"),
-        layerPath(l), nextDeltaSeq(spark, layerPath(l)))
+    // (layer, arrival, its top-M out-edges)
+    val out = arrivals.flatMap { case (a, e) =>
+      val mates = if (e == null) Nil
+        else masks.flatMap(mk => home.getOrElse(sig(e) ^ mk, Nil))
+          .collect { case (b, be, top) if b != a => (b, dot(be, e), top) }
+      val walked = if (e == null) Nil
+        else topEdges(ladderWalk(pin, e, beam = 32, hops = 4, descentBeam = 4,
+            descentHops = 2)._1
+          .filter { case (b, _) => b != a && !pin.dead.contains(b) }, m)
+      (0 to arrivalTop(a)).map { l =>
+        val inLayer = mates.collect { case (b, s, top) if top >= l => b -> s }
+        (l, a, topEdges(if (l == 0) inLayer ++ walked else inLayer, m))
+      }
     }
+    // (layer, existing node) → its new in-edges
+    val in = out.flatMap { case (l, a, es) =>
+      es.collect { case (x, s) if pin.vec.contains(x) => (l, x) -> (a -> s) }
+    }.groupMap(_._1)(_._2)
+    val rows = out.map { case (l, a, es) => l -> (a -> es) } ++
+      in.toSeq.map { case ((l, x), es) =>
+        val cur: Array[Long] = pin.adjacency(layerPath(l)).getOrElse(x, Array.empty)
+        l -> (x -> topEdges(scoredEdges(vec, x, cur) ++ es, 2 * m))
+      }
+    rows.groupMap(_._1)(_._2).foreach { case (l, rs) =>
+      writeRows(spark, rs.map { case (x, es) => x -> es.map(_._1).toArray },
+        layerPath(l))
+    }
+  }
+
+  /** The n best (dst, score) candidates, one per dst (its max score), in
+    * (score desc, dst asc) order — the build's window and sort_array
+    * order, with Spark's double equality (0.0 == -0.0). */
+  private def topEdges(cands: Iterable[(Long, Double)], n: Int): Seq[(Long, Double)] =
+    cands.groupMapReduce(_._1)(_._2)(math.max).toSeq.sortWith { case ((a, s), (b, t)) =>
+      if (s == t) a < b else s > t
+    }.take(n)
+
+  /** src → dst edge candidates scored by the pin's double dot; an id
+    * without a vector has no edge, as in an inner join on embeddings. */
+  private def scoredEdges(vec: Map[Long, Array[Float]], src: Long,
+      dsts: Iterable[Long]): Iterable[(Long, Double)] =
+    vec.get(src).fold(Iterable.empty[(Long, Double)])(sv =>
+      dsts.flatMap(d => vec.get(d).map(d -> dot(_, sv))))
+
+  /** Left-to-right double dot over the shorter length — the exact loop of
+    * the native DotProduct expression, so it equals `cosineUnit` bit for
+    * bit (residentWalk's scorer). */
+  private def dot(e: Array[Float], q: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    val n = math.min(e.length, q.length)
+    while (i < n) { s += e(i).toDouble * q(i).toDouble; i += 1 }
+    s
   }
 
   /** The one beam loop every search runs — ladder rung or layer 0;
@@ -825,12 +626,7 @@ object GraphAnn {
       vec: scala.collection.Map[Long, Array[Float]], qv: Array[Float],
       entryIds: Seq[Long], beam: Int, hops: Int, snapshotK: Int = 0)
       : (Map[Long, Double], Seq[(Int, Long, Seq[Long])]) = {
-    def score(id: Long): Option[Double] = vec.get(id).map { e =>
-      var s = 0.0; var i = 0
-      val n = math.min(e.length, qv.length)
-      while (i < n) { s += e(i).toDouble * qv(i).toDouble; i += 1 }
-      s
-    }
+    def score(id: Long): Option[Double] = vec.get(id).map(dot(_, qv))
     var visited: Map[Long, Double] =
       entryIds.distinct.flatMap(id => score(id).map(id -> _)).toMap
     var scored = visited.size.toLong
@@ -874,7 +670,7 @@ object GraphAnn {
       hops: Int, descentBeam: Int, descentHops: Int, snapshotK: Int = 0)
       : (Map[Long, Double], Seq[(Int, Long, Seq[Long])]) = {
     var carried = Seq.empty[Long]
-    pin.rungs.foreach { case (adjL, entriesL) =>
+    pin.rungs.foreach { case (_, adjL, entriesL) =>
       val seeds = if (carried.nonEmpty) carried else entriesL
       if (seeds.nonEmpty)
         carried = best(residentWalk(adjL, pin.vec, qv, seeds,
@@ -885,18 +681,27 @@ object GraphAnn {
   }
 
   /** One pinned resident view of a graph index version: the merged
-    * (latest-wins, optionally asOfSeq-pinned) adjacency per rung with its
-    * hash-min entry points, layer 0's adjacency and entry points, the
-    * shard's vectors (the corpus' vecPin) and the tombstone set — plain
-    * driver maps, built once per version and walked in place by every
-    * search and by the append's placement walk.
+    * (latest-wins, optionally asOfSeq-pinned) adjacency per upper rung
+    * (path, adjacency, hash-min entry points; top-down), layer 0's
+    * adjacency and entry points, the shard's vectors (the corpus' vecPin)
+    * and the tombstone set — plain driver maps, built once per version
+    * and walked in place by every search, and read by the append and the
+    * tombstone fold for their delta rows.
     */
   private[graft] final case class ResidentPin(
-    rungs: Seq[(Map[Long, Array[Long]], Seq[Long])],
+    path: String,
+    rungs: Seq[(String, Map[Long, Array[Long]], Seq[Long])],
     adj0: Map[Long, Array[Long]],
     entryIds: Seq[Long],
     vec: Map[Long, Array[Float]],
-    dead: Set[Long])
+    dead: Set[Long]) {
+
+    /** The merged adjacency of rung `p` (`path` is layer 0); empty for a
+      * rung that is not pinned. */
+    def adjacency(p: String): Map[Long, Array[Long]] =
+      if (p == path) adj0
+      else rungs.collectFirst { case (`p`, adj, _) => adj }.getOrElse(Map.empty)
+  }
 
   // ---- resident-pin cache ---------------------------------------------
   // The hnswlib serving model pins the view ONCE per index version, not
@@ -904,8 +709,9 @@ object GraphAnn {
   // per session, query_rag_database.py:138-149). Keyed by (path, asOfSeq,
   // entry/descent params); validated by a STAMP that folds the FS listing
   // of the index dir + every sidecar (_delta, _tombstones, ladder rungs)
-  // AND the corpus' signature (corpusKey — LocalRelation rows digested,
-  // so planted-copy corpora invalidate too).
+  // AND the corpus' signature (ResultCache.cacheKey — LocalRelation rows
+  // and captured file lists digested, so planted-copy corpora and frames
+  // listed before a write invalidate too).
   // Any append/fold/compact/delete changes a listing, the stamp moves,
   // and the next serve rebuilds; a same-version serve reuses the maps
   // with ZERO pin jobs. Bounded: one live entry per key, replaced in
@@ -960,7 +766,7 @@ object GraphAnn {
     def stampNow() = (Seq(path, path + "_delta", path + "_tombstones") ++
         rungPaths.flatMap(p => Seq(p, p + "_delta")))
       .map(dirStamp(spark, _)).mkString("|") + "\u0000" +
-      corpusKey(corpus.select(col(idCol), col(embCol)))
+      graft.ops.ResultCache.cacheKey(corpus.select(col(idCol), col(embCol)))
     pinCache.get(key) match {
       case Some((s, pin)) if s == stampNow() => pin
       case _ => pinLock(key).synchronized {
@@ -985,14 +791,13 @@ object GraphAnn {
             }
         // hash-min entries: Spark's xxhash64(id) (seed 42) asc, id asc
         def hashEntries(m: Map[Long, Array[Long]], e: Int): Seq[Long] =
-          m.keys.toSeq.sortBy(id => (org.apache.spark.sql.catalyst
-            .expressions.XXH64.hashLong(id, 42L), id)).take(e)
+          m.keys.toSeq.sortBy(id => (XXH64.hashLong(id, 42L), id)).take(e)
         val rungs = rungPaths.filter(p => pathExists(spark, p)).map { p =>
           val m = adjOf(p)
-          (m, hashEntries(m, descentBeam))
+          (p, m, hashEntries(m, descentBeam))
         }
         val adj0 = adjOf(path)
-        val pin = ResidentPin(rungs, adj0, hashEntries(adj0, entries),
+        val pin = ResidentPin(path, rungs, adj0, hashEntries(adj0, entries),
           vecPin(corpus, embCol, idCol),
           readNswTombstones(spark, path).collect().map(_.getLong(0)).toSet)
         pinBuildCounter.incrementAndGet()
@@ -1002,6 +807,14 @@ object GraphAnn {
       }
     }
   }
+
+  /** The pin a default search of the ladder holds (16 entries, descent
+    * beam 4, current version) — the pre-mutation view the append and the
+    * tombstone fold compute their delta rows from. */
+  private def servingPin(spark: SparkSession, path: String, corpus: DataFrame,
+      embCol: String, idCol: String, rungPaths: Seq[String]): ResidentPin =
+    residentPin(spark, path, corpus, embCol, idCol, entries = 16, rungPaths,
+      descentBeam = 4, Long.MaxValue)
 
   /** The served tail every search shares: pin the index version, walk
     * each query on the calling thread, and keep each query's k best

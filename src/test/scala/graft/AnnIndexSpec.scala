@@ -1614,16 +1614,73 @@ class AnnIndexSpec extends SparkSpec {
     assert(again === hier, "hnsw search is not deterministic")
   }
 
+  /** MD5 of a rung's merged adjacency: one "node:n1,n2,…" line per node
+    * (neighbours in stored order), lines sorted. */
+  private def adjacencyDigest(path: String): String = {
+    val lines = graft.vector.GraphAnn.readNswAdjacency(spark, path).collect()
+      .map(r => s"${r.getLong(0)}:${r.getSeq[Long](1).mkString(",")}").sorted
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(lines.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  /** Runs `body` and counts the Spark jobs it started, tagged by job
+    * description; the listener bus is asynchronous and FIFO, so once a
+    * later marker job is seen every job of `body` has been seen too. */
+  private def jobsRunBy[A](tag: String)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(
+          j.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription(tag)
+      val out = try body finally sc.setJobDescription(null)
+      sc.setJobDescription(tag + "-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(tag + "-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(tag + "-marker"), "listener never saw the marker job")
+      (out, seen.asScala.count(_ == tag))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("hnsw append: ladder membership invariant survives, appended nodes findable") {
     import graft.vector.GraphAnn
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
     val base = e.filter(col("vec_id") < 400)
     val arrivals = e.filter(col("vec_id") >= 400)
     val path = Files.createTempDirectory("hnsw_appspec").toString + "/graph"
+    val rungs = Seq(path, path + "_l1", path + "_l2")
     GraphAnn.buildHnswGraph(base, "embedding", "vec_id", AnnIndex.defaultLsh,
       m = 8, path, fanout = 8, maxLevel = 2)
-    GraphAnn.appendToHnswGraph(spark, arrivals, "embedding", "vec_id",
-      AnnIndex.defaultLsh, m = 8, path, base, fanout = 8, maxLevel = 2)
+    // a serve of the base holds the pre-append pin, as in a serving
+    // session; the append computes its delta rows from that pin
+    val q0 = base.filter(col("vec_id") === 0L)
+      .select("embedding").head().getSeq[Float](0).toArray
+    GraphAnn.hnswSearch(spark, path, base, "embedding", "vec_id", q0, k = 5)
+      .collect()
+    val b0 = GraphAnn.pinBuilds
+    val (_, appendJobs) = jobsRunBy("hnsw-append") {
+      GraphAnn.appendToHnswGraph(spark, arrivals, "embedding", "vec_id",
+        AnnIndex.defaultLsh, m = 8, path, base, fanout = 8, maxLevel = 2)
+    }
+    assert(GraphAnn.pinBuilds === b0, "the append rebuilt the warm pin")
+    // the arrivals collect, then two jobs per touched rung's delta leaf
+    // (its node_id exchange and the write)
+    val touched = rungs.count(p => new java.io.File(p + "_delta").exists)
+    assert(touched >= 2, "fixture: arrivals must reach an upper rung")
+    assert(appendJobs === 1 + 2 * touched,
+      s"append ran $appendJobs Spark jobs for $touched touched rungs")
+    // every rung's merged adjacency, neighbour order included
+    assert(rungs.map(adjacencyDigest) === Seq(
+      "bab350a7665eafd962468159ad1cecb2", "c4d630a118d43f9d42454db9eec32aee",
+      "49b4a8164c48c6e46e72a0777bfb2001"),
+      "appended adjacency drifted from the golden rows")
     // every layer's merged membership = the hash-selected subset of the
     // FULL corpus — append must keep the same pure level function
     for (l <- 1 to 2) {
@@ -1681,6 +1738,8 @@ class AnnIndexSpec extends SparkSpec {
     // sidecar truncated; the deleted ids are gone from the merged view —
     // no row of their own, no reference from any survivor's list
     assert(!new java.io.File(path + "_tombstones").exists())
+    assert(adjacencyDigest(path) === "039d7bd226fe8c50e1b8ac5a32e66796",
+      "folded adjacency drifted from the golden rows")
     val merged = GraphAnn.readNswAdjacency(spark, path).cache()
     assert(merged.filter(col("node_id").between(100000L, 100004L)).count() === 0)
     assert(merged.filter(exists(col("neighbors"),
@@ -1712,6 +1771,10 @@ class AnnIndexSpec extends SparkSpec {
     GraphAnn.foldHnswTombstones(spark, path, e, "embedding", "vec_id",
       m = 8, maxLevel = 2)
     assert(!new java.io.File(path + "_tombstones").exists())
+    assert(Seq(path, path + "_l1", path + "_l2").map(adjacencyDigest) === Seq(
+      "1cd1419731a946e57224a807f51ba86e", "8b197e9dc65197d69835de996e2167d6",
+      "d41d8cd98f00b204e9800998ecf8427e"),
+      "folded adjacency drifted from the golden rows")
     for (rung <- Seq(path, path + "_l1", path + "_l2")) {
       val merged = GraphAnn.readNswAdjacency(spark, rung)
       assert(merged.filter(col("node_id").isin(l2ids: _*)).count() === 0,
@@ -1751,6 +1814,8 @@ class AnnIndexSpec extends SparkSpec {
     GraphAnn.appendToNswGraph(spark, arrivals, "embedding", "vec_id",
       AnnIndex.defaultLsh, m = 8, path, base)
     assert(baseListing === before, "append must not rewrite base graph files")
+    assert(adjacencyDigest(path) === "40d18bb413fa6623e0197f8ce98f6977",
+      "appended adjacency drifted from the golden rows")
     val merged = GraphAnn.readNswAdjacency(spark, path)
     assert(merged.count() === e.count(), "every node needs an adjacency row")
     // an appended node must be FINDABLE: its self-query reaches it through

@@ -44,6 +44,24 @@ class ResultCacheSpec extends SparkSpec {
       "cache served a stale result after the input changed")
   }
 
+  test("a frame listed before a file lands and one listed after it get different keys") {
+    val root = Files.createTempDirectory("rescache_listed").toString
+    val input = Files.createTempDirectory("rescache_listed_in").toString + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(input)
+    // listed now: this frame keeps reading the two-row file list it
+    // captured, whatever lands in the directory later
+    val stale = spark.read.parquet(input)
+    Seq((3L, "c")).toDF("id", "v").write.mode("append").parquet(input)
+    val fresh = spark.read.parquet(input)
+    assert(ResultCache.cacheKey(stale) !== ResultCache.cacheKey(fresh),
+      "a stale and a fresh listing of one directory share a key")
+    assert(ResultCache.cached(spark, stale, root).collect().map(_.getLong(0))
+      .sorted.toSeq === Seq(1L, 2L))
+    assert(ResultCache.cached(spark, fresh, root).collect().map(_.getLong(0))
+      .sorted.toSeq === Seq(1L, 2L, 3L),
+      "the stale frame's entry was served to the fresh frame")
+  }
+
   test("vacuum deletes orphans, never servable entries; hits survive it") {
     val root = Files.createTempDirectory("rescache_vac").toString
     val input = Files.createTempDirectory("rescache_vac_in").toString + "/t"
