@@ -1,7 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
 
 import graft.ops.{Chunking, Ingest}
@@ -41,53 +42,64 @@ object IngestPipeline {
   def lsh(cfg: Config): RandomHyperplaneLsh =
     new RandomHyperplaneLsh(cfg.dim, cfg.lshBits, cfg.seed)
 
-  /** One incremental run; returns reconciliation counters (A1). */
+  /** One incremental run; returns reconciliation counters (A1). Every
+    * counter comes from a job that moves data, never from a scan of its
+    * own: `docsIn` and `docsNew` are observed on the documents before and
+    * after the processed-key anti-join as the index write fills the
+    * `newDocs` cache; `chunksNew` is observed on the rows that write lands
+    * (a count of its own, apart from the embed accumulator that yields
+    * `embedded`). The state table and the index ids are read with their
+    * known schemas, so no footer-inference job runs either.
+    */
   def run(docs: DataFrame, cfg: Config,
       embedCounter: Option[LongAccumulator] = None): RunStats = {
     val spark = docs.sparkSession
-    val docsIn = docs.count()
+    val (docsSeen, docsFresh) = (Observation(), Observation())
 
     // J2: skip docs processed by a previous run
-    val newDocs = Ingest.filterProcessed(docs, cfg.statePath, "doc_id").cache()
-    val docsNew = newDocs.count()
+    val newDocs = Ingest.filterProcessed(
+        docs.observe(docsSeen, count(lit(1)).as("n")), cfg.statePath, "doc_id")
+      .observe(docsFresh, count(lit(1)).as("n")).cache()
+    try {
+      // V1: chunk (native Generator, narrow map)
+      val chunks = Chunking.chunkDocuments(newDocs, cfg.chunkSize, cfg.overlap)
 
-    // V1: chunk (native Generator, narrow map)
-    val chunks = Chunking.chunkDocuments(newDocs, cfg.chunkSize, cfg.overlap)
-
-    // J1: drop chunk ids already present in the index. Only a MISSING
-    // index means "first run" — a corrupt index must fail loudly, not
-    // silently re-ingest (same contract as Ingest.filterProcessed).
-    val existingIds: Option[DataFrame] =
-      try Some(spark.read.parquet(cfg.indexPath).select("chunk_id"))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => None
+      // J1: drop chunk ids already present in the index. Only a MISSING
+      // index means "first run" — a corrupt index must fail loudly, not
+      // silently re-ingest (same contract as Ingest.filterProcessed).
+      // The ids are read as the chunks type them, with no inference job.
+      val existingIds: Option[DataFrame] =
+        try Some(spark.read.schema(StructType(Seq(chunks.schema("chunk_id"))))
+          .parquet(cfg.indexPath).select("chunk_id"))
+        catch {
+          case e: org.apache.spark.sql.AnalysisException
+              if e.getCondition == "PATH_NOT_FOUND" => None
+        }
+      val newChunks = existingIds match {
+        case Some(ids) => chunks.join(ids, Seq("chunk_id"), "left_anti")
+        case None => chunks
       }
-    val newChunks = existingIds match {
-      case Some(ids) => chunks.join(ids, Seq("chunk_id"), "left_anti")
-      case None => chunks
-    }
 
-    // V2: embed ONLY the J1 survivors (cost-dominant stage stays last)
-    val embed = udf { (t: String) =>
-      embedCounter.foreach(_.add(1))
-      Embedding.hashingEmbed(t, cfg.dim)
-    }
-    val embedded = newChunks.withColumn("embedding", embed(col("chunk_text")))
+      // V2: embed ONLY the J1 survivors (cost-dominant stage stays last)
+      val embed = udf { (t: String) =>
+        embedCounter.foreach(_.add(1))
+        Embedding.hashingEmbed(t, cfg.dim)
+      }
+      val embedded = newChunks.withColumn("embedding", embed(col("chunk_text")))
 
-    // V5/K2: append to the LSH-bucketed index
-    val indexed = IndexBuilder.withLshBucket(embedded, "embedding", lsh(cfg))
-    indexed.write.mode("append").partitionBy("bucket").parquet(cfg.indexPath)
+      // V5/K2: append to the LSH-bucketed index, counting the rows landed
+      val written = Observation()
+      IndexBuilder.withLshBucket(embedded, "embedding", lsh(cfg))
+        .observe(written, count(lit(1)).as("n"))
+        .write.mode("append").partitionBy("bucket").parquet(cfg.indexPath)
 
-    val chunksNew = spark.read.parquet(cfg.indexPath).count() -
-      existingIds.map(_.count()).getOrElse(0L)
+      // K5: mark docs processed only after the index write succeeded
+      Ingest.markProcessed(newDocs.select(col("doc_id")), cfg.statePath, "doc_id")
 
-    // K5: mark docs processed only after the index write succeeded
-    Ingest.markProcessed(newDocs.select(col("doc_id")), cfg.statePath, "doc_id")
-    newDocs.unpersist()
-
-    RunStats(docsIn, docsNew, chunksNew,
-      embedCounter.map(_.value.longValue()).getOrElse(-1L))
+      RunStats(docsSeen.get("n").asInstanceOf[Long], docsFresh.get("n").asInstanceOf[Long],
+        written.get("n").asInstanceOf[Long],
+        embedCounter.map(_.value.longValue()).getOrElse(-1L))
+    } finally newDocs.unpersist()
   }
 
   /** Streaming ingest: the same exactly-once pipeline driven by a

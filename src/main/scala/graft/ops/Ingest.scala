@@ -149,18 +149,22 @@ object Ingest extends QueryModule {
   def filterProcessed(inputs: DataFrame, statePath: String, keyCol: String): DataFrame = {
     val spark = inputs.sparkSession
     // Only a missing state table means "first run". Anything else —
-    // including a corrupt table (AnalysisException too, but a different
-    // error condition) — must fail loudly: treating it as empty would
-    // silently re-ingest everything and break exactly-once-per-key.
+    // including a corrupt table — must fail loudly: treating it as empty
+    // would silently re-ingest everything and break exactly-once-per-key.
+    // The table holds the inputs' key column as markProcessed wrote it, so
+    // it is read with that schema: inferring it costs a footer-read Spark
+    // job per call. A corrupt file still fails the scan, and a table with
+    // no data file (markProcessed always writes one) fails here.
     val state =
-      try spark.read.parquet(statePath).select(col(keyCol))
+      try Some(spark.read.schema(StructType(Seq(inputs.schema(keyCol)))).parquet(statePath))
       catch {
         case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          spark.emptyDataFrame.withColumn(keyCol, lit(null))
+            if e.getCondition == "PATH_NOT_FOUND" => None
       }
-    if (state.schema.isEmpty) inputs
-    else inputs.join(state, Seq(keyCol), "left_anti")
+    state.fold(inputs) { st =>
+      require(st.inputFiles.nonEmpty, s"state table $statePath holds no data file")
+      inputs.join(st, Seq(keyCol), "left_anti")
+    }
   }
 
   def markProcessed(df: DataFrame, statePath: String, keyCol: String): Unit =

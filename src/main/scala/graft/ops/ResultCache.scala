@@ -1,7 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import graft.{QueryModule, Tables}
 
@@ -14,13 +15,17 @@ import graft.{QueryModule, Tables}
   * The canonicalized OPTIMIZED plan normalizes attribute ids and
   * carries resolved relations (the IVF memoization lesson: an unresolved
   * canonicalized plan is path-blind), and the signature folds every leaf
-  * relation's (path, file count, total bytes, max mtime) — so editing,
-  * appending to, or swapping an input produces a NEW key and the stale
-  * entry is simply never read again (retention vacuums it; serving
-  * correctness never depends on invalidation races). The stamp names a
-  * directory as it is NOW, while a frame reads the file list it captured
-  * when it was created, so the signature also digests that list: a frame
-  * listed before a write and one listed after it never share a key.
+  * relation's roots and the file listing the frame captured when it was
+  * created — each file's path, length and mtime — so editing, appending
+  * to, or swapping an input and reading it again produces a NEW key and
+  * the stale entry is simply never read again (retention vacuums it;
+  * serving correctness never depends on invalidation races). The key is
+  * what the frame reads, not what its root holds now: a frame listed
+  * before a write and one listed after it never share a key, and a frame
+  * keeps its key when a file lands in its root after it was listed. No
+  * root is listed to compute it; only a relation whose file index lists
+  * on every scan (a catalog table) is stamped by its roots as they are at
+  * call time (file count, total bytes, max mtime).
   *
   * Contract: a cache hit returns the same ROWS, not the same row order —
   * a parquet round-trip, like any exchange, fixes no order. Callers
@@ -36,12 +41,22 @@ object ResultCache extends QueryModule {
     val sig = plan.collect {
       case lr: LogicalRelation => lr.relation match {
         case fs: HadoopFsRelation =>
-          fs.location.rootPaths.map { root =>
-            val st = graft.FileListing.stamp(
-              df.sparkSession.sparkContext.hadoopConfiguration, root)
-              .getOrElse(graft.FileListing.Stamp(0L, 0L, 0L))
-            s"$root#$st"
-          }.mkString(",") + "#files=" + md5(fs.location.inputFiles.sorted.mkString("\n"))
+          fs.location match {
+            // the listing the frame captured is what it reads: its files
+            // with their lengths and mtimes, whatever landed since
+            case listed: PartitioningAwareFileIndex =>
+              listed.rootPaths.mkString(",") + "#files=" + md5(listed.allFiles()
+                .map(f => s"${f.getPath}#${f.getLen}#${f.getModificationTime}")
+                .sorted.mkString("\n"))
+            // an index that lists per scan reads its roots as they are now
+            case perScan =>
+              perScan.rootPaths.map { root =>
+                val st = graft.FileListing.stamp(
+                  df.sparkSession.sparkContext.hadoopConfiguration, root)
+                  .getOrElse(graft.FileListing.Stamp(0L, 0L, 0L))
+                s"$root#$st"
+              }.mkString(",") + "#files=" + md5(perScan.inputFiles.sorted.mkString("\n"))
+          }
         case other => other.toString
       }
       // LocalRelations carry their rows OUTSIDE the canonicalized plan

@@ -1,13 +1,13 @@
 package graft.vector
 
 import scala.collection.immutable.ArraySeq
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, ShortType}
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Graph-based ANN — the NSW shape (Malkov et al. 2014; HNSW's layer 0,
   * and the index family behind DiskANN/Vamana): each vector keeps edges
@@ -224,15 +224,22 @@ object GraphAnn {
     * read; overwrite makes re-landing a generation idempotent rather than
     * duplicating rows). NULL neighbors is a removal marker. No rows, no
     * leaf.
+    *
+    * The leaf holds two node_id hash files: the driver splits the rows by
+    * Spark's hash partitioning (Murmur3 seed 42, pmod 2 — what
+    * `repartition(2, node_id)` computes), each file in the rows' order, so
+    * the write is one Spark job with no exchange.
     */
   private def writeRows(spark: SparkSession, rows: Seq[(Long, Array[Long])],
       path: String): Unit =
-    if (rows.nonEmpty)
-      spark.createDataFrame(rows.map { case (id, ns) =>
-          org.apache.spark.sql.Row(id, if (ns == null) null else ns.toSeq) }.asJava,
-          adjSchema)
-        .repartition(2, col("node_id"))
+    if (rows.nonEmpty) {
+      val (p0, p1) = rows.map { case (id, ns) =>
+          org.apache.spark.sql.Row(id, if (ns == null) null else ns.toSeq) }
+        .partition(r => Math.floorMod(Murmur3_x86_32.hashLong(r.getLong(0), 42), 2) == 0)
+      spark.createDataFrame(
+          spark.sparkContext.parallelize(Seq(p0, p1), 2).flatMap(identity), adjSchema)
         .write.mode("overwrite").parquet(path + s"_delta/seq=${nextDeltaSeq(spark, path)}")
+    }
 
   /** Delete vectors from a persisted NSW graph — a tombstone sidecar
     * append, the same O(|deleted|) delete the LSH/IVF/BM25 families use;
@@ -419,10 +426,11 @@ object GraphAnn {
 
   // ---- corpus vector pin ----------------------------------------------
   // The corpus' (id, embedding) projection collected ONCE per corpus
-  // signature (ResultCache.cacheKey — plan + input-file stamps + the
-  // frame's own file list, so any upsert/delete/planted-copy change
-  // invalidates, and a frame listed before a write never fills the pin
-  // of one listed after it) into a
+  // signature (ResultCache.cacheKey — plan + the file listing the frame
+  // captured, with lengths and mtimes, so any upsert/delete/planted-copy
+  // change invalidates, a frame listed before a write never fills the pin
+  // of one listed after it, and a file landing in the root after a frame
+  // was listed does not move that frame's key) into a
   // driver map: the vector side of every resident pin, shared by all pins
   // over the same corpus version. Resident (id, emb) per indexed shard is
   // exactly the memory bound hnswlib requires of a serving node; the cold
@@ -531,7 +539,9 @@ object GraphAnn {
     *
     * Cost scales with |new|·M rewritten rows plus one pin of the
     * pre-append version, never a graph rewrite; Spark runs the arrivals
-    * collect and the per-rung writes. A corpus-scale backfill belongs in
+    * collect and one write job per touched rung (writeRows — no exchange),
+    * and no pin job when a serve of the same corpus frame already holds
+    * the pin. A corpus-scale backfill belongs in
     * `buildHnswGraph`, the batch rebuild.
     */
   def appendToHnswGraph(spark: SparkSession, newNodes: DataFrame,
@@ -710,8 +720,10 @@ object GraphAnn {
   // entry/descent params); validated by a STAMP that folds the FS listing
   // of the index dir + every sidecar (_delta, _tombstones, ladder rungs)
   // AND the corpus' signature (ResultCache.cacheKey — LocalRelation rows
-  // and captured file lists digested, so planted-copy corpora and frames
-  // listed before a write invalidate too).
+  // and captured file listings digested, so planted-copy corpora and
+  // frames listed after a write invalidate too, while the frame a serve
+  // holds keeps its pin when a re-ingest lands files in its root: the
+  // append that follows reuses the serve's pin).
   // Any append/fold/compact/delete changes a listing, the stamp moves,
   // and the next serve rebuilds; a same-version serve reuses the maps
   // with ZERO pin jobs. Bounded: one live entry per key, replaced in

@@ -1623,32 +1623,6 @@ class AnnIndexSpec extends SparkSpec {
       .digest(lines.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
-  /** Runs `body` and counts the Spark jobs it started, tagged by job
-    * description; the listener bus is asynchronous and FIFO, so once a
-    * later marker job is seen every job of `body` has been seen too. */
-  private def jobsRunBy[A](tag: String)(body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(
-          j.properties.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription(tag)
-      val out = try body finally sc.setJobDescription(null)
-      sc.setJobDescription(tag + "-marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains(tag + "-marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.contains(tag + "-marker"), "listener never saw the marker job")
-      (out, seen.asScala.count(_ == tag))
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("hnsw append: ladder membership invariant survives, appended nodes findable") {
     import graft.vector.GraphAnn
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
@@ -1670,12 +1644,21 @@ class AnnIndexSpec extends SparkSpec {
         AnnIndex.defaultLsh, m = 8, path, base, fanout = 8, maxLevel = 2)
     }
     assert(GraphAnn.pinBuilds === b0, "the append rebuilt the warm pin")
-    // the arrivals collect, then two jobs per touched rung's delta leaf
-    // (its node_id exchange and the write)
+    // the arrivals collect, then one write job per touched rung's delta
+    // leaf (its two node_id hash files are split on the driver)
     val touched = rungs.count(p => new java.io.File(p + "_delta").exists)
     assert(touched >= 2, "fixture: arrivals must reach an upper rung")
-    assert(appendJobs === 1 + 2 * touched,
+    assert(appendJobs === 1 + touched,
       s"append ran $appendJobs Spark jobs for $touched touched rungs")
+    // each delta leaf holds the two node_id hash partitions a
+    // `repartition(2, node_id)` would: part-0000<p> only ids of hash p
+    for (r <- rungs; leaf <- Option(new java.io.File(r + "_delta").listFiles).toSeq.flatten;
+         f <- leaf.listFiles if f.getName.startsWith("part-")) {
+      val p = f.getName.stripPrefix("part-").take(5).toInt
+      assert(spark.read.parquet(f.getPath).select(pmod(hash(col("node_id")), lit(2)))
+        .distinct().collect().map(_.getInt(0)).forall(_ == p),
+        s"delta file $f holds ids of another hash partition")
+    }
     // every rung's merged adjacency, neighbour order included
     assert(rungs.map(adjacencyDigest) === Seq(
       "bab350a7665eafd962468159ad1cecb2", "c4d630a118d43f9d42454db9eec32aee",
@@ -1700,6 +1683,30 @@ class AnnIndexSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     assert(got.head === target,
       s"appended node $target not reachable via hnsw, top-5 = ${got.toSeq}")
+  }
+
+  test("hnsw append reuses the serve's pin after a file lands in the served corpus root") {
+    import graft.vector.GraphAnn
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val root = Files.createTempDirectory("hnsw_append_pin").toString
+    e.filter(col("vec_id") < 400).write.parquet(root + "/store")
+    val corpus = spark.read.parquet(root + "/store")
+    val path = root + "/graph"
+    GraphAnn.buildHnswGraph(corpus, "embedding", "vec_id", AnnIndex.defaultLsh,
+      m = 8, path, fanout = 8, maxLevel = 2)
+    val q0 = e.filter(col("vec_id") === 0L)
+      .select("embedding").head().getSeq[Float](0).toArray
+    GraphAnn.hnswSearch(spark, path, corpus, "embedding", "vec_id", q0, k = 5)
+      .collect()
+    // the arrivals land in the store after the serve listed it, as a
+    // re-ingest lands them before the append; the served frame still
+    // reads its own listing, so its pin is still the pre-append view
+    val arrivals = e.filter(col("vec_id") >= 400)
+    arrivals.write.mode("append").parquet(root + "/store")
+    val b0 = GraphAnn.pinBuilds
+    GraphAnn.appendToHnswGraph(spark, arrivals, "embedding", "vec_id",
+      AnnIndex.defaultLsh, m = 8, path, corpus, fanout = 8, maxLevel = 2)
+    assert(GraphAnn.pinBuilds === b0, "the append rebuilt the pin its serve holds")
   }
 
   test("nsw delete: tombstones hide emission but still route the walk") {
@@ -1956,39 +1963,17 @@ class AnnIndexSpec extends SparkSpec {
     // first serves build both pins
     val (nsw0, hnsw0, others0, filtered0) = (nsw(), hnsw(), others(), filtered())
     val b0 = GraphAnn.pinBuilds
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(
-          j.properties.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription("warm-serve")
-      val (nsw1, hnsw1, others1) =
-        try (nsw(), hnsw(), others()) finally sc.setJobDescription(null)
-      assert(nsw1 === nsw0 && hnsw1 === hnsw0 && others1 === others0)
-      // a metadata predicate is the one job a warm walk may run: its
-      // pushed `id IN visited` probe
-      sc.setJobDescription("warm-allowed")
-      val filtered1 = try filtered() finally sc.setJobDescription(null)
-      assert(filtered1 === filtered0)
-      assert(filtered1.nonEmpty && filtered1.forall(_.getLong(0) % 2 == 0))
-      // the listener bus is asynchronous and FIFO: once a later marker
-      // job is seen, every job the warm serves started has been seen too
-      sc.setJobDescription("served-marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains("served-marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.contains("served-marker"), "listener never saw the marker job")
-      assert(seen.asScala.count(_ == "warm-serve") === 0,
-        "a warm served walk ran Spark jobs")
-      assert(seen.asScala.count(_ == "warm-allowed") === 1,
-        "a warm filtered walk must run exactly its one predicate probe")
-    } finally sc.removeSparkListener(listener)
+    val ((nsw1, hnsw1, others1), warmJobs) =
+      jobsRunBy("warm-serve")((nsw(), hnsw(), others()))
+    assert(nsw1 === nsw0 && hnsw1 === hnsw0 && others1 === others0)
+    assert(warmJobs === 0, "a warm served walk ran Spark jobs")
+    // a metadata predicate is the one job a warm walk may run: its
+    // pushed `id IN visited` probe
+    val (filtered1, allowedJobs) = jobsRunBy("warm-allowed")(filtered())
+    assert(filtered1 === filtered0)
+    assert(filtered1.nonEmpty && filtered1.forall(_.getLong(0) % 2 == 0))
+    assert(allowedJobs === 1,
+      "a warm filtered walk must run exactly its one predicate probe")
     assert(GraphAnn.pinBuilds === b0, "a warm serve rebuilt its pin")
   }
 

@@ -469,26 +469,11 @@ class CompactionSpec extends SparkSpec {
       IndexBuilder.buildLshIndex(emb, "embedding", lsh, dir)
       dir
     }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      })
-    // async listener bus: settle until stable (the ProfileQuery discipline)
-    def settled(): Int = {
-      var prev = -1; var cur = jobs.get(); var waited = 0
-      while (cur != prev && waited < 100) {
-        Thread.sleep(100); waited += 1; prev = cur; cur = jobs.get()
-      }
-      cur
-    }
     def foldJobs(dir: String, doomed: Seq[Long]): (Int, Long) = {
       doomed.toDF("vec_id").write.mode("overwrite").parquet(dir + "_tombstones")
-      val j0 = settled()
-      val stats = graft.ingest.Compaction.foldTombstones(spark, dir, dir + "_tombstones")
-      (settled() - j0, stats.rowsDeleted)
+      val (stats, jobs) = jobsRunBy("fold")(
+        graft.ingest.Compaction.foldTombstones(spark, dir, dir + "_tombstones"))
+      (jobs, stats.rowsDeleted)
     }
     val (fewJobs, fewDeleted) = foldJobs(freshIndex("few"), Seq(0L, 1L))
     val (manyJobs, manyDeleted) = foldJobs(freshIndex("many"), (0L until 200L).toSeq)

@@ -92,6 +92,13 @@ class IngestSpec extends SparkSpec {
     intercept[Exception] {
       Ingest.filterProcessed(batch, dir, "key").count()
     }
+    // a table directory left with no data file (markProcessed always
+    // writes one) is torn state too, not a first run
+    val torn = Files.createTempDirectory("torn_state").toString + "/keys"
+    Files.createDirectories(java.nio.file.Paths.get(torn, "_temporary"))
+    intercept[Exception] {
+      Ingest.filterProcessed(batch, torn, "key").count()
+    }
   }
 
   test("P4: metadata_coercion driver query emits coerced entries") {

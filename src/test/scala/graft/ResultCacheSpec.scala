@@ -62,6 +62,17 @@ class ResultCacheSpec extends SparkSpec {
       "the stale frame's entry was served to the fresh frame")
   }
 
+  test("a frame keeps its key when a file lands in its root after it was listed") {
+    val input = Files.createTempDirectory("rescache_kept_in").toString + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(input)
+    val listed = spark.read.parquet(input)
+    val key = ResultCache.cacheKey(listed)
+    Seq((3L, "c")).toDF("id", "v").write.mode("append").parquet(input)
+    assert(ResultCache.cacheKey(listed) === key,
+      "a file the frame never reads moved its key")
+    assert(listed.count() === 2L, "the frame reads the listing it captured")
+  }
+
   test("vacuum deletes orphans, never servable entries; hits survive it") {
     val root = Files.createTempDirectory("rescache_vac").toString
     val input = Files.createTempDirectory("rescache_vac_in").toString + "/t"

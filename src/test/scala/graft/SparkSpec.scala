@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for all suites (one JVM-wide session — Spark's
   * getOrCreate caches it, so every suite reuses the first).
@@ -9,6 +10,32 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` and counts the Spark jobs it started, tagged by job
+    * description; the listener bus is asynchronous and FIFO, so once a
+    * later marker job is seen every job of `body` has been seen too. */
+  def jobsRunBy[A](tag: String)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(
+          j.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription(tag)
+      val out = try body finally sc.setJobDescription(null)
+      sc.setJobDescription(tag + "-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(tag + "-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(tag + "-marker"), "listener never saw the marker job")
+      (out, seen.asScala.count(_ == tag))
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
