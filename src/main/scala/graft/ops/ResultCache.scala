@@ -45,8 +45,8 @@ object ResultCache extends QueryModule {
             // the listing the frame captured is what it reads: its files
             // with their lengths and mtimes, whatever landed since
             case listed: PartitioningAwareFileIndex =>
-              listed.rootPaths.mkString(",") + "#files=" + md5(listed.allFiles()
-                .map(f => s"${f.getPath}#${f.getLen}#${f.getModificationTime}")
+              listed.rootPaths.mkString(",") + "#files=" + md5(listing(listed)
+                .map { case (f, (len, mtime)) => s"$f#$len#$mtime" }
                 .sorted.mkString("\n"))
             // an index that lists per scan reads its roots as they are now
             case perScan =>
@@ -68,6 +68,38 @@ object ResultCache extends QueryModule {
         s"local#${loc.data.length}#${md5(loc.data.map(_.toString).mkString("\n"))}"
     }.mkString("|")
     md5(plan.canonicalized.toString + "\u0000" + sig)
+  }
+
+  /** The listing a file index captured: each file's path, length, mtime. */
+  private def listing(listed: PartitioningAwareFileIndex): Seq[(String, (Long, Long))] =
+    listed.allFiles().toSeq.map(f =>
+      f.getPath.toString -> (f.getLen, f.getModificationTime))
+
+  /** cacheKey split in two for a frame that reads ONE listed file
+    * relation and nothing else: `planKey` digests the canonicalized
+    * optimized plan and the relation's roots, `files` is the listing the
+    * frame captured (path → (length, mtime)). Two frames with one
+    * planKey read the same plan over the same roots and differ only in
+    * the files they captured, so a consumer can tell a frame whose
+    * listing only GREW since an earlier one (every earlier file still
+    * listed with its length and mtime) and read just the added files.
+    * None for any other frame (several relations, a LocalRelation, an
+    * index that lists per scan). cacheKey itself is unchanged.
+    */
+  final case class ListingSplit(planKey: String, files: Map[String, (Long, Long)])
+
+  def listingSplit(df: DataFrame): Option[ListingSplit] = {
+    val plan = df.queryExecution.optimizedPlan
+    plan.collectLeaves() match {
+      case Seq(LogicalRelation(fs: HadoopFsRelation, _, _, _, _)) => fs.location match {
+        case listed: PartitioningAwareFileIndex =>
+          Some(ListingSplit(
+            md5(plan.canonicalized.toString + "\u0000" + listed.rootPaths.mkString(",")),
+            listing(listed).toMap))
+        case _ => None
+      }
+      case _ => None
+    }
   }
 
   private def md5(s: String): String =

@@ -39,22 +39,31 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *  - H bounded hops; each hop expands the beam-best B unexpanded nodes
   *    by map lookup, scores their new neighbors against the query, and
   *    keeps the global best B.
-  *  - The pin is built once per index version and validated by an FS +
-  *    corpus stamp, so a warm search runs no Spark job; a metadata
-  *    predicate (`allowed`) adds one pushed `id IN visited` probe.
+  *  - The pin is the graph view of the index version (validated by an FS
+  *    stamp of the index directories) plus the corpus vectors (vecPin,
+  *    keyed by the corpus frame), so a warm search runs no Spark job; a
+  *    metadata predicate (`allowed`) adds one pushed `id IN visited`
+  *    probe.
   *
   * Mutations (the hnswlib insert and delete): append and tombstone fold
   * compute their delta rows on the driver from the same resident pin of
   * the pre-mutation version, and Spark only lands them as one
-  * seq-stamped delta leaf per touched rung. Spark jobs remain for the
-  * batch build, those delta writes, compaction and vacuum.
+  * seq-stamped delta leaf per touched rung. Each then publishes its
+  * post-write graph view — the pinned maps overlaid with exactly the rows
+  * it wrote — so the next serve builds nothing, and its corpus frame's
+  * vectors grow by reading only the files added since the pinned frame
+  * was listed. Spark jobs remain for the batch build, those delta writes,
+  * that added-file read, compaction and vacuum.
   *
   * Memory: the driver holds the corpus' (id, embedding) map (vecPin:
   * |corpus| × dim floats per live corpus version, at most 16) plus, per
   * pinned index version, every rung's merged adjacency (ids and ≤ 2M
   * neighbor ids each) and the tombstone set — the hnswlib serving-node
-  * bound, which searches and mutations share. Corpora past one node's
-  * memory serve per shard.
+  * bound, which searches and mutations share. A corpus version grown
+  * from an earlier one by added files shares that version's map entries
+  * (immutable `++`), so a run of appends holds one corpus' worth of
+  * vectors plus the arrivals, not one copy per version. Corpora past one
+  * node's memory serve per shard.
   *
   * Determinism: seeded hyperplanes, windowed ties by id, fixed E/B/H —
   * identical data in, identical graph and identical search result out.
@@ -206,6 +215,13 @@ object GraphAnn {
     * name (`_delta/seq=<n>` partition leaves), so allocating the next one
     * is a filesystem listing — the previous row-level seq column cost one
     * full delta read + aggregate job per rung per append.
+    *
+    * Single-writer contract: at most one mutation (append, fold, delete,
+    * compaction, vacuum) of a graph runs at a time; serves may run
+    * concurrently with it. Two racing writers could both list seq n and
+    * land into one leaf, and a mutation's published view (`publish`)
+    * would then miss the other writer's rows. Callers serialize writes
+    * per graph, as a single ingest driver does.
     */
   private def nextDeltaSeq(spark: SparkSession, path: String): Long = {
     val hp = new org.apache.hadoop.fs.Path(path + "_delta")
@@ -256,7 +272,8 @@ object GraphAnn {
       .write.mode("append").parquet(path + "_tombstones")
   }
 
-  /** Tombstoned node ids (empty when no delete is pending). */
+  /** Tombstoned node ids (empty when no delete is pending). The pin reads
+    * the sidecar with a plain scan and dedups on the driver instead. */
   def readNswTombstones(spark: SparkSession, path: String): DataFrame =
     if (pathExists(spark, path + "_tombstones"))
       spark.read.schema(tombSchema).parquet(path + "_tombstones")
@@ -286,7 +303,10 @@ object GraphAnn {
     * pre-fold version — the pin a serve of the graph holds: its merged
     * adjacency finds the in-neighbors, its vectors score the rewrite and
     * its tombstone set is the deleted set — and land as ONE seq-stamped
-    * delta leaf per touched rung. The sidecar truncates LAST (the
+    * delta leaf per touched rung, after which the fold publishes its
+    * post-fold view (those rows overlaid, the dead set empty as the
+    * sidecar is gone), so the next serve pins nothing. The sidecar
+    * truncates LAST (the
     * Compaction ordering), so a crash between the two leaves tombstones
     * pending — the search filter still hides the deleted ids and a
     * re-fold is idempotent (it pins the merged view, which already
@@ -316,10 +336,11 @@ object GraphAnn {
       idCol: String, m: Int): Unit = {
     if (!pathExists(spark, path + "_tombstones")) return
     val pin = servingPin(spark, path, corpus, embCol, idCol, rungPaths)
-    val dead = pin.dead
+    val views = currentViews(spark, path)
+    val dead = pin.graph.dead
     if (dead.isEmpty) return
-    (path +: pin.rungs.reverse.map(_._1)).foreach { p =>
-      val adj = pin.adjacency(p)
+    val written = (path +: pin.graph.rungs.reverse.map(_._1)).map { p =>
+      val adj = pin.graph.adjacency(p)
       val rewritten = adj.toSeq.collect {
         case (x, ns) if !dead(x) && ns.exists(dead) =>
           val bridges = ns.filter(dead)
@@ -328,12 +349,15 @@ object GraphAnn {
           x -> topEdges(scoredEdges(pin.vec, x,
             (ns.filterNot(dead) ++ bridges).distinct), 2 * m).map(_._1).toArray
       }
-      writeRows(spark, rewritten ++
-        dead.toSeq.filter(adj.contains).map(_ -> (null: Array[Long])), p)
-    }
+      val rows = rewritten ++
+        dead.toSeq.filter(adj.contains).map(_ -> (null: Array[Long]))
+      writeRows(spark, rows, p)
+      p -> rows
+    }.toMap
     // sidecar truncates LAST: a crash before this point leaves tombstones
     // pending, which is merely conservative (search keeps filtering them)
     deletePath(spark, path + "_tombstones")
+    publish(spark, views, written, _ => Set.empty)
   }
 
   /** MOR compaction for the graph — the maintenance job every other
@@ -425,7 +449,7 @@ object GraphAnn {
   }
 
   // ---- corpus vector pin ----------------------------------------------
-  // The corpus' (id, embedding) projection collected ONCE per corpus
+  // The corpus' (id, embedding) projection pinned ONCE per corpus
   // signature (ResultCache.cacheKey — plan + the file listing the frame
   // captured, with lengths and mtimes, so any upsert/delete/planted-copy
   // change invalidates, a frame listed before a write never fills the pin
@@ -434,31 +458,74 @@ object GraphAnn {
   // driver map: the vector side of every resident pin, shared by all pins
   // over the same corpus version. Resident (id, emb) per indexed shard is
   // exactly the memory bound hnswlib requires of a serving node; the cold
-  // path is one narrow projection scan per corpus version. LRU-bounded by
-  // count.
+  // path is one narrow projection scan per corpus version, and a version
+  // that only GREW by files since a pinned one reads just those files.
+  // LRU-bounded by count.
   private val VecPinMax = 16
-  private val vecPinCache = new java.util.LinkedHashMap[
-      String, Map[Long, Array[Float]]](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, Map[Long, Array[Float]]]): Boolean =
+  private final case class VecEntry(split: Option[graft.ops.ResultCache.ListingSplit],
+    vec: Map[Long, Array[Float]])
+  private val vecPinCache = new java.util.LinkedHashMap[String, VecEntry](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, VecEntry]): Boolean =
       size > VecPinMax
   }
 
+  /** The corpus' (id, embedding) map and whether it was collected whole.
+    *
+    * Growth by listing: on a miss, a cached entry is reused when it has
+    * the same plan and roots (ResultCache.listingSplit), every file of its
+    * listing is in the frame's captured listing with the same length and
+    * mtime, and the plan above the one file relation is deterministic
+    * Project/Filter nodes only (FileSubsetScan.restrictTo). Then only the
+    * added files are read through the same plan — one Spark job — and
+    * their rows are added to the entry's map with immutable `++`, so the
+    * versions share structure; of several such entries the one with the
+    * largest listing is grown. Any failed condition takes the full
+    * collect, and so does an added id that is already in the map (or
+    * twice among the added rows): which row a full collect keeps for a
+    * repeated id is not defined, so the grown map could differ from it.
+    */
   private def vecPin(corpus: DataFrame, embCol: String,
-      idCol: String): Map[Long, Array[Float]] = {
+      idCol: String): (Map[Long, Array[Float]], Boolean) = {
     val proj = corpus.select(col(idCol).cast("long"), col(embCol))
     val key = graft.ops.ResultCache.cacheKey(proj)
-    val hit = vecPinCache.synchronized(Option(vecPinCache.get(key)))
-    hit.getOrElse {
-      // a null embedding scores nothing (its id is a waypoint at most),
-      // exactly as an id absent from the corpus
-      val m = proj.collect().collect {
-        case r if !r.isNullAt(1) => r.getLong(0) -> r.getSeq[Float](1).toArray
-      }.toMap
-      vecPinCache.synchronized(vecPinCache.put(key, m))
-      m
+    vecPinCache.synchronized(Option(vecPinCache.get(key))) match {
+      case Some(e) => (e.vec, false)
+      case None =>
+        val split = graft.ops.ResultCache.listingSplit(proj)
+        val grown = split.flatMap(grownVecPin(proj, _))
+        val vec = grown.getOrElse(vecRows(proj.collect()).toMap)
+        vecPinCache.synchronized(vecPinCache.put(key, VecEntry(split, vec)))
+        (vec, grown.isEmpty)
     }
   }
+
+  /** The cached map with the largest listing this frame's listing grew
+    * from, plus the rows of the added files; None when there is none or
+    * the growth would not equal a full collect (see vecPin). */
+  private def grownVecPin(proj: DataFrame,
+      split: graft.ops.ResultCache.ListingSplit): Option[Map[Long, Array[Float]]] = {
+    import scala.jdk.CollectionConverters._
+    val entries = vecPinCache.synchronized(vecPinCache.values.asScala.toList)
+    val base = entries.flatMap(e => e.split.collect {
+      case s if s.planKey == split.planKey && s.files.forall { case (f, st) =>
+          split.files.get(f).contains(st) } => (s.files.keySet, e.vec)
+    }).maxByOption(_._1.size)
+    for {
+      (files, vec) <- base
+      added <- org.apache.spark.sql.graft.FileSubsetScan.restrictTo(proj,
+        split.files.keySet -- files)
+      rows = vecRows(added.collect())
+      if rows.forall(r => !vec.contains(r._1)) && rows.map(_._1).distinct.size == rows.size
+    } yield vec ++ rows
+  }
+
+  /** (id, embedding) pairs of collected projection rows; a null
+    * embedding scores nothing (its id is a waypoint at most), exactly as
+    * an id absent from the corpus. */
+  private def vecRows(rows: Array[org.apache.spark.sql.Row]): Seq[(Long, Array[Float])] =
+    rows.toSeq.collect {
+      case r if !r.isNullAt(1) => r.getLong(0) -> r.getSeq[Float](1).toArray
+    }
 
   // ---------------------------------------------------------------------
   // HNSW: a coarse layer ladder above NSW layer 0 (Malkov & Yashunin
@@ -536,6 +603,10 @@ object GraphAnn {
     *    maintenance appended vectors would be unreachable out-only sinks.
     *  - one `seq=<n>` delta leaf per touched rung (prior max + 1 —
     *    deterministic), merged latest-wins by every reader.
+    *  - then the post-append graph view is published (`publish`): every
+    *    cached current-version view of the graph that was current before
+    *    the write is overlaid with exactly the rows written, so the next
+    *    serve pins no rung.
     *
     * Cost scales with |new|·M rewritten rows plus one pin of the
     * pre-append version, never a graph rewrite; Spark runs the arrivals
@@ -555,6 +626,7 @@ object GraphAnn {
     if (arrivals.isEmpty) return
     val pin = servingPin(spark, path, corpus, embCol, idCol,
       (maxLevel to 1 by -1).map(layerPath))
+    val views = currentViews(spark, path)
     val vec = pin.vec ++ arrivals.filter(_._2 != null)
     val corpusTop = topLevel(corpus.schema(idCol).dataType, fanout, maxLevel)
     val arrivalTop = topLevel(newNodes.schema(idCol).dataType, fanout, maxLevel)
@@ -572,7 +644,7 @@ object GraphAnn {
       val walked = if (e == null) Nil
         else topEdges(ladderWalk(pin, e, beam = 32, hops = 4, descentBeam = 4,
             descentHops = 2)._1
-          .filter { case (b, _) => b != a && !pin.dead.contains(b) }, m)
+          .filter { case (b, _) => b != a && !pin.graph.dead.contains(b) }, m)
       (0 to arrivalTop(a)).map { l =>
         val inLayer = mates.collect { case (b, s, top) if top >= l => b -> s }
         (l, a, topEdges(if (l == 0) inLayer ++ walked else inLayer, m))
@@ -584,13 +656,15 @@ object GraphAnn {
     }.groupMap(_._1)(_._2)
     val rows = out.map { case (l, a, es) => l -> (a -> es) } ++
       in.toSeq.map { case ((l, x), es) =>
-        val cur: Array[Long] = pin.adjacency(layerPath(l)).getOrElse(x, Array.empty)
+        val cur: Array[Long] = pin.graph.adjacency(layerPath(l)).getOrElse(x, Array.empty)
         l -> (x -> topEdges(scoredEdges(vec, x, cur) ++ es, 2 * m))
       }
-    rows.groupMap(_._1)(_._2).foreach { case (l, rs) =>
-      writeRows(spark, rs.map { case (x, es) => x -> es.map(_._1).toArray },
-        layerPath(l))
+    val written = rows.groupMap(_._1)(_._2).map { case (l, rs) =>
+      val ns = rs.map { case (x, es) => x -> es.map(_._1).toArray }
+      writeRows(spark, ns, layerPath(l))
+      layerPath(l) -> ns
     }
+    publish(spark, views, written, identity)
   }
 
   /** The n best (dst, score) candidates, one per dst (its max score), in
@@ -680,30 +754,27 @@ object GraphAnn {
       hops: Int, descentBeam: Int, descentHops: Int, snapshotK: Int = 0)
       : (Map[Long, Double], Seq[(Int, Long, Seq[Long])]) = {
     var carried = Seq.empty[Long]
-    pin.rungs.foreach { case (_, adjL, entriesL) =>
+    pin.graph.rungs.foreach { case (_, adjL, entriesL) =>
       val seeds = if (carried.nonEmpty) carried else entriesL
       if (seeds.nonEmpty)
         carried = best(residentWalk(adjL, pin.vec, qv, seeds,
           descentBeam, descentHops)._1, descentBeam)
     }
-    residentWalk(pin.adj0, pin.vec, qv, (carried ++ pin.entryIds).distinct,
+    residentWalk(pin.graph.adj0, pin.vec, qv, (carried ++ pin.graph.entryIds).distinct,
       beam, hops, snapshotK)
   }
 
-  /** One pinned resident view of a graph index version: the merged
-    * (latest-wins, optionally asOfSeq-pinned) adjacency per upper rung
-    * (path, adjacency, hash-min entry points; top-down), layer 0's
-    * adjacency and entry points, the shard's vectors (the corpus' vecPin)
-    * and the tombstone set — plain driver maps, built once per version
-    * and walked in place by every search, and read by the append and the
-    * tombstone fold for their delta rows.
+  /** One pinned graph view of an index version: the merged (latest-wins,
+    * optionally asOfSeq-pinned) adjacency per upper rung (path,
+    * adjacency, hash-min entry points; top-down), layer 0's adjacency and
+    * entry points, and the tombstone set — plain driver maps, built once
+    * per version (or published by the mutation that made the version).
     */
-  private[graft] final case class ResidentPin(
+  private[graft] final case class GraphView(
     path: String,
     rungs: Seq[(String, Map[Long, Array[Long]], Seq[Long])],
     adj0: Map[Long, Array[Long]],
     entryIds: Seq[Long],
-    vec: Map[Long, Array[Float]],
     dead: Set[Long]) {
 
     /** The merged adjacency of rung `p` (`path` is layer 0); empty for a
@@ -713,31 +784,41 @@ object GraphAnn {
       else rungs.collectFirst { case (`p`, adj, _) => adj }.getOrElse(Map.empty)
   }
 
+  /** The resident pin every search walks in place, and the append and
+    * the tombstone fold read for their delta rows: the graph view of the
+    * index version plus the shard's vectors (the corpus' vecPin). */
+  private[graft] final case class ResidentPin(graph: GraphView,
+    vec: Map[Long, Array[Float]])
+
   // ---- resident-pin cache ---------------------------------------------
   // The hnswlib serving model pins the view ONCE per index version, not
   // per call (the reference's Chroma handle is opened once
-  // per session, query_rag_database.py:138-149). Keyed by (path, asOfSeq,
-  // entry/descent params); validated by a STAMP that folds the FS listing
-  // of the index dir + every sidecar (_delta, _tombstones, ladder rungs)
-  // AND the corpus' signature (ResultCache.cacheKey — LocalRelation rows
-  // and captured file listings digested, so planted-copy corpora and
-  // frames listed after a write invalidate too, while the frame a serve
-  // holds keeps its pin when a re-ingest lands files in its root: the
-  // append that follows reuses the serve's pin).
-  // Any append/fold/compact/delete changes a listing, the stamp moves,
-  // and the next serve rebuilds; a same-version serve reuses the maps
-  // with ZERO pin jobs. Bounded: one live entry per key, replaced in
-  // place.
+  // per session, query_rag_database.py:138-149). A pin is two cached
+  // halves:
+  //  - the graph view, keyed by (path, asOfSeq, entry/descent params)
+  //    and validated by a STAMP of the FS listing of the index dir and
+  //    every sidecar (_delta, _tombstones, ladder rungs) — the index
+  //    directories only, so one graph served with two corpus frames keeps
+  //    one view;
+  //  - the vectors, from vecPin, keyed by the corpus frame.
+  // Any append/fold/compact/delete changes a listing and moves the stamp.
+  // The append and the tombstone fold then PUBLISH the post-write view
+  // (`publish`: the pre-write maps overlaid with exactly the rows they
+  // wrote, entries recomputed) under the new stamp, so the next serve
+  // builds no view; after a compaction, a delete or any other writer the
+  // next serve rebuilds it. A same-version serve reuses the maps with
+  // ZERO pin jobs. Bounded: one live view per key, replaced in place.
   //
   // Memory bound: one pinned view per (path, asOfSeq, params) key — per
   // index version the merged adjacency of every rung (ids + ≤ 2M
-  // neighbor ids each) and the tombstone set, plus the corpus' (id,
-  // embedding) map shared with vecPin's cache.
-  private val pinCache = scala.collection.concurrent.TrieMap
-    .empty[String, (String, ResidentPin)]
+  // neighbor ids each) and the tombstone set — plus vecPin's corpus maps.
+  private final case class CachedView(stamp: String, dirs: Seq[String],
+    asOfSeq: Long, entries: Int, descentBeam: Int, view: GraphView)
+  private val viewCache = scala.collection.concurrent.TrieMap
+    .empty[String, CachedView]
   // Striped build locks: two concurrent first serves of the same version
   // must NOT both collect the view (twice the scans, twice the transient
-  // driver memory). Builds serialize per key stripe; the winner's pin is
+  // driver memory). Builds serialize per key stripe; the winner's view is
   // re-read inside the lock, so the racer reuses it. A FIXED stripe
   // array (not a per-key map) keeps the lock state bounded over a
   // serving JVM's lifetime — per-key lock objects would accumulate one
@@ -749,13 +830,19 @@ object GraphAnn {
     pinLocks(math.floorMod(key.hashCode, pinLocks.length))
   private val pinBuildCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Number of resident-pin BUILDS since JVM start (cache misses) —
+  /** Number of resident pins assembled by a full scan since JVM start: a
+    * graph view built from its rungs or a corpus collected whole. A view
+    * published by a mutation or vectors grown by listing do not count —
     * AnnIndexSpec pins that two same-version serves build once. */
   private[graft] def pinBuilds: Int = pinBuildCounter.get
 
-  /** Drop every cached pin (spec isolation only — serving never needs it:
-    * stale pins are invalidated by stamp, not by eviction). */
-  private[graft] def dropPins(): Unit = pinCache.clear()
+  /** Drop every cached graph view and corpus map (spec isolation only —
+    * serving never needs it: stale pins are invalidated by stamp, not by
+    * eviction). */
+  private[graft] def dropPins(): Unit = {
+    viewCache.clear()
+    vecPinCache.synchronized(vecPinCache.clear())
+  }
 
   /** Cheap FS stamp of one directory: file count, total bytes, max mtime
     * (the FileListing stamp every knob and result cache shares). */
@@ -763,10 +850,17 @@ object GraphAnn {
     graft.FileListing.stamp(spark.sparkContext.hadoopConfiguration,
       new org.apache.hadoop.fs.Path(p)).fold(s"$p#absent")(st => s"$p#$st")
 
-  /** The pin for (index version, corpus, params): cache hit when the
-    * stamp still matches, else build (bounded collects: one base ∪ delta
-    * scan per rung, one corpus scan unless vecPin holds it, one tombstone
-    * scan) and replace.
+  private def stampOf(spark: SparkSession, dirs: Seq[String]): String =
+    dirs.map(dirStamp(spark, _)).mkString("|")
+
+  /** Hash-min entries: Spark's xxhash64(id) (seed 42) asc, id asc. */
+  private def hashEntries(m: Map[Long, Array[Long]], e: Int): Seq[Long] =
+    m.keys.toSeq.sortBy(id => (XXH64.hashLong(id, 42L), id)).take(e)
+
+  /** The pin for (index version, corpus, params): the graph view is a
+    * cache hit when its stamp still matches, else built (one base ∪ delta
+    * scan per rung, one tombstone scan) and replaced; the vectors come
+    * from vecPin.
     */
   private def residentPin(spark: SparkSession, path: String,
       corpus: DataFrame, embCol: String, idCol: String, entries: Int,
@@ -775,22 +869,21 @@ object GraphAnn {
     // flat walks share one key whatever their descent params
     val key = s"$path#asOf=$asOfSeq#e=$entries" + (if (rungPaths.isEmpty) ""
       else s"#db=$descentBeam#rungs=${rungPaths.mkString(",")}")
-    def stampNow() = (Seq(path, path + "_delta", path + "_tombstones") ++
-        rungPaths.flatMap(p => Seq(p, p + "_delta")))
-      .map(dirStamp(spark, _)).mkString("|") + "\u0000" +
-      graft.ops.ResultCache.cacheKey(corpus.select(col(idCol), col(embCol)))
-    pinCache.get(key) match {
-      case Some((s, pin)) if s == stampNow() => pin
+    val dirs = Seq(path, path + "_delta", path + "_tombstones") ++
+      rungPaths.flatMap(p => Seq(p, p + "_delta"))
+    var built = false
+    val view = viewCache.get(key) match {
+      case Some(c) if c.stamp == stampOf(spark, dirs) => c.view
       case _ => pinLock(key).synchronized {
       // Re-read under the lock AND recompute the stamp under it: a
       // mutation can land between the fast-path stamp and lock
-      // acquisition, and a racing thread may have built the NEWER pin —
+      // acquisition, and a racing thread may have built the NEWER view —
       // comparing that against the stale stamp would discard its build,
       // mislabel our rebuild's current-disk contents with the old stamp,
       // and churn every subsequent serve (each sees a stamp mismatch).
-      val stamp = stampNow()
-      pinCache.get(key) match {
-      case Some((s, pin)) if s == stamp => pin
+      val stamp = stampOf(spark, dirs)
+      viewCache.get(key) match {
+      case Some(c) if c.stamp == stamp => c.view
       case _ =>
         // latest-wins resolved here over one plain scan of base ∪ deltas:
         // the pin holds the merged view anyway, and the scan skips the
@@ -801,29 +894,80 @@ object GraphAnn {
               val r = rs.maxBy(_.getLong(2))
               if (r.isNullAt(1)) None else Some(id -> r.getSeq[Long](1).toArray)
             }
-        // hash-min entries: Spark's xxhash64(id) (seed 42) asc, id asc
-        def hashEntries(m: Map[Long, Array[Long]], e: Int): Seq[Long] =
-          m.keys.toSeq.sortBy(id => (XXH64.hashLong(id, 42L), id)).take(e)
         val rungs = rungPaths.filter(p => pathExists(spark, p)).map { p =>
           val m = adjOf(p)
           (p, m, hashEntries(m, descentBeam))
         }
         val adj0 = adjOf(path)
-        val pin = ResidentPin(path, rungs, adj0, hashEntries(adj0, entries),
-          vecPin(corpus, embCol, idCol),
-          readNswTombstones(spark, path).collect().map(_.getLong(0)).toSet)
-        pinBuildCounter.incrementAndGet()
-        pinCache.put(key, (stamp, pin))
-        pin
+        // a plain scan deduped on the driver: readNswTombstones' distinct
+        // would add an exchange and a job to every pin with deletes pending
+        val dead =
+          if (!pathExists(spark, path + "_tombstones")) Set.empty[Long]
+          else spark.read.schema(tombSchema).parquet(path + "_tombstones")
+            .collect().map(_.getLong(0)).toSet
+        val view = GraphView(path, rungs, adj0, hashEntries(adj0, entries), dead)
+        built = true
+        viewCache.put(key, CachedView(stamp, dirs, asOfSeq, entries, descentBeam, view))
+        view
       }
       }
     }
+    val (vec, collected) = vecPin(corpus, embCol, idCol)
+    if (built || collected) pinBuildCounter.incrementAndGet()
+    ResidentPin(view, vec)
   }
+
+  /** The cached current-version views of graph `path` whose stamp still
+    * matches the disk — the views a mutation patches, taken BEFORE it
+    * writes. */
+  private def currentViews(spark: SparkSession,
+      path: String): Seq[(String, CachedView)] =
+    viewCache.toSeq.filter { case (_, c) =>
+      c.view.path == path && c.asOfSeq == Long.MaxValue &&
+        c.stamp == stampOf(spark, c.dirs)
+    }
+
+  /** Publish a mutation's post-write view: each of `before` (current
+    * when the mutation started) overlaid with exactly the rows it wrote —
+    * rung path → (node, neighbors) rows; the delta leaf is the newest
+    * generation, so they win, a NULL row removes the node, and of two
+    * rows for one node the first wins, as the merge's maxBy keeps it —
+    * with the entries of every changed rung recomputed and `dead` applied
+    * to the tombstone set, installed under the directories' post-write
+    * stamp. This equals a rebuild from disk only under the single-writer
+    * contract (nextDeltaSeq). A view a serve replaced meanwhile is left
+    * alone.
+    */
+  private def publish(spark: SparkSession, before: Seq[(String, CachedView)],
+      written: Map[String, Seq[(Long, Array[Long])]],
+      dead: Set[Long] => Set[Long]): Unit =
+    before.foreach { case (key, c) =>
+      def overlay(adj: Map[Long, Array[Long]], rows: Seq[(Long, Array[Long])]) =
+        rows.distinctBy(_._1).foldLeft(adj) { case (m, (id, ns)) =>
+          if (ns == null) m - id else m.updated(id, ns)
+        }
+      val v = c.view
+      val rungs = v.rungs.map { case r @ (p, adj, _) =>
+        written.get(p).fold(r) { rows =>
+          val m = overlay(adj, rows)
+          (p, m, hashEntries(m, c.descentBeam))
+        }
+      }
+      val (adj0, entryIds) = written.get(v.path).fold((v.adj0, v.entryIds)) { rows =>
+        val m = overlay(v.adj0, rows)
+        (m, hashEntries(m, c.entries))
+      }
+      val next = c.copy(stamp = stampOf(spark, c.dirs),
+        view = GraphView(v.path, rungs, adj0, entryIds, dead(v.dead)))
+      pinLock(key).synchronized {
+        if (viewCache.get(key).exists(_ eq c)) viewCache.put(key, next)
+      }
+    }
 
   /** The pin a default search of the ladder holds (16 entries, descent
     * beam 4, current version) — the pre-mutation view the append and the
     * tombstone fold compute their delta rows from. */
-  private def servingPin(spark: SparkSession, path: String, corpus: DataFrame,
+  private[graft] def servingPin(spark: SparkSession, path: String, corpus: DataFrame,
       embCol: String, idCol: String, rungPaths: Seq[String]): ResidentPin =
     residentPin(spark, path, corpus, embCol, idCol, entries = 16, rungPaths,
       descentBeam = 4, Long.MaxValue)
@@ -864,7 +1008,7 @@ object GraphAnn {
     }
     walked.map { case (qid, visited) =>
       qid -> visited.toSeq.filter { case (id, _) =>
-          !pin.dead.contains(id) && !excluded.contains(id) && pass(id) }
+          !pin.graph.dead.contains(id) && !excluded.contains(id) && pass(id) }
         .sortBy { case (id, s) => (-s, id) }.take(k)
         .map { case (id, s) =>
           id -> BigDecimal(s).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble }

@@ -1026,9 +1026,12 @@ class AnnIndexSpec extends SparkSpec {
     // a structural mutation (delete lands a tombstone sidecar) moves the
     // FS stamp: the next serve must re-pin and see the deletion
     GraphAnn.deleteFromNswGraph(spark, Seq(first.head._2), path)
-    val third = serve()
+    val (third, deleteJobs) = jobsRunBy("post-delete-serve")(serve())
     assert(GraphAnn.pinBuilds - b0 === 2,
       "an index mutation must invalidate the pin")
+    // the re-pin scans the adjacency and the tombstone sidecar, one job
+    // each: the sidecar is deduped on the driver, with no exchange
+    assert(deleteJobs === 2, s"the post-delete serve ran $deleteJobs Spark jobs")
     assert(!third.exists(_._2 == first.head._2), "stale pin served a deleted id")
   }
 
@@ -1707,6 +1710,96 @@ class AnnIndexSpec extends SparkSpec {
     GraphAnn.appendToHnswGraph(spark, arrivals, "embedding", "vec_id",
       AnnIndex.defaultLsh, m = 8, path, corpus, fanout = 8, maxLevel = 2)
     assert(GraphAnn.pinBuilds === b0, "the append rebuilt the pin its serve holds")
+    // a serve through a freshly listed store takes the view the append
+    // published and reads only the file the arrivals landed in
+    val fresh = spark.read.parquet(root + "/store")
+    val (top, serveJobs, serveRecords) = jobsAndRecordsRunBy("post-append-serve") {
+      GraphAnn.hnswSearch(spark, path, fresh, "embedding", "vec_id", q0, k = 5)
+        .collect()
+    }
+    assert(GraphAnn.pinBuilds === b0, "the post-append serve rebuilt the pin")
+    assert(serveJobs === 1, s"the post-append serve ran $serveJobs Spark jobs")
+    assert(serveRecords === arrivals.count(),
+      s"the post-append serve read $serveRecords records")
+    assert(top.head.getLong(0) === 0L)
+  }
+
+  /** Compares two pins map for map: every rung's adjacency (neighbour
+    * order included), the entry ids, the tombstone set and the vectors. */
+  private def assertSamePin(a: graft.vector.GraphAnn.ResidentPin,
+      b: graft.vector.GraphAnn.ResidentPin, what: String): Unit = {
+    def adj(m: Map[Long, Array[Long]]) = m.map { case (k, v) => k -> v.toSeq }
+    assert(a.graph.rungs.map(r => (r._1, adj(r._2), r._3)) ===
+      b.graph.rungs.map(r => (r._1, adj(r._2), r._3)), s"$what: upper rungs differ")
+    assert(adj(a.graph.adj0) === adj(b.graph.adj0), s"$what: layer 0 differs")
+    assert(a.graph.entryIds === b.graph.entryIds, s"$what: entry ids differ")
+    assert(a.graph.dead === b.graph.dead, s"$what: tombstones differ")
+    assert(a.vec.map { case (k, v) => k -> v.toSeq } ===
+      b.vec.map { case (k, v) => k -> v.toSeq }, s"$what: vectors differ")
+  }
+
+  test("published and grown pins equal a full rebuild through appends, deletes and a fold") {
+    import graft.vector.GraphAnn
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val root = Files.createTempDirectory("hnsw_pin_parity").toString
+    val store = root + "/store"
+    e.filter(col("vec_id") < 300).write.parquet(store)
+    // a file of the base write (ids < 300): the fallbacks rewrite and
+    // then lose it, and the repeated id (320) lives elsewhere
+    val part = new java.io.File(store).listFiles
+      .filter(_.getName.startsWith("part-")).minBy(_.getName)
+    val path = root + "/graph"
+    val rungs = Seq(path + "_l2", path + "_l1")
+    GraphAnn.buildHnswGraph(spark.read.parquet(store), "embedding", "vec_id",
+      AnnIndex.defaultLsh, m = 8, path, fanout = 8, maxLevel = 2)
+    assert(rungs.forall(p => new java.io.File(p).exists), "fixture: 2 upper rungs")
+    def pin(corpus: org.apache.spark.sql.DataFrame) =
+      GraphAnn.servingPin(spark, path, corpus, "embedding", "vec_id", rungs)
+    // the pin as the cache holds it must equal a rebuild from disk;
+    // `builds` is how many full scans the cached pin may take
+    def parity(corpus: org.apache.spark.sql.DataFrame, what: String,
+        builds: Int = 0): Unit = {
+      val b0 = GraphAnn.pinBuilds
+      val held = pin(corpus)
+      assert(GraphAnn.pinBuilds - b0 === builds, s"$what: pin builds")
+      GraphAnn.dropPins()
+      assertSamePin(held, pin(corpus), what)
+    }
+    // the serve holds the pre-append pin; each re-ingest lands its
+    // arrivals in the store, then the append publishes its view
+    var corpus = spark.read.parquet(store)
+    pin(corpus)
+    def append(lo: Long, hi: Long): Unit = {
+      val arrivals = e.filter(col("vec_id") >= lo && col("vec_id") < hi)
+      arrivals.write.mode("append").parquet(store)
+      GraphAnn.appendToHnswGraph(spark, arrivals, "embedding", "vec_id",
+        AnnIndex.defaultLsh, m = 8, path, corpus, fanout = 8, maxLevel = 2)
+      corpus = spark.read.parquet(store)
+    }
+    append(300, 360)
+    parity(corpus, "first append")
+    append(360, 420)
+    parity(corpus, "second append")
+    GraphAnn.deleteFromNswGraph(spark, Seq(5L, 17L, 310L), path)
+    parity(corpus, "delete", builds = 1)
+    append(420, 470)
+    parity(corpus, "append with tombstones pending")
+    GraphAnn.foldHnswTombstones(spark, path, corpus, "embedding", "vec_id", m = 8)
+    val (folded, foldJobs) = jobsRunBy("post-fold-pin")(pin(corpus))
+    assert(foldJobs === 0, s"the pin after a fold ran $foldJobs Spark jobs")
+    assert(folded.graph.dead.isEmpty)
+    parity(corpus, "fold")
+    // fallbacks take the full collect (one build: the graph view is held)
+    parity(AnnIndex.withPlantedSelfCopies(spark, corpus), "planted copies", builds = 1)
+    assert(part.setLastModified(part.lastModified + 5000L))
+    corpus = spark.read.parquet(store)
+    parity(corpus, "rewritten file", builds = 1)
+    assert(part.delete())
+    corpus = spark.read.parquet(store)
+    parity(corpus, "lost file", builds = 1)
+    e.filter(col("vec_id") === 320L).write.mode("append").parquet(store)
+    corpus = spark.read.parquet(store)
+    parity(corpus, "added id already pinned", builds = 1)
   }
 
   test("nsw delete: tombstones hide emission but still route the walk") {

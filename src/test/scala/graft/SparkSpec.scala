@@ -15,13 +15,28 @@ trait SparkSpec extends AnyFunSuite {
     * description; the listener bus is asynchronous and FIFO, so once a
     * later marker job is seen every job of `body` has been seen too. */
   def jobsRunBy[A](tag: String)(body: => A): (A, Int) = {
+    val (out, jobs, _) = jobsAndRecordsRunBy(tag)(body)
+    (out, jobs)
+  }
+
+  /** jobsRunBy plus the input records the tasks of those jobs read (the
+    * task-end `recordsRead` input metric, summed over their stages). */
+  def jobsAndRecordsRunBy[A](tag: String)(body: => A): (A, Int, Long) = {
     val sc = spark.sparkContext
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.atomic.AtomicLong(0L)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(
-          j.properties.getProperty("spark.job.description")))
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val desc = String.valueOf(j.properties.getProperty("spark.job.description"))
+        if (desc == tag) j.stageIds.foreach(stages.add)
+        seen.add(desc)
+      }
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          records.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
     }
     sc.addSparkListener(listener)
     try {
@@ -33,7 +48,7 @@ trait SparkSpec extends AnyFunSuite {
       while (!seen.contains(tag + "-marker") && System.nanoTime() < deadline)
         Thread.sleep(20)
       assert(seen.contains(tag + "-marker"), "listener never saw the marker job")
-      (out, seen.asScala.count(_ == tag))
+      (out, seen.asScala.count(_ == tag), records.get)
     } finally sc.removeSparkListener(listener)
   }
 }
