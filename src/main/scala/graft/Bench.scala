@@ -45,18 +45,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Recommended library confs (AQE under cached plans, listing
-    // threshold) live in GraftSession — ONE home shared with Verify, the
-    // dev profilers, and library users; rationale documented there.
-    val spark = GraftSession.withRecommended(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The session and its recommended library confs (AQE under cached
+    // plans, listing threshold) live in GraftSession — ONE home shared
+    // with Verify, ExplainPlans and library users; rationale there.
+    val spark = GraftSession.harness(cpus.toInt)
     // Untimed warmup: JIT/codegen compilation, parquet footer reads, and
     // shuffle init otherwise land entirely on whichever query sorts first
     // (observed: ann_ivf_topk, alphabetically first, absorbing the first

@@ -43,4 +43,22 @@ object GraftSession {
   /** Apply the recommended confs to a builder (harness/tool entry). */
   def withRecommended(b: SparkSession.Builder): SparkSession.Builder =
     recommendedConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The one session the harnesses share (Bench, Verify, ExplainPlans):
+    * `local[cpus]` with one shuffle partition per core, AQE, UTC session
+    * time, nanosecond parquet timestamps read as longs, no UI, and the
+    * recommended confs. A board, a correctness dump and a plan dump taken
+    * at the same core count therefore come from the same session shape. */
+  def harness(cpus: Int): SparkSession = {
+    val spark = withRecommended(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

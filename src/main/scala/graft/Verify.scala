@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,19 +6,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // Optional 3rd arg: comma-separated query-name filter (dev iteration
-    // only — the driver always calls with two args = full dump).
+    // only — the driver always calls with two args = full dump). The dev
+    // loop for a few rows is `graft.Verify <sf> <out> <names>` followed by
+    // `tools/check_oracle.py <sf> <out> <names>`.
     val only: Option[Set[String]] = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // match Bench: the recommended library confs (GraftSession) — Verify
-    // exercises the same query bodies
-    val spark = GraftSession.withRecommended(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session (GraftSession.harness): Verify exercises the same
+    // query bodies
+    val spark = GraftSession.harness(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

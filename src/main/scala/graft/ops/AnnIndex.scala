@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryModule, Tables}
-import graft.vector.IndexBuilder
+import graft.vector.{IndexBuilder, ProductQuantization => PQ, Quantization => SQ8}
 import graft.vector.IndexBuilder.RandomHyperplaneLsh
 
 /** ANN query surface over the batch-built index structures (SURVEY.md §2.9
@@ -20,6 +20,25 @@ import graft.vector.IndexBuilder.RandomHyperplaneLsh
   * driver-checked top-k rows use the planted self-query construction (see
   * withPlantedSelfCopies): the pruned result provably equals an
   * SQL-enumerable exact top-k while the real pruned-scan machinery runs.
+  *
+  * The partitioned-index lifecycle rows are a table, not hand-written
+  * bodies. Each of the four `Family` records holds a family's build,
+  * append, train, stage, partition column, probes and serve:
+  *
+  * | family  | row infix  | partCol    | probes             | serve                       |
+  * |---------|------------|------------|--------------------|-----------------------------|
+  * | LSH     | (none)     | bucket     | tuned-radius masks | exact 6-dp cosine top-k     |
+  * | IVF     | `ivf_`     | cluster_id | tuned-nProbe       | exact 6-dp cosine top-k     |
+  * | IVF-PQ  | `ivf_pq_`  | cluster_id | tuned-nProbe       | ADC (overscan 16) + rescore |
+  * | IVF-SQ8 | `ivf_sq8_` | cluster_id | tuned-nProbe       | int8 coarse + rescore       |
+  *
+  * There is one builder per lifecycle: `deleteRow` and `upsertRow` (each
+  * with a fold flag), `timeTravelRow`, `shardedRow`, and `streamRow`
+  * (with a fold flag). Row `ann_<infix><lifecycle>_topk` is the builder
+  * applied to the family, and `familyRows` generates its registry and
+  * oracle entries. The graph families (NSW/HNSW) and the vacuum rows stay
+  * hand-written: their lifecycles are walks and ladders, not partition
+  * scans.
   */
 object AnnIndex extends QueryModule {
 
@@ -1155,7 +1174,7 @@ object AnnIndex extends QueryModule {
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_nswfold_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
     val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    // build+delete+fold cached as ONE unit — the annCompactedDeleteTopk
+    // build+delete+fold cached as ONE unit — the family delete+fold row's
     // rule brought to the graph: the fold lands delta rows, so the marker
     // must describe (base, deltas, truncated sidecar) as served
     ResultCache.buildIfAbsent(spark, corpus,
@@ -1400,124 +1419,348 @@ object AnnIndex extends QueryModule {
     path
   }
 
-  /** DELETE from the ANN index without a rebuild: deletes land as a
-    * delta-sized tombstone sidecar (the MOR discipline — index files are
-    * never touched), and the query path anti-joins the broadcast
-    * tombstone set after the pruned scan. At 100 TB a delete costs one
-    * tiny write; compaction (graft.ingest.Compaction) folds tombstones
-    * into the partitions on its own schedule. The reference rebuilds the
-    * whole collection on delete (SURVEY §2.2 K2) — this is the scale
-    * path.
+  // ---- the partitioned-index family table ---------------------------------
+  // Four families (LSH, IVF, IVF-PQ, IVF-SQ8) × eight lifecycles (delete,
+  // delete+fold, upsert, upsert+fold, time travel, sharded, stream-ingest,
+  // stream+fold) = 32 driver rows. Every row is the same skeleton: planted
+  // self-copies → build → tombstone/watermark sidecar → append or fold →
+  // probe → `<partCol> IN probes` scan (anti-joined unless folded) → the
+  // family's serve. A family is data (one `Family` record below); a
+  // lifecycle is one builder; the registry entries are the product.
+
+  /** One partitioned-index family: how it builds, appends, trains and
+    * stages, which column partitions its table, how a query picks its
+    * probe partitions, and how it serves the live probed rows.
     *
-    * Oracle by construction: delete 5 of the 9 planted copies; top-5 must
-    * be exactly {vector 0, the 4 surviving copies} at cosine 1.0 — a
-    * tombstone leak (deleted row still served) or over-delete both
-    * perturb the row set.
+    * Fixture naming is derived, and pinned byte-for-byte by
+    * FamilyLifecycleSpec: the path is `graft_<stem><op>_<hex(dir.hashCode)>`
+    * (op ∈ del, cdel, upsert, cupsert, tt, shard<s>of<n>) or
+    * `graft_<streamStem>stream[fold]_…`; the build key is
+    * `<tag>:lifecycle=<op>:v<n>` (op ∈ delete, delete+fold, upsert-raw,
+    * upsert+fold, timetravel (v2), stream-ingest, stream+fold) or
+    * `<tag>:shard=<s>/<n>:v1`.
+    * `streamStem` is its own field because the SQ8 streaming roots were
+    * named `sq8stream*` before the rule existed; renaming them would only
+    * rebuild two fixtures.
+    *
+    * @param row   registry infix: `ann_<row><lifecycle>_topk`
+    * @param probes (spark, dir, index path, query) => probe partitions
+    * @param serve  (index path, live probed rows, query, k) => top-k
+    *               `(vec_id, score)`
     */
-  def annDeleteTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_lshdel_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    ResultCache.buildIfAbsent(spark,
-      withPlantedSelfCopies(spark, Tables.embeddings(spark, dir)),
-      s"lsh:bits=${defaultLsh.nBits}:seed=42:lifecycle=delete:v1", path) {
-      IndexBuilder.buildLshIndex(
-        withPlantedSelfCopies(spark, Tables.embeddings(spark, dir)),
-        "embedding", defaultLsh, path)
+  private final case class Family(
+      row: String, tag: String, stem: String, streamStem: String,
+      partCol: String,
+      build: (DataFrame, String) => Unit,
+      append: (DataFrame, String) => Unit,
+      train: (DataFrame, String) => Unit,
+      stage: (DataFrame, String, Long) => Unit,
+      probes: (SparkSession, String, String, Array[Float]) => Seq[Int],
+      serve: (String, DataFrame, Array[Float], Int) => DataFrame)
+
+  /** Exact 6-dp cosine rescore + ordered take — the LSH and IVF serve. */
+  private def exactServe(live: DataFrame, qv: Array[Float], k: Int): DataFrame =
+    live.withColumn("score", round(
+        graft.vector.VectorFunctions.cosineUnit(
+          col("embedding"), typedlit(qv.toSeq)), 6))
+      .orderBy(col("score").desc, col("vec_id").asc)
+      .limit(k)
+      .select("vec_id", "score")
+
+  /** The IVF families' probes: the tuned-nProbe nearest centroids of the
+    * index's own sidecar. A planted copy sits at the query point, so its
+    * own cluster is the rank-1 centroid and is probed at any nProbe ≥ 1 —
+    * every IVF row's oracle is nProbe-invariant. */
+  private def ivfProbes(spark: SparkSession, dir: String, path: String,
+      qv: Array[Float]): Seq[Int] =
+    IndexBuilder.nearestClusters(IndexBuilder.loadIvfCentroids(path), qv,
+      nProbe = tunedNProbe(spark, dir))
+
+  private val families: Seq[Family] = Seq(
+    // LSH: `bucket=` partitions from the seeded hyperplanes (nothing to
+    // train); the tuned-radius multi-probe set always holds the query's
+    // own bucket, where every planted copy hashes by construction.
+    Family("", s"lsh:bits=${defaultLsh.nBits}:seed=42", "lsh", "lsh", "bucket",
+      build = (df, p) => IndexBuilder.buildLshIndex(df, "embedding", defaultLsh, p),
+      append = (df, p) => IndexBuilder.appendToLshIndex(df, "embedding", defaultLsh, p),
+      train = (_, _) => (),
+      stage = (df, r, b) => IndexBuilder.stageLshBatch(df, "embedding", defaultLsh, r, b),
+      probes = (spark, dir, _, qv) => defaultLsh.probes(
+        defaultLsh.signature(qv.toSeq), radius = tunedRadius(spark, dir)),
+      serve = (_, live, qv, k) => exactServe(live, qv, k)),
+    // IVF: `cluster_id=` partitions plus the centroid sidecar; appends
+    // and staged batches assign against the sidecar, never refit
+    // (add-after-train), so a copy lands in vector 0's cluster.
+    Family("ivf_", "ivf:clusters=16:seed=42", "ivf", "ivf", "cluster_id",
+      build = (df, p) => IndexBuilder.buildIvfIndex(
+        df, "embedding", numClusters = 16, seed = 42L, p),
+      append = (df, p) => IndexBuilder.appendToIvfIndex(df, "embedding", p),
+      train = (df, r) => IndexBuilder.trainIvfCentroids(
+        df, "embedding", numClusters = 16, seed = 42L, r),
+      stage = (df, r, b) => IndexBuilder.stageIvfBatch(df, "embedding", r, b),
+      probes = ivfProbes, serve = (_, live, qv, k) => exactServe(live, qv, k)),
+    // IVF-PQ (the FAISS `IVFx,PQy` layout): rows carry m-byte `pq_codes`,
+    // and the codebooks are a second sidecar. The serve is the
+    // stored-code ADC coarse pass (overscan 16), then an exact rescore of
+    // the tie-inclusive survivors. Encoding is a pure function of the
+    // vector under the seeded fits, so the copies carry vector 0's exact
+    // code bytes. They ADC-score at the shared maximum and rescore to 1.0.
+    Family("ivf_pq_", "ivfpq:clusters=16:seed=42", "ivfpq", "ivfpq", "cluster_id",
+      build = (df, p) => PQ.buildIvfPqIndex(df, "embedding", numClusters = 16, seed = 42L, p),
+      append = (df, p) => PQ.appendToIvfPqIndex(df, "embedding", p),
+      train = (df, r) => PQ.trainIvfPqSidecars(df, "embedding", numClusters = 16, seed = 42L, r),
+      stage = (df, r, b) => PQ.stagePqBatch(df, "embedding", r, b),
+      probes = ivfProbes,
+      serve = (p, live, qv, k) => PQ.pqSearchEncoded(
+        live, "embedding", "vec_id", PQ.loadPqCodebooks(p), qv, k, overscan = 16)),
+    // IVF-SQ8: rows carry a per-vector int8 (q_scale, q_codes) pair.
+    // Quantization has no codebook, so the centroid sidecar is the only
+    // trained state. The serve is the codes-only coarse pass, then an
+    // exact rescore. The copies quantize bit-identically to vector 0.
+    Family("ivf_sq8_", "ivfsq8:clusters=16:seed=42", "ivfsq8", "sq8", "cluster_id",
+      build = (df, p) => SQ8.buildIvfSq8Index(df, "embedding", numClusters = 16, seed = 42L, p),
+      append = (df, p) => SQ8.appendToIvfSq8Index(df, "embedding", p),
+      train = (df, r) => IndexBuilder.trainIvfCentroids(
+        df, "embedding", numClusters = 16, seed = 42L, r),
+      stage = (df, r, b) => SQ8.stageSq8Batch(df, "embedding", r, b),
+      probes = ivfProbes,
+      serve = (_, live, qv, k) => SQ8.quantizedKnn(live, "embedding", "vec_id", qv, k)))
+
+  /** The index at `path` read and pruned to the query's probe partitions. */
+  private def probedScan(f: Family, spark: SparkSession, dir: String,
+      path: String, qv: Array[Float]): DataFrame =
+    spark.read.parquet(path)
+      .filter(col(f.partCol).isin(f.probes(spark, dir, path, qv): _*))
+
+  /** DELETE without a rebuild (`ann_<f>delete_topk`). Deletes land as a
+    * delta-sized tombstone sidecar. This is the MOR discipline: index
+    * files, centroids and codebooks are never touched, so at 100 TB a
+    * delete is one tiny write. The reference rebuilds the whole
+    * collection on delete (SURVEY §2.2 K2). The serve anti-joins the
+    * broadcast sidecar on the probed scan. For PQ and SQ8 the anti-join
+    * comes BEFORE the coarse pass, as a pre-filter. A deleted row left in
+    * the coarse set would take overscan slots and shift the
+    * tie-inclusive cutoff, so post-filtering a coarse top-set loses
+    * results by construction.
+    *
+    * DELETE+FOLD (`ann_<f>compacted_delete_topk`) is the maintenance half.
+    * `Compaction.foldTombstones` discovers the partition key from the
+    * directory names. It rewrites only the affected leaves, with all
+    * their columns (PQ codes, SQ8 codes and scales ride along), through
+    * the tmp/bak swap, then truncates the sidecar. The underscore-hidden
+    * sidecars survive. So steady deletes cannot build up an anti-join tax
+    * on every query. The fold mutates the index in place, so the cached
+    * unit is the whole build + tombstone + fold sequence.
+    *
+    * Oracle (annDeleteTopkSql): delete 5 of the 9 planted copies; the
+    * top-5 must be exactly {0, 100005..100008} at cosine 1.0. A tombstone
+    * leak or an over-delete perturbs the set. Folded rows take no
+    * anti-join, which pins the invariance (the mor_compact trick): the
+    * folded index alone must stop serving the deleted rows. A fold leak,
+    * an over-delete or a corrupted untouched partition perturbs the same
+    * oracle. CompactionSpec also pins untouched buckets byte-identical
+    * and the sidecar empty after the fold.
+    */
+  private def deleteRow(f: Family, fold: Boolean)(
+      spark: SparkSession, dir: String): DataFrame = {
+    val path = Tables.scratchPath("graft_" + f.stem + (if (fold) "cdel" else "del"), dir)
+    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
+    ResultCache.buildIfAbsent(spark, corpus,
+      s"${f.tag}:lifecycle=delete${if (fold) "+fold" else ""}:v1", path) {
+      f.build(corpus, path)
       // the delete commit: tombstones only, index untouched
       spark.range(100000L, 100005L).toDF("vec_id")
         .write.mode("overwrite").parquet(path + "_tombstones")
+      if (fold)
+        graft.ingest.Compaction.foldTombstones(spark, path, path + "_tombstones")
     }
-    val tombstones = spark.read.parquet(path + "_tombstones")
     val qv = queryVec(spark, dir, 0L)
-    val probes = defaultLsh.probes(defaultLsh.signature(qv.toSeq),
-      radius = tunedRadius(spark, dir))
-    spark.read.parquet(path)
-      .filter(col("bucket").isin(probes: _*))
-      .join(broadcast(tombstones), Seq("vec_id"), "left_anti")
-      .withColumn("score", round(
-        graft.vector.VectorFunctions.cosineUnit(
-          col("embedding"), typedlit(qv.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select("vec_id", "score")
+    val scan = probedScan(f, spark, dir, path, qv)
+    f.serve(path, if (fold) scan else scan.join(
+      broadcast(spark.read.parquet(path + "_tombstones")), Seq("vec_id"), "left_anti"),
+      qv, 5)
   }
 
-  private val annDeleteTopkSql =
-    """SELECT vec_id, 1.0::DOUBLE AS score FROM (
-      |  SELECT vec_id FROM embeddings WHERE vec_id = 0
-      |  UNION ALL
-      |  SELECT vec_id + 100000 FROM embeddings WHERE vec_id BETWEEN 5 AND 8) t
-      |ORDER BY vec_id""".stripMargin
-
-  /** COMPACTION folds the tombstone sidecar into the index — the second
-    * half of the MOR delete lifecycle (annDeleteTopk is the commit; this
-    * is the maintenance job): `Compaction.foldTombstones` anti-joins only
-    * the AFFECTED bucket partitions against the broadcast sidecar,
-    * rewrites them via the tmp/bak swap, and truncates the sidecar — so
-    * steady deletes can't accumulate an ever-growing anti-join tax on
-    * every query. The invariance-pinning trick (mor_compact): the oracle
-    * is annDeleteTopkSql VERBATIM, but the query here runs with NO
-    * tombstone anti-join — the index alone must no longer serve the
-    * deleted rows. A fold leak (doomed row survives), over-delete, or a
-    * fold that corrupts an untouched bucket all perturb the row set.
-    * CompactionSpec additionally pins untouched buckets byte-identical
-    * and the sidecar empty after the fold.
+  /** UPSERT without a rebuild or refit (`ann_<f>upsert_topk`): the
+    * "document was re-embedded" flow, composed from the two maintenance
+    * primitives. The old version is tombstoned. The NEW vector is
+    * appended through the family's persisted state (hyperplanes,
+    * centroids, codebooks; add-after-train) and lands in whatever
+    * partition its new embedding picks. Rows carry a commit `seq`, and
+    * the tombstone is a WATERMARK: it kills the vec_id's rows with
+    * `seq ≤ upto_seq`. An id-level tombstone would also kill the
+    * replacement. Plain latest-wins without tombstones breaks under probe
+    * pruning, because the old and new versions live in different
+    * partitions and a query probing only the old one's partition would
+    * serve the stale row. For PQ and SQ8 the watermark applies before the
+    * coarse pass, for the delete row's pre-filter reason. An upsert costs
+    * one tiny sidecar write and one append.
+    *
+    * UPSERT+FOLD (`ann_<f>compacted_upsert_topk`): the fold must kill
+    * exactly `seq ≤ upto_seq` in the old partition and KEEP the
+    * replacement in its new one, and the folded query takes no anti-join.
+    *
+    * Oracle (annUpsertTopkSql, for both): copy 100000 is re-embedded from
+    * vector 0's embedding to vector 1's, so the top-5 must be
+    * {0, 100001..100004}. A missed watermark keeps the stale 100000 at
+    * 1.0. A fold that also killed the replacement (an id-level delete
+    * bug) or kept the stale version perturbs the set too.
     */
-  def annCompactedDeleteTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_lshcdel_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    // the fold rewrites index partitions in place, so the cached unit is
-    // the WHOLE build+tombstone+fold sequence (the buildIfAbsent rule)
+  private def upsertRow(f: Family, fold: Boolean)(
+      spark: SparkSession, dir: String): DataFrame = {
+    val path = Tables.scratchPath("graft_" + f.stem + (if (fold) "cupsert" else "upsert"), dir)
+    val e = Tables.embeddings(spark, dir)
+    val corpus = withPlantedSelfCopies(spark, e)
     ResultCache.buildIfAbsent(spark, corpus,
-      s"lsh:bits=${defaultLsh.nBits}:seed=42:lifecycle=delete+fold:v1", path) {
-      IndexBuilder.buildLshIndex(corpus, "embedding", defaultLsh, path)
-      spark.range(100000L, 100005L).toDF("vec_id")
+      s"${f.tag}:lifecycle=${if (fold) "upsert+fold" else "upsert-raw"}:v1", path) {
+      f.build(corpus.withColumn("seq", lit(0L)), path)
+      // the upsert commit: watermark-tombstone the old version, append the new
+      spark.range(100000L, 100001L).toDF("t_vec_id")
+        .withColumn("upto_seq", lit(0L))
         .write.mode("overwrite").parquet(path + "_tombstones")
-      graft.ingest.Compaction.foldTombstones(spark, path, path + "_tombstones")
+      f.append(spark.range(100000L, 100001L).toDF("vec_id")
+        .crossJoin(broadcast(e.filter(col("vec_id") === 1L).select(col("embedding"))))
+        .select(col("vec_id"), col("embedding"), lit(1L).as("seq")), path)
+      if (fold)
+        graft.ingest.Compaction.foldTombstones(spark, path, path + "_tombstones")
     }
     val qv = queryVec(spark, dir, 0L)
-    val probes = defaultLsh.probes(defaultLsh.signature(qv.toSeq),
-      radius = tunedRadius(spark, dir))
-    spark.read.parquet(path)
-      .filter(col("bucket").isin(probes: _*))
-      .withColumn("score", round(
-        graft.vector.VectorFunctions.cosineUnit(
-          col("embedding"), typedlit(qv.toSeq)), 6))
+    val scan = probedScan(f, spark, dir, path, qv)
+    f.serve(path, if (fold) scan else scan.join(
+      broadcast(spark.read.parquet(path + "_tombstones")),
+      col("vec_id") === col("t_vec_id") && col("seq") <= col("upto_seq"),
+      "left_anti"), qv, 5)
+  }
+
+  /** VERSIONED index reads (`ann_<f>time_travel_topk`): the Iceberg
+    * snapshot model applied to the vector index. Every build or append
+    * commits, through the CAS version log, a manifest listing its
+    * version's data files. The data files land FIRST and the version
+    * claim after, so a reader of v1 never sees a torn append. A reader
+    * pins a version by resolving files through the manifest alone: no
+    * copies, no snapshot dirs. Probe pruning happens AT THE MANIFEST,
+    * because file paths carry their `<partCol>=` partition. The driver
+    * filters the file list to the probe partitions before any scan
+    * (file-count bounded). The trained sidecars are shared across
+    * versions: the append assigns and encodes against them and never
+    * refits, so pinning v1 costs no sidecar copy. Each version serves
+    * through the family's full serve stack over its pinned file set
+    * alone.
+    *
+    * Oracle (annTimeTravelTopkSql): v1 indexes the corpus plus copies
+    * 100000..100004, v2 appends 100005..100008. The v1 top-6 and the v2
+    * top-10 are both provable. Serving a version from the wrong file set
+    * (a torn append visible at v1, lost files at v2) perturbs the row.
+    */
+  private def timeTravelRow(f: Family)(spark: SparkSession, dir: String): DataFrame = {
+    val path = Tables.scratchPath(s"graft_${f.stem}tt", dir)
+    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
+    ResultCache.buildIfAbsent(spark, corpus, s"${f.tag}:lifecycle=timetravel:v2", path) {
+      resetIndexLog(path)
+      f.build(e.unionByName(corpus.filter(col("vec_id").between(100000L, 100004L))), path)
+      val v1 = listIndexFiles(spark, path)
+      commitIndexVersion(spark, path, _ => v1)
+      f.append(corpus.filter(col("vec_id") >= 100005L), path)
+      val newFiles = listIndexFiles(spark, path).diff(v1)
+      commitIndexVersion(spark, path, head => head ++ newFiles)
+    }
+    val qv = queryVec(spark, dir, 0L)
+    val probes = f.probes(spark, dir, path, qv).toSet
+    def readVersion(v: Long, k: Int): DataFrame =
+      f.serve(path, spark.read.option("basePath", path)
+          .parquet(indexVersionFiles(spark, path, v, f.partCol, probes): _*)
+          .filter(col(f.partCol).isin(probes.toSeq: _*)), qv, k)
+        .select(lit(v).as("version"), col("vec_id"), col("score"))
+    readVersion(1L, 6).unionByName(readVersion(2L, 10))
+      .orderBy("version", "vec_id")
+  }
+
+  /** SHARDED scatter-gather serving (`ann_<f>sharded_topk`): the fleet
+    * layout. The corpus is split by a pure id hash across
+    * `shardCount` independently built and trained index tables: per-shard
+    * KMeans fits, per-shard PQ codebooks. At 1000 executors no single
+    * index or fit spans the corpus, and a shard builds, compacts, retrains
+    * or dies without touching the others. Routing needs no directory.
+    * Each shard answers from its own probed scan and serve, and the
+    * gather re-tops the union of the per-shard top-ks. That is correct by
+    * the scatter-gather invariant: every global top-k member is in its own
+    * shard's top-k. For the IVF families there is also a per-shard
+    * argument: a planted copy sits at the query point, so within ITS shard
+    * its assigned centroid is the nearest one and is probed at any
+    * nProbe ≥ 1. SQ8 codes are per-vector, so shard membership cannot
+    * change a code.
+    *
+    * Oracle (annSelfQueryTopkSql): the planted copies 100000..100008 hash
+    * to different shards. A lost shard, a broken merge, or a shard build
+    * that dropped rows therefore perturbs the exact top-10.
+    */
+  private def shardedRow(f: Family)(spark: SparkSession, dir: String): DataFrame = {
+    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
+    val qv = queryVec(spark, dir, 0L)
+    val n = shardCount(spark)
+    val shardTops = (0 until n).map { shard =>
+      val path = Tables.scratchPath(s"graft_${f.stem}shard${shard}of$n", dir)
+      val part = corpus.filter(
+        pmod(xxhash64(col("vec_id")), lit(n.toLong)) === shard.toLong)
+      ResultCache.buildIfAbsent(spark, corpus, s"${f.tag}:shard=$shard/$n:v1", path) {
+        f.build(part, path)
+      }
+      f.serve(path, probedScan(f, spark, dir, path, qv), qv, 10)
+    }
+    // the gather: union of per-shard top-ks, re-topped globally
+    shardTops.reduce(_ unionByName _)
       .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
+      .limit(10)
       .select("vec_id", "score")
   }
 
-  /** The ONE streaming-lifecycle fixture skeleton all eight streaming
-    * rows share (exactly-once ingest x4 families, retention fold x4):
-    * the planted-copy corpus, train-once sidecars, base batch 0, the
-    * planted-arrivals batch 1 plus its crash replay (the exactly-once
-    * proof), and — for the retention rows — the aged-batch fold with a
-    * single-leaf reclamation re-check on every serve. One skeleton
-    * means the stage/fold/roster contract cannot drift between families
-    * (the `stageClusteredBatch` rule, applied to the driver rows).
-    * Returns the standing root.
+  /** EXACTLY-ONCE streaming index ingestion (`ann_<f>streaming_ingest_topk`).
+    * The family trains ONCE on the base corpus: centroid and codebook
+    * sidecars at the root, no per-batch refits (train-then-add). Every
+    * micro-batch then lands through the family's `stage` in its own
+    * deterministic `batch=<id>/<partCol>=<p>` directory, written with
+    * overwrite. The batch that delivered the planted copies is REPLAYED,
+    * which is the redelivery every foreachBatch sink sees after a crash.
+    * The replay must rewrite its own `batch=1` directory, not append a
+    * second copy: duplicated copies would displace true neighbours in the
+    * limit-10. The driver row IS the exactly-once proof. The serve
+    * partition-prunes across every batch directory. PQ/SQ8 codes are read
+    * as written at stage time, so the row also pins that staged encodings
+    * round-trip.
+    *
+    * STREAM+FOLD (`ann_<f>streaming_compacted_topk`) is the retention
+    * half. `Compaction.foldStagedBatches` folds every aged batch
+    * directory into one consolidated `batch=0` leaf, re-clustered on the
+    * partition column. The fold is layout-generic, so codes and scales
+    * ride it verbatim. A require re-asserts the reclamation on every serve
+    * (exactly one batch leaf).
+    *
+    * The train + stage + replay (+ fold) sequence is a pure function of
+    * the corpus, so it is one cached unit and re-runs measure serving.
+    * One builder means the stage/fold/roster contract cannot drift between
+    * families (the `stageClusteredBatch` rule, applied to the driver
+    * rows). Oracle (annSelfQueryTopkSql): a fold or a replay that drops,
+    * duplicates or mis-partitions rows perturbs the top-10.
     */
-  private def streamingRoot(spark: SparkSession, dir: String,
-      family: String, cacheTag: String, partCol: String, fold: Boolean)(
-      train: (DataFrame, String) => Unit)(
-      stage: (DataFrame, String, Long) => Unit): String = {
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${family}_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
+  private def streamRow(f: Family, fold: Boolean)(
+      spark: SparkSession, dir: String): DataFrame = {
+    val root = Tables.scratchPath(
+      "graft_" + f.streamStem + (if (fold) "streamfold" else "stream"), dir)
     val e = Tables.embeddings(spark, dir)
     val corpus = withPlantedSelfCopies(spark, e)
     val base = e.select("vec_id", "embedding")
     val arrivals = corpus.filter(col("vec_id") >= 100000L)
-    ResultCache.buildIfAbsent(spark, corpus, cacheTag, root) {
-      train(base, root)
-      stage(base, root, 0L)
-      stage(arrivals, root, 1L)
+    ResultCache.buildIfAbsent(spark, corpus,
+      s"${f.tag}:lifecycle=${if (fold) "stream+fold" else "stream-ingest"}:v1", root) {
+      f.train(base, root)
+      f.stage(base, root, 0L)
+      f.stage(arrivals, root, 1L)
       // crash-replay of batch 1: same rows, same batch id, second delivery
-      stage(arrivals, root, 1L)
+      f.stage(arrivals, root, 1L)
       if (fold) {
         val folded = graft.ingest.Compaction.foldStagedBatches(
-          spark, root, partCol, minAgeMs = 0L)
+          spark, root, f.partCol, minAgeMs = 0L)
         require(folded == 2, s"expected to fold 2 batch leaves, folded $folded")
       }
     }
@@ -1528,251 +1771,34 @@ object AnnIndex extends QueryModule {
         .count(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
       require(leaves == 1, s"fold must leave one batch leaf, found $leaves")
     }
-    root
-  }
-
-  /** Pruned exact-rescore serve over a staged root — the shared scan
-    * shape of the LSH and IVF streaming rows: probe-filter on the
-    * partition column (partition pruning across every batch directory),
-    * exact cosine, ordered take. */
-  private def stagedScanServe(spark: SparkSession, root: String,
-      partCol: String, probeSet: Seq[Int], qv: Array[Float]): DataFrame =
-    spark.read.parquet(root)
-      .filter(col(partCol).isin(probeSet: _*))
-      .withColumn("score", round(
-        graft.vector.VectorFunctions.cosineUnit(
-          col("embedding"), typedlit(qv.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(10)
-      .select("vec_id", "score")
-
-  /** EXACTLY-ONCE streaming index ingestion end-to-end: micro-batches of
-    * arriving vectors land via `IndexBuilder.stageLshBatch` (deterministic
-    * per-batch directory + overwrite), and the batch that delivered the
-    * planted copies is REPLAYED — the at-least-once delivery every
-    * foreachBatch sink sees after a crash. Because the replay rewrites
-    * the same `batch=1` directory instead of appending, each copy exists
-    * exactly once, and the pruned top-10 equals the enumerable self-query
-    * oracle. An append-mode regression duplicates the copies, the
-    * duplicates displace true neighbors in the limit-10, and the row set
-    * breaks the compare — the driver row IS the exactly-once proof.
-    */
-  def annStreamingIngestTopk(spark: SparkSession, dir: String): DataFrame = {
-    val root = streamingRoot(spark, dir, "lshstream",
-      s"lsh:bits=${defaultLsh.nBits}:seed=42:lifecycle=stream-ingest:v1",
-      partCol = "bucket", fold = false)((_, _) => ())(
-      (df, r, b) => IndexBuilder.stageLshBatch(df, "embedding", defaultLsh, r, b))
     val qv = queryVec(spark, dir, 0L)
-    stagedScanServe(spark, root, "bucket",
-      defaultLsh.probes(defaultLsh.signature(qv.toSeq),
-        radius = tunedRadius(spark, dir)), qv)
+    f.serve(root, probedScan(f, spark, dir, root, qv), qv, 10)
   }
 
-  /** EXACTLY-ONCE streaming ingestion for the IVF family — the
-    * train-then-add contract under at-least-once delivery: the coarse
-    * quantizer trains ONCE on the base corpus (centroid sidecar at the
-    * root, no batch refits — `IndexBuilder.trainIvfCentroids`), then
-    * every micro-batch assigns against the standing sidecar and lands in
-    * its own deterministic `batch=<id>/cluster_id=<c>` directory with
-    * overwrite (`stageIvfBatch`). The batch that delivered the planted
-    * copies is REPLAYED — the redelivery every foreachBatch sink sees
-    * after a crash — and must rewrite its own directory, not append a
-    * second copy: duplicated copies would displace true neighbors in the
-    * limit-10 and break the enumerable self-query oracle. Serving
-    * partition-prunes on cluster_id across all batch directories. The
-    * train+stage+replay sequence is a pure function of the corpus — one
-    * cached unit, so re-runs measure serving (the LSH streaming row
-    * follows the same rule).
-    */
-  def annIvfStreamingIngestTopk(spark: SparkSession, dir: String): DataFrame = {
-    val root = streamingRoot(spark, dir, "ivfstream",
-      "ivf:clusters=16:seed=42:lifecycle=stream-ingest:v1",
-      partCol = "cluster_id", fold = false)(
-      (base, r) => IndexBuilder.trainIvfCentroids(base, "embedding",
-        numClusters = 16, seed = 42L, r))(
-      (df, r, b) => IndexBuilder.stageIvfBatch(df, "embedding", r, b))
-    val qv = queryVec(spark, dir, 0L)
-    stagedScanServe(spark, root, "cluster_id",
-      IndexBuilder.nearestClusters(
-        IndexBuilder.loadIvfCentroids(root), qv, tunedNProbe(spark, dir)), qv)
-  }
+  private type Row = (SparkSession, String) => DataFrame
 
-  /** EXACTLY-ONCE streaming ingestion for the IVF-PQ family — the FAISS
-    * train-then-add contract on the ENCODED layout: coarse centroids AND
-    * PQ codebooks train ONCE on the base corpus
-    * (`ProductQuantization.trainIvfPqSidecars` — sidecars only, no data),
-    * then every micro-batch assigns + PQ-encodes against the standing
-    * sidecars and lands in its deterministic `batch=<id>/cluster_id=<c>`
-    * directory with overwrite (`stagePqBatch`). The planted-copy batch is
-    * REPLAYED (the post-crash redelivery every foreachBatch sink sees)
-    * and must rewrite its own directory: duplicated copies would displace
-    * true neighbors in the limit-10 and break the enumerable self-query
-    * oracle. Serving is the stored-code ADC path (`ivfPqIndexTopK`):
-    * partition-pruned scan across all batch directories, codes-only
-    * coarse pass, exact rescore of the overscan survivors — codes are
-    * read as written at stage time, so the row also pins that staged
-    * encodings round-trip. One cached unit (IVF/LSH streaming rule).
-    */
-  def annIvfPqStreamingIngestTopk(spark: SparkSession, dir: String): DataFrame = {
-    val root = streamingRoot(spark, dir, "ivfpqstream",
-      "ivfpq:clusters=16:seed=42:lifecycle=stream-ingest:v1",
-      partCol = "cluster_id", fold = false)(
-      (base, r) => graft.vector.ProductQuantization.trainIvfPqSidecars(
-        base, "embedding", numClusters = 16, seed = 42L, r))(
-      (df, r, b) => graft.vector.ProductQuantization.stagePqBatch(df, "embedding", r, b))
-    graft.vector.ProductQuantization.ivfPqIndexTopK(
-      spark, root, "embedding", "vec_id", queryVec(spark, dir, 0L),
-      k = 10, nProbe = tunedNProbe(spark, dir))
-  }
-
-  /** EXACTLY-ONCE streaming ingestion for the IVF-SQ8 family — the same
-    * contract on the int8-quantized layout: SQ8 quantization is
-    * codebook-free (scale + codes are pure functions of the vector), so
-    * the trained state is just the coarse centroid sidecar
-    * (`IndexBuilder.trainIvfCentroids`); micro-batches assign + quantize
-    * against it (`Quantization.stageSq8Batch`), the copy batch replays
-    * into its own directory, and serving is the stored-codes coarse pass
-    * + exact rescore (`ivfSq8IndexTopK`) partition-pruned across all
-    * batch directories.
-    */
-  def annIvfSq8StreamingIngestTopk(spark: SparkSession, dir: String): DataFrame = {
-    val root = streamingRoot(spark, dir, "sq8stream",
-      "ivfsq8:clusters=16:seed=42:lifecycle=stream-ingest:v1",
-      partCol = "cluster_id", fold = false)(
-      (base, r) => IndexBuilder.trainIvfCentroids(base, "embedding",
-        numClusters = 16, seed = 42L, r))(
-      (df, r, b) => graft.vector.Quantization.stageSq8Batch(df, "embedding", r, b))
-    graft.vector.Quantization.ivfSq8IndexTopK(
-      spark, root, "embedding", "vec_id", queryVec(spark, dir, 0L),
-      k = 10, nProbe = tunedNProbe(spark, dir))
-  }
-
-  /** RETENTION for the streaming-staged LSH root — the reclamation half
-    * of `ann_streaming_ingest_topk`'s exactly-once staging, mirroring the
-    * minhash store fold: stage the base and the copy batch (plus its
-    * crash replay), then `Compaction.foldStagedBatches` folds every aged
-    * batch directory into one consolidated `batch=0` leaf re-clustered
-    * on bucket. The requires re-assert the reclamation on every serve
-    * (exactly one batch leaf), and the pruned top-10 over the FOLDED
-    * root must still equal the enumerable self-query oracle — a fold
-    * that drops, duplicates, or mis-buckets rows perturbs the set.
-    */
-  def annStreamingCompactedTopk(spark: SparkSession, dir: String): DataFrame = {
-    val root = streamingRoot(spark, dir, "lshstreamfold",
-      s"lsh:bits=${defaultLsh.nBits}:seed=42:lifecycle=stream+fold:v1",
-      partCol = "bucket", fold = true)((_, _) => ())(
-      (df, r, b) => IndexBuilder.stageLshBatch(df, "embedding", defaultLsh, r, b))
-    val qv = queryVec(spark, dir, 0L)
-    stagedScanServe(spark, root, "bucket",
-      defaultLsh.probes(defaultLsh.signature(qv.toSeq),
-        radius = tunedRadius(spark, dir)), qv)
-  }
-
-  /** The IVF form of the staged-root retention: train-once sidecar,
-    * stage base + copies (+ replay), fold aged batch directories into
-    * one `batch=0` leaf re-clustered on cluster_id. Same single-leaf
-    * requires and the same enumerable oracle over the folded root.
-    */
-  def annIvfStreamingCompactedTopk(spark: SparkSession, dir: String): DataFrame = {
-    val root = streamingRoot(spark, dir, "ivfstreamfold",
-      "ivf:clusters=16:seed=42:lifecycle=stream+fold:v1",
-      partCol = "cluster_id", fold = true)(
-      (base, r) => IndexBuilder.trainIvfCentroids(base, "embedding",
-        numClusters = 16, seed = 42L, r))(
-      (df, r, b) => IndexBuilder.stageIvfBatch(df, "embedding", r, b))
-    val qv = queryVec(spark, dir, 0L)
-    stagedScanServe(spark, root, "cluster_id",
-      IndexBuilder.nearestClusters(
-        IndexBuilder.loadIvfCentroids(root), qv, tunedNProbe(spark, dir)), qv)
-  }
-
-  /** The IVF-PQ form of the staged-root retention — the fold is layout-
-    * generic (it re-clusters whatever columns the rows carry), so the
-    * stored m-byte codes survive the rewrite verbatim and the folded
-    * root serves through the SAME stored-code ADC path as the unfolded
-    * one: a fold that corrupted or dropped a code column would perturb
-    * the coarse cutoff and the enumerable answer.
-    */
-  def annIvfPqStreamingCompactedTopk(spark: SparkSession, dir: String): DataFrame = {
-    val root = streamingRoot(spark, dir, "ivfpqstreamfold",
-      "ivfpq:clusters=16:seed=42:lifecycle=stream+fold:v1",
-      partCol = "cluster_id", fold = true)(
-      (base, r) => graft.vector.ProductQuantization.trainIvfPqSidecars(
-        base, "embedding", numClusters = 16, seed = 42L, r))(
-      (df, r, b) => graft.vector.ProductQuantization.stagePqBatch(df, "embedding", r, b))
-    graft.vector.ProductQuantization.ivfPqIndexTopK(
-      spark, root, "embedding", "vec_id", queryVec(spark, dir, 0L),
-      k = 10, nProbe = tunedNProbe(spark, dir))
-  }
-
-  /** The IVF-SQ8 form of the staged-root retention: the per-vector
-    * (scale, codes) pair rides the fold unchanged and the folded root
-    * serves through the stored-codes coarse pass + exact rescore.
-    */
-  def annIvfSq8StreamingCompactedTopk(spark: SparkSession, dir: String): DataFrame = {
-    val root = streamingRoot(spark, dir, "sq8streamfold",
-      "ivfsq8:clusters=16:seed=42:lifecycle=stream+fold:v1",
-      partCol = "cluster_id", fold = true)(
-      (base, r) => IndexBuilder.trainIvfCentroids(base, "embedding",
-        numClusters = 16, seed = 42L, r))(
-      (df, r, b) => graft.vector.Quantization.stageSq8Batch(df, "embedding", r, b))
-    graft.vector.Quantization.ivfSq8IndexTopK(
-      spark, root, "embedding", "vec_id", queryVec(spark, dir, 0L),
-      k = 10, nProbe = tunedNProbe(spark, dir))
-  }
-
-  /** UPSERT into the ANN index without a rebuild — the "document was
-    * re-embedded" flow, composed from the two maintenance primitives: the
-    * old version is tombstoned and the NEW vector is appended through the
-    * same seeded hyperplanes (`appendToLshIndex`), landing in whatever
-    * bucket the new embedding hashes to. Rows carry a commit `seq` and
-    * the tombstone is a WATERMARK (`kill vec_id rows with seq ≤
-    * upto_seq`) — an id-level tombstone would also kill the replacement,
-    * and plain latest-wins-without-tombstones breaks under probe pruning
-    * (the old and new versions live in different bucket partitions, so a
-    * query probing only the old version's bucket would serve the stale
-    * row). Upsert cost = one tiny sidecar write + one append; nothing is
-    * rebuilt, and compaction folds both later.
-    *
-    * Oracle by construction: copy 100000 is upserted from vector 0's
-    * embedding to vector 1's. The vec-0 query's top-5 must then be
-    * {0, 100001..100004} — serving the stale version (missed tombstone)
-    * keeps 100000 at score 1.0 and perturbs the row set.
-    */
-  def annUpsertTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_lshupsert_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir)
-    ResultCache.buildIfAbsent(spark, withPlantedSelfCopies(spark, e),
-      s"lsh:bits=${defaultLsh.nBits}:seed=42:lifecycle=upsert-raw:v1", path) {
-      IndexBuilder.buildLshIndex(
-        withPlantedSelfCopies(spark, e).withColumn("seq", lit(0L)),
-        "embedding", defaultLsh, path)
-      // the upsert commit: watermark-tombstone the old version, append the new
-      spark.range(100000L, 100001L).toDF("t_vec_id")
-        .withColumn("upto_seq", lit(0L))
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      val reEmbedded = spark.range(100000L, 100001L).toDF("vec_id")
-        .crossJoin(broadcast(e.filter(col("vec_id") === 1L).select(col("embedding"))))
-        .select(col("vec_id"), col("embedding"), lit(1L).as("seq"))
-      IndexBuilder.appendToLshIndex(reEmbedded, "embedding", defaultLsh, path)
+  /** The 32 family rows: (registry name, row, oracle SQL) for every
+    * (family × lifecycle). */
+  private def familyRows: Seq[(String, Row, String)] =
+    families.flatMap { f =>
+      Seq[(String, Row, String)](
+        ("delete", deleteRow(f, fold = false), annDeleteTopkSql),
+        ("compacted_delete", deleteRow(f, fold = true), annDeleteTopkSql),
+        ("upsert", upsertRow(f, fold = false), annUpsertTopkSql),
+        ("compacted_upsert", upsertRow(f, fold = true), annUpsertTopkSql),
+        ("time_travel", timeTravelRow(f), annTimeTravelTopkSql),
+        ("sharded", shardedRow(f), annSelfQueryTopkSql),
+        ("streaming_ingest", streamRow(f, fold = false), annSelfQueryTopkSql),
+        ("streaming_compacted", streamRow(f, fold = true), annSelfQueryTopkSql))
+        .map { case (op, row, sql) => (s"ann_${f.row}${op}_topk", row, sql) }
     }
-    val tombstones = spark.read.parquet(path + "_tombstones")
-    val qv = queryVec(spark, dir, 0L)
-    val probes = defaultLsh.probes(defaultLsh.signature(qv.toSeq),
-      radius = tunedRadius(spark, dir))
-    spark.read.parquet(path)
-      .filter(col("bucket").isin(probes: _*))
-      .join(broadcast(tombstones),
-        col("vec_id") === col("t_vec_id") && col("seq") <= col("upto_seq"),
-        "left_anti")
-      .withColumn("score", round(
-        graft.vector.VectorFunctions.cosineUnit(
-          col("embedding"), typedlit(qv.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select("vec_id", "score")
-  }
+
+  private val annDeleteTopkSql =
+    """SELECT vec_id, 1.0::DOUBLE AS score FROM (
+      |  SELECT vec_id FROM embeddings WHERE vec_id = 0
+      |  UNION ALL
+      |  SELECT vec_id + 100000 FROM embeddings WHERE vec_id BETWEEN 5 AND 8) t
+      |ORDER BY vec_id""".stripMargin
 
   private val annUpsertTopkSql =
     """SELECT vec_id, 1.0::DOUBLE AS score FROM (
@@ -1780,345 +1806,6 @@ object AnnIndex extends QueryModule {
       |  UNION ALL
       |  SELECT vec_id + 100000 FROM embeddings WHERE vec_id BETWEEN 1 AND 4) t
       |ORDER BY vec_id""".stripMargin
-
-  /** The WATERMARK-tombstone fold — upsert's maintenance half: the fold
-    * must kill exactly the rows with `seq <= upto_seq` and KEEP the
-    * appended replacement (seq above the mark), which lives in a
-    * different bucket partition than the row it replaces. Same
-    * invariance pinning as annCompactedDeleteTopk: annUpsertTopkSql
-    * verbatim, no anti-join in the query — if the fold killed the
-    * replacement too (id-level delete bug) or kept the stale version,
-    * the row set breaks.
-    */
-  def annCompactedUpsertTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_lshcupsert_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir)
-    // build + watermark tombstone + append + fold — one deterministic
-    // sequence from the corpus, cached as one unit (the fold mutates)
-    ResultCache.buildIfAbsent(spark, withPlantedSelfCopies(spark, e),
-      s"lsh:bits=${defaultLsh.nBits}:seed=42:lifecycle=upsert+fold:v1", path) {
-      IndexBuilder.buildLshIndex(
-        withPlantedSelfCopies(spark, e).withColumn("seq", lit(0L)),
-        "embedding", defaultLsh, path)
-      spark.range(100000L, 100001L).toDF("t_vec_id")
-        .withColumn("upto_seq", lit(0L))
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      val reEmbedded = spark.range(100000L, 100001L).toDF("vec_id")
-        .crossJoin(broadcast(e.filter(col("vec_id") === 1L).select(col("embedding"))))
-        .select(col("vec_id"), col("embedding"), lit(1L).as("seq"))
-      IndexBuilder.appendToLshIndex(reEmbedded, "embedding", defaultLsh, path)
-      graft.ingest.Compaction.foldTombstones(spark, path, path + "_tombstones")
-    }
-    val qv = queryVec(spark, dir, 0L)
-    val probes = defaultLsh.probes(defaultLsh.signature(qv.toSeq),
-      radius = tunedRadius(spark, dir))
-    spark.read.parquet(path)
-      .filter(col("bucket").isin(probes: _*))
-      .withColumn("score", round(
-        graft.vector.VectorFunctions.cosineUnit(
-          col("embedding"), typedlit(qv.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select("vec_id", "score")
-  }
-
-  /** DELETE from the IVF index without a rebuild — the lifecycle parity
-    * the cluster-partitioned family was missing (LSH had
-    * delete/upsert/compaction, NSW/HNSW delete+fold, BM25 the full set;
-    * IVF had none): deletes land as the SAME tombstone-sidecar shape, and
-    * the query path anti-joins the broadcast sidecar after the
-    * nProbe-pruned scan — identical discipline, different pruning key
-    * (`cluster_id=` directories instead of `bucket=`). At 100 TB a delete
-    * stays one tiny write; no cluster partition is rewritten.
-    *
-    * Oracle by construction (annDeleteTopkSql verbatim): delete 5 of the
-    * 9 planted copies; the tuned-nProbe top-5 must be exactly {vector 0,
-    * the 4 surviving copies} at cosine 1.0.
-    */
-  def annIvfDeleteTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfdel_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    ResultCache.buildIfAbsent(spark,
-      withPlantedSelfCopies(spark, Tables.embeddings(spark, dir)),
-      "ivf:clusters=16:seed=42:lifecycle=delete:v1", path) {
-      IndexBuilder.buildIvfIndex(
-        withPlantedSelfCopies(spark, Tables.embeddings(spark, dir)),
-        "embedding", numClusters = 16, seed = 42L, path)
-      // the delete commit: tombstones only, index untouched
-      spark.range(100000L, 100005L).toDF("vec_id")
-        .write.mode("overwrite").parquet(path + "_tombstones")
-    }
-    val tombstones = spark.read.parquet(path + "_tombstones")
-    val qv = queryVec(spark, dir, 0L)
-    val probeIds = IndexBuilder.nearestClusters(
-      IndexBuilder.loadIvfCentroids(path), qv, nProbe = tunedNProbe(spark, dir))
-    spark.read.parquet(path)
-      .filter(col("cluster_id").isin(probeIds: _*))
-      .join(broadcast(tombstones), Seq("vec_id"), "left_anti")
-      .withColumn("score", round(
-        graft.vector.VectorFunctions.cosineUnit(
-          col("embedding"), typedlit(qv.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select("vec_id", "score")
-  }
-
-  /** COMPACTION folds the IVF tombstone sidecar into the cluster
-    * partitions — `Compaction.foldTombstones` is partition-key-generic
-    * (it discovers the key from the directory names), so the exact
-    * affected-partition fold + tmp/bak swap + sidecar-truncates-last
-    * discipline the LSH index gets now runs over `cluster_id=` leaves,
-    * with the centroid sidecar untouched (underscore-hidden, never a
-    * partition). Invariance pinning as annCompactedDeleteTopk: the oracle
-    * is annDeleteTopkSql VERBATIM but the query takes NO anti-join — the
-    * folded index alone must no longer serve the deleted rows.
-    */
-  def annIvfCompactedDeleteTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfcdel_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    // the fold rewrites cluster partitions in place, so the cached unit is
-    // the WHOLE build+tombstone+fold sequence (the buildIfAbsent rule)
-    ResultCache.buildIfAbsent(spark, corpus,
-      "ivf:clusters=16:seed=42:lifecycle=delete+fold:v1", path) {
-      IndexBuilder.buildIvfIndex(corpus, "embedding",
-        numClusters = 16, seed = 42L, path)
-      spark.range(100000L, 100005L).toDF("vec_id")
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      graft.ingest.Compaction.foldTombstones(spark, path, path + "_tombstones")
-    }
-    val qv = queryVec(spark, dir, 0L)
-    val probeIds = IndexBuilder.nearestClusters(
-      IndexBuilder.loadIvfCentroids(path), qv, nProbe = tunedNProbe(spark, dir))
-    spark.read.parquet(path)
-      .filter(col("cluster_id").isin(probeIds: _*))
-      .withColumn("score", round(
-        graft.vector.VectorFunctions.cosineUnit(
-          col("embedding"), typedlit(qv.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select("vec_id", "score")
-  }
-
-  /** UPSERT into the IVF index without a rebuild or refit — the
-    * "document was re-embedded" flow under cluster pruning: the old and
-    * new versions live in DIFFERENT cluster directories (the new
-    * embedding assigns against the persisted centroid sidecar, the
-    * add-after-train contract), so plain latest-wins breaks under nProbe
-    * pruning exactly as it does under bucket pruning — hence the same
-    * seq-watermark tombstone (`kill vec_id rows with seq ≤ upto_seq`)
-    * that must NOT kill the appended replacement. Upsert cost = one tiny
-    * sidecar write + one append; the KMeans fit is never redone.
-    *
-    * Oracle (annUpsertTopkSql verbatim): copy 100000 re-embedded from
-    * vector 0's embedding to vector 1's; the vec-0 query's top-5 must be
-    * {0, 100001..100004} — a missed watermark keeps stale 100000 at 1.0
-    * and perturbs the row set.
-    */
-  def annIvfUpsertTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfupsert_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir)
-    ResultCache.buildIfAbsent(spark, withPlantedSelfCopies(spark, e),
-      "ivf:clusters=16:seed=42:lifecycle=upsert-raw:v1", path) {
-      IndexBuilder.buildIvfIndex(
-        withPlantedSelfCopies(spark, e).withColumn("seq", lit(0L)),
-        "embedding", numClusters = 16, seed = 42L, path)
-      // the upsert commit: watermark-tombstone the old version, append the
-      // new one through the persisted centroids (no refit)
-      spark.range(100000L, 100001L).toDF("t_vec_id")
-        .withColumn("upto_seq", lit(0L))
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      val reEmbedded = spark.range(100000L, 100001L).toDF("vec_id")
-        .crossJoin(broadcast(e.filter(col("vec_id") === 1L).select(col("embedding"))))
-        .select(col("vec_id"), col("embedding"), lit(1L).as("seq"))
-      IndexBuilder.appendToIvfIndex(reEmbedded, "embedding", path)
-    }
-    val tombstones = spark.read.parquet(path + "_tombstones")
-    val qv = queryVec(spark, dir, 0L)
-    val probeIds = IndexBuilder.nearestClusters(
-      IndexBuilder.loadIvfCentroids(path), qv, nProbe = tunedNProbe(spark, dir))
-    spark.read.parquet(path)
-      .filter(col("cluster_id").isin(probeIds: _*))
-      .join(broadcast(tombstones),
-        col("vec_id") === col("t_vec_id") && col("seq") <= col("upto_seq"),
-        "left_anti")
-      .withColumn("score", round(
-        graft.vector.VectorFunctions.cosineUnit(
-          col("embedding"), typedlit(qv.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select("vec_id", "score")
-  }
-
-  /** The IVF watermark-tombstone fold — upsert's maintenance half over
-    * `cluster_id=` partitions: the fold must kill exactly the rows with
-    * `seq <= upto_seq` in the old version's cluster and KEEP the
-    * appended replacement in its different cluster. Invariance pinning
-    * as annCompactedUpsertTopk: annUpsertTopkSql verbatim, no anti-join
-    * in the query.
-    */
-  def annIvfCompactedUpsertTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfcupsert_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir)
-    ResultCache.buildIfAbsent(spark, withPlantedSelfCopies(spark, e),
-      "ivf:clusters=16:seed=42:lifecycle=upsert+fold:v1", path) {
-      IndexBuilder.buildIvfIndex(
-        withPlantedSelfCopies(spark, e).withColumn("seq", lit(0L)),
-        "embedding", numClusters = 16, seed = 42L, path)
-      spark.range(100000L, 100001L).toDF("t_vec_id")
-        .withColumn("upto_seq", lit(0L))
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      val reEmbedded = spark.range(100000L, 100001L).toDF("vec_id")
-        .crossJoin(broadcast(e.filter(col("vec_id") === 1L).select(col("embedding"))))
-        .select(col("vec_id"), col("embedding"), lit(1L).as("seq"))
-      IndexBuilder.appendToIvfIndex(reEmbedded, "embedding", path)
-      graft.ingest.Compaction.foldTombstones(spark, path, path + "_tombstones")
-    }
-    val qv = queryVec(spark, dir, 0L)
-    val probeIds = IndexBuilder.nearestClusters(
-      IndexBuilder.loadIvfCentroids(path), qv, nProbe = tunedNProbe(spark, dir))
-    spark.read.parquet(path)
-      .filter(col("cluster_id").isin(probeIds: _*))
-      .withColumn("score", round(
-        graft.vector.VectorFunctions.cosineUnit(
-          col("embedding"), typedlit(qv.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select("vec_id", "score")
-  }
-
-  /** DELETE from the persisted IVF-PQ index — the codes-carrying table
-    * gets the same tombstone discipline as its float-only sibling, with
-    * one semantics point the PQ stages force: the anti-join applies
-    * BEFORE the ADC coarse pass (pre-filtering, like the metadata-
-    * filtered row), because a deleted row left in the coarse set would
-    * occupy overscan slots and shift the tie-inclusive cutoff — post-
-    * filtering a coarse top-set loses results by construction. Delete
-    * cost stays one sidecar write; codes, centroids, codebooks untouched.
-    *
-    * Oracle (annDeleteTopkSql verbatim): planted copies encode to vector
-    * 0's exact code bytes, so the surviving 5 still ADC-score at the
-    * shared max and rescore to 1.0 — only a tombstone leak or over-delete
-    * perturbs the set.
-    */
-  def annIvfPqDeleteTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfpqdel_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    ResultCache.buildIfAbsent(spark,
-      withPlantedSelfCopies(spark, Tables.embeddings(spark, dir)),
-      "ivfpq:clusters=16:seed=42:lifecycle=delete:v1", path) {
-      graft.vector.ProductQuantization.buildIvfPqIndex(
-        withPlantedSelfCopies(spark, Tables.embeddings(spark, dir)),
-        "embedding", numClusters = 16, seed = 42L, path)
-      spark.range(100000L, 100005L).toDF("vec_id")
-        .write.mode("overwrite").parquet(path + "_tombstones")
-    }
-    val tombstones = spark.read.parquet(path + "_tombstones")
-    val qv = queryVec(spark, dir, 0L)
-    val centers = IndexBuilder.loadIvfCentroids(path)
-    val books = graft.vector.ProductQuantization.loadPqCodebooks(path)
-    val probes = IndexBuilder.nearestClusters(centers, qv,
-      nProbe = tunedNProbe(spark, dir))
-    val live = spark.read.parquet(path)
-      .filter(col("cluster_id").isin(probes: _*))
-      .join(broadcast(tombstones), Seq("vec_id"), "left_anti")
-    graft.vector.ProductQuantization.pqSearchEncoded(
-      live, "embedding", "vec_id", books, qv, k = 5, overscan = 16)
-  }
-
-  /** COMPACTION folds the IVF-PQ tombstones into the cluster partitions —
-    * `Compaction.foldTombstones` rewrites affected `cluster_id=` leaves
-    * with ALL their columns (the m-byte codes ride along), and both
-    * trained sidecars (centroids + codebooks, underscore-hidden) survive.
-    * Invariance pinning: annDeleteTopkSql verbatim, the query takes NO
-    * anti-join — the folded codes table alone must stop serving the
-    * deleted rows through the full ADC + rescore stack.
-    */
-  def annIvfPqCompactedDeleteTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfpqcdel_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    ResultCache.buildIfAbsent(spark, corpus,
-      "ivfpq:clusters=16:seed=42:lifecycle=delete+fold:v1", path) {
-      graft.vector.ProductQuantization.buildIvfPqIndex(
-        corpus, "embedding", numClusters = 16, seed = 42L, path)
-      spark.range(100000L, 100005L).toDF("vec_id")
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      graft.ingest.Compaction.foldTombstones(spark, path, path + "_tombstones")
-    }
-    graft.vector.ProductQuantization.ivfPqIndexTopK(
-      spark, path, "embedding", "vec_id", queryVec(spark, dir, 0L),
-      k = 5, nProbe = tunedNProbe(spark, dir))
-  }
-
-  /** UPSERT into the persisted IVF-PQ index — re-embed without retrain:
-    * the replacement assigns and ENCODES against the persisted sidecars
-    * (add-after-train for both quantizers), landing codes in its new
-    * cluster; the old version dies by seq-watermark (an id-level
-    * tombstone would kill the replacement), applied before the ADC pass
-    * for the same pre-filter reason as the delete row.
-    */
-  def annIvfPqUpsertTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfpqupsert_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir)
-    ResultCache.buildIfAbsent(spark, withPlantedSelfCopies(spark, e),
-      "ivfpq:clusters=16:seed=42:lifecycle=upsert-raw:v1", path) {
-      graft.vector.ProductQuantization.buildIvfPqIndex(
-        withPlantedSelfCopies(spark, e).withColumn("seq", lit(0L)),
-        "embedding", numClusters = 16, seed = 42L, path)
-      spark.range(100000L, 100001L).toDF("t_vec_id")
-        .withColumn("upto_seq", lit(0L))
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      val reEmbedded = spark.range(100000L, 100001L).toDF("vec_id")
-        .crossJoin(broadcast(e.filter(col("vec_id") === 1L).select(col("embedding"))))
-        .select(col("vec_id"), col("embedding"), lit(1L).as("seq"))
-      graft.vector.ProductQuantization.appendToIvfPqIndex(reEmbedded, "embedding", path)
-    }
-    val tombstones = spark.read.parquet(path + "_tombstones")
-    val qv = queryVec(spark, dir, 0L)
-    val books = graft.vector.ProductQuantization.loadPqCodebooks(path)
-    val probes = IndexBuilder.nearestClusters(
-      IndexBuilder.loadIvfCentroids(path), qv, nProbe = tunedNProbe(spark, dir))
-    val live = spark.read.parquet(path)
-      .filter(col("cluster_id").isin(probes: _*))
-      .join(broadcast(tombstones),
-        col("vec_id") === col("t_vec_id") && col("seq") <= col("upto_seq"),
-        "left_anti")
-    graft.vector.ProductQuantization.pqSearchEncoded(
-      live, "embedding", "vec_id", books, qv, k = 5, overscan = 16)
-  }
-
-  /** The IVF-PQ watermark fold — the upsert's maintenance half over the
-    * codes table: kill exactly `seq <= upto_seq` in the old cluster, keep
-    * the re-encoded replacement in its new one, sidecars untouched.
-    * annUpsertTopkSql verbatim, no anti-join in the query.
-    */
-  def annIvfPqCompactedUpsertTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfpqcupsert_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir)
-    ResultCache.buildIfAbsent(spark, withPlantedSelfCopies(spark, e),
-      "ivfpq:clusters=16:seed=42:lifecycle=upsert+fold:v1", path) {
-      graft.vector.ProductQuantization.buildIvfPqIndex(
-        withPlantedSelfCopies(spark, e).withColumn("seq", lit(0L)),
-        "embedding", numClusters = 16, seed = 42L, path)
-      spark.range(100000L, 100001L).toDF("t_vec_id")
-        .withColumn("upto_seq", lit(0L))
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      val reEmbedded = spark.range(100000L, 100001L).toDF("vec_id")
-        .crossJoin(broadcast(e.filter(col("vec_id") === 1L).select(col("embedding"))))
-        .select(col("vec_id"), col("embedding"), lit(1L).as("seq"))
-      graft.vector.ProductQuantization.appendToIvfPqIndex(reEmbedded, "embedding", path)
-      graft.ingest.Compaction.foldTombstones(spark, path, path + "_tombstones")
-    }
-    graft.vector.ProductQuantization.ivfPqIndexTopK(
-      spark, path, "embedding", "vec_id", queryVec(spark, dir, 0L),
-      k = 5, nProbe = tunedNProbe(spark, dir))
-  }
 
   /** Shard count for the scatter-gather rows — conf-read
     * (`spark.graft.ann.shardCount`, default 2) because the invariant
@@ -2128,51 +1815,6 @@ object AnnIndex extends QueryModule {
     */
   private[graft] def shardCount(spark: SparkSession): Int =
     spark.conf.getOption("spark.graft.ann.shardCount").map(_.toInt).getOrElse(2)
-
-  /** SHARDED scatter-gather serving — the fleet layout where the corpus
-    * is split across independently-built index tables (at 1000 executors
-    * no single index spans the corpus; shards build, compact, and fail
-    * independently): each shard answers the query from its own pruned
-    * scan, and the global answer is the re-topped union of the per-shard
-    * top-ks — correct by the scatter-gather invariant (every global
-    * top-k member is in its own shard's top-k, so the union provably
-    * contains the global answer). Shard membership is a pure id hash, so
-    * routing needs no directory. The planted copies split across the
-    * shards (ids 100000..100008 hash to different residues), making the
-    * row sensitive to a lost shard, a broken merge, or a shard build
-    * that dropped rows.
-    */
-  def annShardedTopk(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    val qv = queryVec(spark, dir, 0L)
-    val probes = defaultLsh.probes(defaultLsh.signature(qv.toSeq),
-      radius = tunedRadius(spark, dir))
-    val n = shardCount(spark)
-    val shardTops = (0 until n).map { shard =>
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_lshshard${shard}of${n}_" + Integer.toHexString(dir.hashCode))
-        .getAbsolutePath
-      val part = corpus.filter(
-        pmod(xxhash64(col("vec_id")), lit(n.toLong)) === shard.toLong)
-      ResultCache.buildIfAbsent(spark, corpus,
-        s"lsh:bits=${defaultLsh.nBits}:seed=42:shard=$shard/$n:v1", path) {
-        IndexBuilder.buildLshIndex(part, "embedding", defaultLsh, path)
-      }
-      spark.read.parquet(path)
-        .filter(col("bucket").isin(probes: _*))
-        .withColumn("score", round(
-          graft.vector.VectorFunctions.cosineUnit(
-            col("embedding"), typedlit(qv.toSeq)), 6))
-        .orderBy(col("score").desc, col("vec_id").asc)
-        .limit(10)
-        .select("vec_id", "score")
-    }
-    // the gather: union of per-shard top-ks, re-topped globally
-    shardTops.reduce(_ unionByName _)
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(10)
-      .select("vec_id", "score")
-  }
 
   // ---- CAS-committed index version log ---------------------------------
   // The versioned-read rows commit through `graft.ingest.ManifestLog` —
@@ -2254,61 +1896,6 @@ object AnnIndex extends QueryModule {
       .limit(10)
       .select("vec_id", "score")
       .orderBy("vec_id")
-  }
-
-  /** VERSIONED index reads — the Iceberg snapshot model applied to the
-    * vector index: every build/append commits a manifest listing its
-    * version's data files, and a reader pins a version by resolving
-    * files through the manifest alone (no copies, no snapshot dirs; the
-    * lakehouse timeTravelScan discipline on the index table). Probe
-    * pruning happens AT THE MANIFEST: file paths carry their `bucket=`
-    * partition, so the driver filters the file list to probe buckets
-    * before any scan — catalog-level partition pruning, file-count
-    * bounded. The enumerable construction: version 1 indexes the corpus
-    * + 5 planted copies, version 2 appends 4 more; the v1 top-6 and v2
-    * top-10 are both provable, so serving a version's answer from the
-    * wrong file set (torn append visible at v1, lost files at v2)
-    * perturbs the row.
-    */
-  def annTimeTravelTopk(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_lshtt_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    def dataFiles(): Seq[String] = listIndexFiles(spark, path)
-    ResultCache.buildIfAbsent(spark, corpus,
-      s"lsh:bits=${defaultLsh.nBits}:seed=42:lifecycle=timetravel:v2", path) {
-      resetIndexLog(path)
-      IndexBuilder.buildLshIndex(
-        e.unionByName(corpus.filter(col("vec_id").between(100000L, 100004L))),
-        "embedding", defaultLsh, path)
-      val v1 = dataFiles()
-      // the commits go through the CAS log: data files land FIRST, then
-      // the version claim — a reader of v1 never sees a torn append, and
-      // a racing second committer would retry on top, never clobber
-      commitIndexVersion(spark, path, _ => v1)
-      IndexBuilder.appendToLshIndex(
-        corpus.filter(col("vec_id") >= 100005L), "embedding", defaultLsh, path)
-      val newFiles = dataFiles().diff(v1)
-      commitIndexVersion(spark, path, head => head ++ newFiles)
-    }
-    val qv = queryVec(spark, dir, 0L)
-    val probes = defaultLsh.probes(defaultLsh.signature(qv.toSeq),
-      radius = tunedRadius(spark, dir)).toSet
-    def readVersion(v: Long, k: Int): DataFrame = {
-      val files = indexVersionFiles(spark, path, v, "bucket", probes)
-      spark.read.option("basePath", path).parquet(files: _*)
-        .filter(col("bucket").isin(probes.toSeq: _*))
-        .withColumn("score", round(
-          graft.vector.VectorFunctions.cosineUnit(
-            col("embedding"), typedlit(qv.toSeq)), 6))
-        .orderBy(col("score").desc, col("vec_id").asc)
-        .limit(k)
-        .select(lit(v).as("version"), col("vec_id"), col("score"))
-    }
-    readVersion(1L, 6).unionByName(readVersion(2L, 10))
-      .orderBy("version", "vec_id")
   }
 
   private val annTimeTravelTopkSql =
@@ -2394,272 +1981,6 @@ object AnnIndex extends QueryModule {
       .select("vec_id", "score")
   }
 
-  /** VERSIONED reads for the IVF family — the LSH manifest lifecycle
-    * (annTimeTravelTopk) applied to `cluster_id=` partitions: every
-    * build/append commits a manifest row-set listing its version's data
-    * files, a reader pins a version by resolving files through the
-    * manifest alone, and probe pruning happens AT THE MANIFEST — file
-    * paths carry their cluster partition, so the driver filters the
-    * file list to the nProbe-nearest clusters before any scan. The
-    * centroid sidecar is shared across versions (add-after-train: the
-    * appended copies assign against it, never refit), so pinning v1
-    * costs no sidecar copy. Same enumerable construction and oracle as
-    * the LSH row: v1 top-6 and v2 top-10 are both provable, so serving
-    * a version from the wrong file set perturbs the row.
-    */
-  def annIvfTimeTravelTopk(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivftt_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    def dataFiles(): Seq[String] = listIndexFiles(spark, path)
-    ResultCache.buildIfAbsent(spark, corpus,
-      "ivf:clusters=16:seed=42:lifecycle=timetravel:v2", path) {
-      resetIndexLog(path)
-      IndexBuilder.buildIvfIndex(
-        e.unionByName(corpus.filter(col("vec_id").between(100000L, 100004L))),
-        "embedding", numClusters = 16, seed = 42L, path)
-      val v1 = dataFiles()
-      commitIndexVersion(spark, path, _ => v1)
-      IndexBuilder.appendToIvfIndex(
-        corpus.filter(col("vec_id") >= 100005L), "embedding", path)
-      val newFiles = dataFiles().diff(v1)
-      commitIndexVersion(spark, path, head => head ++ newFiles)
-    }
-    val qv = queryVec(spark, dir, 0L)
-    val probes = IndexBuilder.nearestClusters(
-      IndexBuilder.loadIvfCentroids(path), qv,
-      nProbe = tunedNProbe(spark, dir)).toSet
-    def readVersion(v: Long, k: Int): DataFrame = {
-      val files = indexVersionFiles(spark, path, v, "cluster_id", probes)
-      spark.read.option("basePath", path).parquet(files: _*)
-        .filter(col("cluster_id").isin(probes.toSeq: _*))
-        .withColumn("score", round(
-          graft.vector.VectorFunctions.cosineUnit(
-            col("embedding"), typedlit(qv.toSeq)), 6))
-        .orderBy(col("score").desc, col("vec_id").asc)
-        .limit(k)
-        .select(lit(v).as("version"), col("vec_id"), col("score"))
-    }
-    readVersion(1L, 6).unionByName(readVersion(2L, 10))
-      .orderBy("version", "vec_id")
-  }
-
-  /** SHARDED scatter-gather for the IVF family: each shard is its own
-    * independently fitted and built IVF index (per-shard centroids +
-    * sidecar — a shard rebuilds or dies without touching the others; at
-    * fleet scale no single KMeans fit spans the corpus), a query ranks
-    * EACH shard's own centroids for its probe set, and the gather
-    * re-tops the union of per-shard top-ks. The invariant is the same
-    * N-generic scatter-gather argument as the LSH/graph rows, plus the
-    * IVF-specific one: each planted copy sits at the query point, so
-    * within ITS shard its assigned centroid is the nearest to the query
-    * and is probed at any nProbe ≥ 1 — the union provably contains the
-    * full planted answer whatever the per-shard fits look like.
-    */
-  def annIvfShardedTopk(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    val qv = queryVec(spark, dir, 0L)
-    val n = shardCount(spark)
-    val shardTops = (0 until n).map { shard =>
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_ivfshard${shard}of${n}_" + Integer.toHexString(dir.hashCode))
-        .getAbsolutePath
-      val part = corpus.filter(
-        pmod(xxhash64(col("vec_id")), lit(n.toLong)) === shard.toLong)
-      ResultCache.buildIfAbsent(spark, corpus,
-        s"ivf:clusters=16:seed=42:shard=$shard/$n:v1", path) {
-        IndexBuilder.buildIvfIndex(part, "embedding",
-          numClusters = 16, seed = 42L, path)
-      }
-      val probeIds = IndexBuilder.nearestClusters(
-        IndexBuilder.loadIvfCentroids(path), qv,
-        nProbe = tunedNProbe(spark, dir))
-      spark.read.parquet(path)
-        .filter(col("cluster_id").isin(probeIds: _*))
-        .withColumn("score", round(
-          graft.vector.VectorFunctions.cosineUnit(
-            col("embedding"), typedlit(qv.toSeq)), 6))
-        .orderBy(col("score").desc, col("vec_id").asc)
-        .limit(10)
-        .select("vec_id", "score")
-    }
-    shardTops.reduce(_ unionByName _)
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(10)
-      .select("vec_id", "score")
-  }
-
-  /** DELETE from the persisted IVF-SQ8 index — the codes-carrying SQ8
-    * table gets the tombstone discipline its PQ sibling has, with the
-    * same semantics point: the anti-join applies BEFORE the quantized
-    * coarse pass (a deleted row left in the coarse set would occupy
-    * overscan slots and shift the tie-inclusive cutoff). Delete cost is
-    * one sidecar write; codes, scales, centroids untouched, and the
-    * coarse pass still reads codes only (plan-audited).
-    */
-  def annIvfSq8DeleteTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfsq8del_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    ResultCache.buildIfAbsent(spark,
-      withPlantedSelfCopies(spark, Tables.embeddings(spark, dir)),
-      "ivfsq8:clusters=16:seed=42:lifecycle=delete:v1", path) {
-      graft.vector.Quantization.buildIvfSq8Index(
-        withPlantedSelfCopies(spark, Tables.embeddings(spark, dir)),
-        "embedding", numClusters = 16, seed = 42L, path)
-      spark.range(100000L, 100005L).toDF("vec_id")
-        .write.mode("overwrite").parquet(path + "_tombstones")
-    }
-    val tombstones = spark.read.parquet(path + "_tombstones")
-    val qv = queryVec(spark, dir, 0L)
-    val probes = IndexBuilder.nearestClusters(
-      IndexBuilder.loadIvfCentroids(path), qv,
-      nProbe = tunedNProbe(spark, dir))
-    val live = spark.read.parquet(path)
-      .filter(col("cluster_id").isin(probes: _*))
-      .join(broadcast(tombstones), Seq("vec_id"), "left_anti")
-    graft.vector.Quantization.quantizedKnn(
-      live, "embedding", "vec_id", qv, k = 5)
-  }
-
-  /** UPSERT into the persisted IVF-SQ8 index — re-embed without retrain:
-    * the replacement assigns and QUANTIZES against the persisted sidecar
-    * state (add-after-train for both the coarse quantizer and the scalar
-    * codes), landing int8 codes in its new cluster; the old version dies
-    * by seq-watermark (an id-level tombstone would kill the replacement),
-    * applied before the coarse pass for the same pre-filter reason as
-    * the delete row. annUpsertTopkSql verbatim.
-    */
-  def annIvfSq8UpsertTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfsq8upsert_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir)
-    ResultCache.buildIfAbsent(spark, withPlantedSelfCopies(spark, e),
-      "ivfsq8:clusters=16:seed=42:lifecycle=upsert-raw:v1", path) {
-      graft.vector.Quantization.buildIvfSq8Index(
-        withPlantedSelfCopies(spark, e).withColumn("seq", lit(0L)),
-        "embedding", numClusters = 16, seed = 42L, path)
-      spark.range(100000L, 100001L).toDF("t_vec_id")
-        .withColumn("upto_seq", lit(0L))
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      val reEmbedded = spark.range(100000L, 100001L).toDF("vec_id")
-        .crossJoin(broadcast(e.filter(col("vec_id") === 1L).select(col("embedding"))))
-        .select(col("vec_id"), col("embedding"), lit(1L).as("seq"))
-      graft.vector.Quantization.appendToIvfSq8Index(reEmbedded, "embedding", path)
-    }
-    val tombstones = spark.read.parquet(path + "_tombstones")
-    val qv = queryVec(spark, dir, 0L)
-    val probes = IndexBuilder.nearestClusters(
-      IndexBuilder.loadIvfCentroids(path), qv,
-      nProbe = tunedNProbe(spark, dir))
-    val live = spark.read.parquet(path)
-      .filter(col("cluster_id").isin(probes: _*))
-      .join(broadcast(tombstones),
-        col("vec_id") === col("t_vec_id") && col("seq") <= col("upto_seq"),
-        "left_anti")
-    graft.vector.Quantization.quantizedKnn(
-      live, "embedding", "vec_id", qv, k = 5)
-  }
-
-  /** COMPACTION folds the IVF-SQ8 tombstones into the cluster partitions
-    * — `Compaction.foldTombstones` rewrites affected `cluster_id=` leaves
-    * with ALL their columns (the int8 codes and scales ride along), and
-    * the centroid sidecar survives. Invariance pinning: annDeleteTopkSql
-    * verbatim, the query takes NO anti-join — the folded codes table
-    * alone must stop serving the deleted rows through the quantized
-    * coarse + exact rescore stack.
-    */
-  def annIvfSq8CompactedDeleteTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfsq8cdel_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    ResultCache.buildIfAbsent(spark, corpus,
-      "ivfsq8:clusters=16:seed=42:lifecycle=delete+fold:v1", path) {
-      graft.vector.Quantization.buildIvfSq8Index(
-        corpus, "embedding", numClusters = 16, seed = 42L, path)
-      spark.range(100000L, 100005L).toDF("vec_id")
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      graft.ingest.Compaction.foldTombstones(spark, path, path + "_tombstones")
-    }
-    graft.vector.Quantization.ivfSq8IndexTopK(
-      spark, path, "embedding", "vec_id", queryVec(spark, dir, 0L),
-      k = 5, nProbe = tunedNProbe(spark, dir))
-  }
-
-  /** The IVF-SQ8 watermark fold — the upsert's maintenance half over the
-    * codes table: kill exactly `seq <= upto_seq` in the old cluster, keep
-    * the re-quantized replacement in its new one, sidecar untouched.
-    * annUpsertTopkSql verbatim, no anti-join in the query.
-    */
-  def annIvfSq8CompactedUpsertTopk(spark: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfsq8cupsert_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir)
-    ResultCache.buildIfAbsent(spark, withPlantedSelfCopies(spark, e),
-      "ivfsq8:clusters=16:seed=42:lifecycle=upsert+fold:v1", path) {
-      graft.vector.Quantization.buildIvfSq8Index(
-        withPlantedSelfCopies(spark, e).withColumn("seq", lit(0L)),
-        "embedding", numClusters = 16, seed = 42L, path)
-      spark.range(100000L, 100001L).toDF("t_vec_id")
-        .withColumn("upto_seq", lit(0L))
-        .write.mode("overwrite").parquet(path + "_tombstones")
-      val reEmbedded = spark.range(100000L, 100001L).toDF("vec_id")
-        .crossJoin(broadcast(e.filter(col("vec_id") === 1L).select(col("embedding"))))
-        .select(col("vec_id"), col("embedding"), lit(1L).as("seq"))
-      graft.vector.Quantization.appendToIvfSq8Index(reEmbedded, "embedding", path)
-      graft.ingest.Compaction.foldTombstones(spark, path, path + "_tombstones")
-    }
-    graft.vector.Quantization.ivfSq8IndexTopK(
-      spark, path, "embedding", "vec_id", queryVec(spark, dir, 0L),
-      k = 5, nProbe = tunedNProbe(spark, dir))
-  }
-
-  /** VERSIONED reads for the persisted IVF-PQ index — the manifest
-    * lifecycle over the codes-carrying table: the m-byte codes ride the
-    * manifest-resolved files, both trained sidecars (centroids +
-    * codebooks) are shared across versions (add-after-train: the append
-    * encodes against them, never refits), and each version's answer is
-    * served through the full ADC coarse + exact rescore stack over its
-    * pinned file set alone. Same enumerable two-version oracle as the
-    * other time-travel rows.
-    */
-  def annIvfPqTimeTravelTopk(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfpqtt_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    ResultCache.buildIfAbsent(spark, corpus,
-      "ivfpq:clusters=16:seed=42:lifecycle=timetravel:v2", path) {
-      resetIndexLog(path)
-      graft.vector.ProductQuantization.buildIvfPqIndex(
-        e.unionByName(corpus.filter(col("vec_id").between(100000L, 100004L))),
-        "embedding", numClusters = 16, seed = 42L, path)
-      val v1 = listIndexFiles(spark, path)
-      commitIndexVersion(spark, path, _ => v1)
-      graft.vector.ProductQuantization.appendToIvfPqIndex(
-        corpus.filter(col("vec_id") >= 100005L), "embedding", path)
-      val newFiles = listIndexFiles(spark, path).diff(v1)
-      commitIndexVersion(spark, path, head => head ++ newFiles)
-    }
-    val qv = queryVec(spark, dir, 0L)
-    val books = graft.vector.ProductQuantization.loadPqCodebooks(path)
-    val probes = IndexBuilder.nearestClusters(
-      IndexBuilder.loadIvfCentroids(path), qv,
-      nProbe = tunedNProbe(spark, dir)).toSet
-    def readVersion(v: Long, k: Int): DataFrame = {
-      val files = indexVersionFiles(spark, path, v, "cluster_id", probes)
-      val live = spark.read.option("basePath", path).parquet(files: _*)
-        .filter(col("cluster_id").isin(probes.toSeq: _*))
-      graft.vector.ProductQuantization.pqSearchEncoded(
-        live, "embedding", "vec_id", books, qv, k = k, overscan = 16)
-        .select(lit(v).as("version"), col("vec_id"), col("score"))
-    }
-    readVersion(1L, 6).unionByName(readVersion(2L, 10))
-      .orderBy("version", "vec_id")
-  }
-
   /** The IVF maintenance loop closed Iceberg-style, annVacuumedTopk's
     * lifecycle over `cluster_id=` partitions: build (v1) → append (small
     * files accumulate, v2) → COMPACTION commit (live rows rewritten as
@@ -2723,112 +2044,6 @@ object AnnIndex extends QueryModule {
       .orderBy(col("score").desc, col("vec_id").asc)
       .limit(10)
       .select("vec_id", "score")
-  }
-
-  /** SHARDED scatter-gather over PERSISTED IVF-PQ indexes: each shard is
-    * its own fully trained index (per-shard KMeans coarse fit AND
-    * per-shard PQ codebooks — at fleet scale no single fit spans the
-    * corpus, and a shard retrains without touching the others); each
-    * shard answers through its full ADC coarse + exact rescore stack,
-    * and the gather re-tops the union. The per-shard planted copies
-    * encode to their shard's code for the query point, rescore exactly,
-    * and survive by the same N-generic scatter-gather invariant.
-    */
-  def annIvfPqShardedTopk(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    val qv = queryVec(spark, dir, 0L)
-    val n = shardCount(spark)
-    val shardTops = (0 until n).map { shard =>
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_ivfpqshard${shard}of${n}_" + Integer.toHexString(dir.hashCode))
-        .getAbsolutePath
-      val part = corpus.filter(
-        pmod(xxhash64(col("vec_id")), lit(n.toLong)) === shard.toLong)
-      ResultCache.buildIfAbsent(spark, corpus,
-        s"ivfpq:clusters=16:seed=42:shard=$shard/$n:v1", path) {
-        graft.vector.ProductQuantization.buildIvfPqIndex(
-          part, "embedding", numClusters = 16, seed = 42L, path)
-      }
-      graft.vector.ProductQuantization.ivfPqIndexTopK(
-        spark, path, "embedding", "vec_id", qv,
-        k = 10, nProbe = tunedNProbe(spark, dir))
-    }
-    shardTops.reduce(_ unionByName _)
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(10)
-      .select("vec_id", "score")
-  }
-
-  /** SHARDED scatter-gather over PERSISTED IVF-SQ8 indexes — the
-    * quantized fleet layout: per-shard coarse fit + per-vector int8
-    * codes (quantization is per-vector, so shard membership cannot
-    * change a code), codes-only coarse pass per shard, exact rescore,
-    * gather re-top. Same invariant as the PQ sharded row.
-    */
-  def annIvfSq8ShardedTopk(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    val qv = queryVec(spark, dir, 0L)
-    val n = shardCount(spark)
-    val shardTops = (0 until n).map { shard =>
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_ivfsq8shard${shard}of${n}_" + Integer.toHexString(dir.hashCode))
-        .getAbsolutePath
-      val part = corpus.filter(
-        pmod(xxhash64(col("vec_id")), lit(n.toLong)) === shard.toLong)
-      ResultCache.buildIfAbsent(spark, corpus,
-        s"ivfsq8:clusters=16:seed=42:shard=$shard/$n:v1", path) {
-        graft.vector.Quantization.buildIvfSq8Index(
-          part, "embedding", numClusters = 16, seed = 42L, path)
-      }
-      graft.vector.Quantization.ivfSq8IndexTopK(
-        spark, path, "embedding", "vec_id", qv,
-        k = 10, nProbe = tunedNProbe(spark, dir))
-    }
-    shardTops.reduce(_ unionByName _)
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(10)
-      .select("vec_id", "score")
-  }
-
-  /** VERSIONED reads for the persisted IVF-SQ8 index — the manifest
-    * lifecycle over the int8 codes table: v1's pinned file set serves
-    * through the stored-codes coarse pass + exact rescore without ever
-    * seeing v2's appended files, and both versions share the centroid
-    * sidecar (append assigns + quantizes against it, never refits).
-    */
-  def annIvfSq8TimeTravelTopk(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_ivfsq8tt_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val corpus = withPlantedSelfCopies(spark, Tables.embeddings(spark, dir))
-    ResultCache.buildIfAbsent(spark, corpus,
-      "ivfsq8:clusters=16:seed=42:lifecycle=timetravel:v2", path) {
-      resetIndexLog(path)
-      graft.vector.Quantization.buildIvfSq8Index(
-        e.unionByName(corpus.filter(col("vec_id").between(100000L, 100004L))),
-        "embedding", numClusters = 16, seed = 42L, path)
-      val v1 = listIndexFiles(spark, path)
-      commitIndexVersion(spark, path, _ => v1)
-      graft.vector.Quantization.appendToIvfSq8Index(
-        corpus.filter(col("vec_id") >= 100005L), "embedding", path)
-      val newFiles = listIndexFiles(spark, path).diff(v1)
-      commitIndexVersion(spark, path, head => head ++ newFiles)
-    }
-    val qv = queryVec(spark, dir, 0L)
-    val probes = IndexBuilder.nearestClusters(
-      IndexBuilder.loadIvfCentroids(path), qv,
-      nProbe = tunedNProbe(spark, dir)).toSet
-    def readVersion(v: Long, k: Int): DataFrame = {
-      val files = indexVersionFiles(spark, path, v, "cluster_id", probes)
-      val live = spark.read.option("basePath", path).parquet(files: _*)
-        .filter(col("cluster_id").isin(probes.toSeq: _*))
-      graft.vector.Quantization.quantizedKnn(
-        live, "embedding", "vec_id", qv, k = k)
-        .select(lit(v).as("version"), col("vec_id"), col("score"))
-    }
-    readVersion(1L, 6).unionByName(readVersion(2L, 10))
-      .orderBy("version", "vec_id")
   }
 
   /** VACUUM through the HNSW ladder: delete → ladder-wide fold →
@@ -3812,7 +3027,7 @@ object AnnIndex extends QueryModule {
     }
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, Row](
     "ann_recall_gate" -> annRecallGate,
     "ann_tuning_gate" -> annTuningGate,
     "ann_ivf_tuning_gate" -> annIvfTuningGate,
@@ -3857,49 +3072,18 @@ object AnnIndex extends QueryModule {
     "ann_filtered_topk" -> annFilteredTopk,
     "ann_rewrite_filtered_topk" -> annRewriteFilteredTopk,
     "ann_rewrite_ivf_topk" -> annRewriteIvfTopk,
-    "ann_delete_topk" -> annDeleteTopk,
-    "ann_compacted_delete_topk" -> annCompactedDeleteTopk,
-    "ann_upsert_topk" -> annUpsertTopk,
-    "ann_compacted_upsert_topk" -> annCompactedUpsertTopk,
-    "ann_ivf_delete_topk" -> annIvfDeleteTopk,
-    "ann_ivf_compacted_delete_topk" -> annIvfCompactedDeleteTopk,
-    "ann_ivf_upsert_topk" -> annIvfUpsertTopk,
-    "ann_ivf_compacted_upsert_topk" -> annIvfCompactedUpsertTopk,
-    "ann_ivf_pq_delete_topk" -> annIvfPqDeleteTopk,
-    "ann_ivf_pq_compacted_delete_topk" -> annIvfPqCompactedDeleteTopk,
-    "ann_ivf_pq_upsert_topk" -> annIvfPqUpsertTopk,
-    "ann_ivf_pq_compacted_upsert_topk" -> annIvfPqCompactedUpsertTopk,
     "ann_paged_topk" -> annPagedTopk,
-    "ann_sharded_topk" -> annShardedTopk,
     "ann_graph_sharded_topk" -> annGraphShardedTopk,
-    "ann_ivf_sharded_topk" -> annIvfShardedTopk,
-    "ann_ivf_pq_sharded_topk" -> annIvfPqShardedTopk,
-    "ann_ivf_sq8_sharded_topk" -> annIvfSq8ShardedTopk,
-    "ann_ivf_sq8_time_travel_topk" -> annIvfSq8TimeTravelTopk,
     "ann_hnsw_vacuumed_topk" -> annHnswVacuumedTopk,
-    "ann_time_travel_topk" -> annTimeTravelTopk,
-    "ann_ivf_time_travel_topk" -> annIvfTimeTravelTopk,
     "ann_hnsw_time_travel_topk" -> annHnswTimeTravelTopk,
     "ann_vacuumed_topk" -> annVacuumedTopk,
     "ann_graph_vacuumed_topk" -> annGraphVacuumedTopk,
     "ann_ivf_vacuumed_topk" -> annIvfVacuumedTopk,
-    "ann_ivf_pq_time_travel_topk" -> annIvfPqTimeTravelTopk,
-    "ann_ivf_sq8_delete_topk" -> annIvfSq8DeleteTopk,
-    "ann_ivf_sq8_upsert_topk" -> annIvfSq8UpsertTopk,
-    "ann_ivf_sq8_compacted_delete_topk" -> annIvfSq8CompactedDeleteTopk,
-    "ann_ivf_sq8_compacted_upsert_topk" -> annIvfSq8CompactedUpsertTopk,
-    "ann_streaming_ingest_topk" -> annStreamingIngestTopk,
-    "ann_ivf_streaming_ingest_topk" -> annIvfStreamingIngestTopk,
-    "ann_ivf_pq_streaming_ingest_topk" -> annIvfPqStreamingIngestTopk,
-    "ann_ivf_sq8_streaming_ingest_topk" -> annIvfSq8StreamingIngestTopk,
-    "ann_streaming_compacted_topk" -> annStreamingCompactedTopk,
-    "ann_ivf_streaming_compacted_topk" -> annIvfStreamingCompactedTopk,
-    "ann_ivf_pq_streaming_compacted_topk" -> annIvfPqStreamingCompactedTopk,
-    "ann_ivf_sq8_streaming_compacted_topk" -> annIvfSq8StreamingCompactedTopk,
     "ann_auto_route_topk" -> annAutoRouteTopk,
     "ann_auto_route_batch_topk" -> annAutoRouteBatchTopk,
     "lsh_planted_near_dupes" -> lshPlantedNearDupes,
-    "ivf_planted_near_dupes" -> ivfPlantedNearDupes)
+    "ivf_planted_near_dupes" -> ivfPlantedNearDupes) ++
+    familyRows.map { case (name, row, _) => name -> row }
 
   def oracles: Map[String, String] = Map(
     "ann_recall_gate" -> annRecallGateSql,
@@ -3946,47 +3130,16 @@ object AnnIndex extends QueryModule {
     "ann_filtered_topk" -> annFilteredTopkSql,
     "ann_rewrite_filtered_topk" -> annFilteredTopkSql,
     "ann_rewrite_ivf_topk" -> annSelfQueryTopkSql,
-    "ann_delete_topk" -> annDeleteTopkSql,
-    "ann_compacted_delete_topk" -> annDeleteTopkSql,
-    "ann_upsert_topk" -> annUpsertTopkSql,
-    "ann_compacted_upsert_topk" -> annUpsertTopkSql,
-    "ann_ivf_delete_topk" -> annDeleteTopkSql,
-    "ann_ivf_compacted_delete_topk" -> annDeleteTopkSql,
-    "ann_ivf_upsert_topk" -> annUpsertTopkSql,
-    "ann_ivf_compacted_upsert_topk" -> annUpsertTopkSql,
-    "ann_ivf_pq_delete_topk" -> annDeleteTopkSql,
-    "ann_ivf_pq_compacted_delete_topk" -> annDeleteTopkSql,
-    "ann_ivf_pq_upsert_topk" -> annUpsertTopkSql,
-    "ann_ivf_pq_compacted_upsert_topk" -> annUpsertTopkSql,
     "ann_paged_topk" -> annPagedTopkSql,
-    "ann_sharded_topk" -> annSelfQueryTopkSql,
     "ann_graph_sharded_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_sharded_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_pq_sharded_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_sq8_sharded_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_sq8_time_travel_topk" -> annTimeTravelTopkSql,
     "ann_hnsw_vacuumed_topk" -> annGraphDeleteTopkSql,
-    "ann_time_travel_topk" -> annTimeTravelTopkSql,
-    "ann_ivf_time_travel_topk" -> annTimeTravelTopkSql,
     "ann_hnsw_time_travel_topk" -> annTimeTravelTopkSql,
     "ann_vacuumed_topk" -> annSelfQueryTopkSql,
     "ann_graph_vacuumed_topk" -> annGraphDeleteTopkSql,
     "ann_ivf_vacuumed_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_pq_time_travel_topk" -> annTimeTravelTopkSql,
-    "ann_ivf_sq8_delete_topk" -> annDeleteTopkSql,
-    "ann_ivf_sq8_upsert_topk" -> annUpsertTopkSql,
-    "ann_ivf_sq8_compacted_delete_topk" -> annDeleteTopkSql,
-    "ann_ivf_sq8_compacted_upsert_topk" -> annUpsertTopkSql,
-    "ann_streaming_ingest_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_streaming_ingest_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_pq_streaming_ingest_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_sq8_streaming_ingest_topk" -> annSelfQueryTopkSql,
-    "ann_streaming_compacted_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_streaming_compacted_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_pq_streaming_compacted_topk" -> annSelfQueryTopkSql,
-    "ann_ivf_sq8_streaming_compacted_topk" -> annSelfQueryTopkSql,
     "ann_auto_route_topk" -> annSelfQueryTopkSql,
     "ann_auto_route_batch_topk" -> annLshBatchTopkSql,
     "lsh_planted_near_dupes" -> lshPlantedNearDupesSql,
-    "ivf_planted_near_dupes" -> ivfPlantedNearDupesSql)
+    "ivf_planted_near_dupes" -> ivfPlantedNearDupesSql) ++
+    familyRows.map { case (name, _, sql) => name -> sql }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` for the named registered queries
   * to plans/<tag>/<query>_<suffix>.txt — the optimization-round evidence
   * files (plan shape: Exchange count, join strategy, PushedFilters).
@@ -16,16 +14,10 @@ object ExplainPlans {
       if (args(2) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the board's session (Bench builds the same one), so the dumps are
+    // the plans the board runs
+    val spark = graft.GraftSession.harness(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val dir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(dir)
     names.foreach { name =>

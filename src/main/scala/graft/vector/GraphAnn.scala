@@ -272,17 +272,6 @@ object GraphAnn {
       .write.mode("append").parquet(path + "_tombstones")
   }
 
-  /** Tombstoned node ids (empty when no delete is pending). The pin reads
-    * the sidecar with a plain scan and dedups on the driver instead. */
-  def readNswTombstones(spark: SparkSession, path: String): DataFrame =
-    if (pathExists(spark, path + "_tombstones"))
-      spark.read.schema(tombSchema).parquet(path + "_tombstones")
-        .select("node_id").distinct()
-    else {
-      import spark.implicits._
-      Seq.empty[Long].toDF("node_id")
-    }
-
   /** Fold pending tombstones into the adjacency — the right-to-be-
     * forgotten job the other index families already have. Only AFFECTED
     * rows are rewritten (live nodes whose current adjacency lists a
@@ -899,8 +888,8 @@ object GraphAnn {
           (p, m, hashEntries(m, descentBeam))
         }
         val adj0 = adjOf(path)
-        // a plain scan deduped on the driver: readNswTombstones' distinct
-        // would add an exchange and a job to every pin with deletes pending
+        // a plain scan deduped on the driver: a distinct would add an
+        // exchange and a job to every pin with deletes pending
         val dead =
           if (!pathExists(spark, path + "_tombstones")) Set.empty[Long]
           else spark.read.schema(tombSchema).parquet(path + "_tombstones")

@@ -503,29 +503,13 @@ object IndexBuilder {
   private val ivfCache =
     scala.collection.concurrent.TrieMap.empty[(String, String, Int, Long), Array[Array[Double]]]
 
-  /** Memoization key for a logical input. The canonicalized plan string
-    * alone is NOT enough: an unresolved `spark.read.parquet(path)` node
-    * canonicalizes to "UnresolvedDataSource … paths: 1 provided" for EVERY
-    * path, so two different datasets would collide and the second query
-    * would silently get the first dataset's cached frame + centroids.
-    * Resolve first (analyzed) and append every file-source root path.
-    */
-  private def inputKey(df: DataFrame): String = {
-    val analyzed = df.queryExecution.analyzed
-    val paths = analyzed.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.mkString(",")
-          case other => other.toString
-        }
-    }.mkString("|")
-    analyzed.canonicalized.toString + "#" + paths
-  }
-
   def withIvfCluster(df: DataFrame, embCol: String, numClusters: Int,
       seed: Long): (DataFrame, Array[Array[Double]]) = {
-    val key = (inputKey(df), embCol, numClusters, seed)
+    // keyed like every other input-derived memo (ResultCache.cacheKey):
+    // the plan plus the files each relation's listing captured and the
+    // rows of inline LocalRelations, so a frame re-read after a file
+    // lands in its root, or a different set of local rows, refits
+    val key = (graft.ops.ResultCache.cacheKey(df), embCol, numClusters, seed)
     // memoize ONLY the fit (the k-means collects): the assigned FRAME is
     // rebuilt on the CALLER's df every time. Caching the frame itself
     // silently pinned the FIRST caller's SparkSession into every later
@@ -595,6 +579,18 @@ object IndexBuilder {
     */
   val IvfCentroidsFile = "_graft_ivf_centroids.txt"
 
+  /** Write the centroid sidecar into `dir` (created if absent): one line
+    * per centroid, `Double.toString` values joined by commas, which
+    * `loadIvfCentroids` round-trips exactly. The one writer every IVF
+    * family's build and train share. */
+  def writeIvfCentroids(dir: String, centers: Array[Array[Double]]): Unit = {
+    val d = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.createDirectories(d)
+    java.nio.file.Files.write(d.resolve(IvfCentroidsFile),
+      centers.map(_.map(java.lang.Double.toString).mkString(",")).mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
   /** Persist the corpus as an IVF-partitioned index table: cluster filters
     * become partition pruning, and the centroids are written as a tiny
     * text sidecar (`Double.toString` round-trips exactly) so query-time
@@ -606,11 +602,7 @@ object IndexBuilder {
     val (clustered, centers) = withIvfCluster(df, embCol, numClusters, seed)
     clusteredBy(clustered, "cluster_id", numClusters)
       .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-    val text = centers.map(_.map(java.lang.Double.toString).mkString(","))
-      .mkString("\n")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, IvfCentroidsFile),
-      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeIvfCentroids(path, centers)
     centers
   }
 
@@ -646,12 +638,7 @@ object IndexBuilder {
   def trainIvfCentroids(df: DataFrame, embCol: String, numClusters: Int,
       seed: Long, root: String): Unit = {
     val (_, centers) = withIvfCluster(df, embCol, numClusters, seed)
-    val dir = java.nio.file.Paths.get(root)
-    java.nio.file.Files.createDirectories(dir)
-    val text = centers.map(_.map(java.lang.Double.toString).mkString(","))
-      .mkString("\n")
-    java.nio.file.Files.write(dir.resolve(IvfCentroidsFile),
-      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    writeIvfCentroids(root, centers)
   }
 
   /** EXACTLY-ONCE micro-batch staging for a streaming IVF index — the

@@ -272,18 +272,19 @@ object ProductQuantization {
     IndexBuilder.clusteredBy(
         withPqCodes(clustered, embCol, books), "cluster_id", numClusters)
       .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-    val centText = centers.map(_.map(java.lang.Double.toString).mkString(","))
-      .mkString("\n")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, IndexBuilder.IvfCentroidsFile),
-      centText.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val bookText = (s"$m,$ksub" +:
-      books.flatMap(_.map(_.map(java.lang.Double.toString).mkString(","))).toSeq)
-      .mkString("\n")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, PqCodebooksFile),
-      bookText.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    IndexBuilder.writeIvfCentroids(path, centers)
+    writePqCodebooks(path, books, m, ksub)
   }
+
+  /** Write the codebook sidecar into `dir`: an `m,ksub` header, then one
+    * line per (subspace, centroid) of `Double.toString` values, which
+    * `loadPqCodebooks` round-trips exactly. */
+  def writePqCodebooks(dir: String, books: Array[Array[Array[Double]]],
+      m: Int, ksub: Int): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, PqCodebooksFile),
+      (s"$m,$ksub" +:
+        books.flatMap(_.map(_.map(java.lang.Double.toString).mkString(","))).toSeq)
+        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Load a codebook sidecar written by buildIvfPqIndex. */
   def loadPqCodebooks(path: String): Array[Array[Array[Double]]] = {
@@ -326,15 +327,8 @@ object ProductQuantization {
     val books = fitCodebooks(df, embCol, m, ksub, seed)
     val (_, centers) =
       IndexBuilder.withIvfCluster(df, embCol, numClusters, seed)
-    val dir = java.nio.file.Paths.get(root)
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(dir.resolve(IndexBuilder.IvfCentroidsFile),
-      centers.map(_.map(java.lang.Double.toString).mkString(","))
-        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.write(dir.resolve(PqCodebooksFile),
-      (s"$m,$ksub" +:
-        books.flatMap(_.map(_.map(java.lang.Double.toString).mkString(","))).toSeq)
-        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    IndexBuilder.writeIvfCentroids(root, centers)
+    writePqCodebooks(root, books, m, ksub)
   }
 
   /** EXACTLY-ONCE micro-batch staging for a streaming IVF-PQ index — the

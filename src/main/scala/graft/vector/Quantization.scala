@@ -155,11 +155,7 @@ object Quantization {
     IndexBuilder.clusteredBy(
         withQuantized(clustered, embCol), "cluster_id", numClusters)
       .write.mode("overwrite").partitionBy("cluster_id").parquet(path)
-    val text = centers.map(_.map(java.lang.Double.toString).mkString(","))
-      .mkString("\n")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, IndexBuilder.IvfCentroidsFile),
-      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    IndexBuilder.writeIvfCentroids(path, centers)
   }
 
   /** Add vectors WITHOUT retraining: assignment and quantization are

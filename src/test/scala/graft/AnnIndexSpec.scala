@@ -1428,6 +1428,29 @@ class AnnIndexSpec extends SparkSpec {
     assert(a._1.count() !== b._1.count(), "cached frame must match its input dataset")
   }
 
+  test("IVF fit memo refits a re-read root after a file lands, and keys inline rows") {
+    import spark.implicits._
+    // 4-dim vectors jittered around `center`
+    def vecs(center: Float, ids: Range) = ids.map(i => (i.toLong,
+      Array.tabulate(4)(j => center + ((i * 7 + j * 3) % 11) / 100f))).toDF("vec_id", "embedding")
+    def fit(df: org.apache.spark.sql.DataFrame) =
+      IndexBuilder.withIvfCluster(df, "embedding", 2, seed = 7L)._2.map(_.toSeq).toSeq
+    def fresh(df: org.apache.spark.sql.DataFrame) =
+      IndexBuilder.fitIvfCentroids(df, "embedding", 2, seed = 7L).map(_.toSeq).toSeq
+    val dir = Files.createTempDirectory("ivf_memo").toString
+    vecs(0f, 0 until 40).write.mode("overwrite").parquet(dir)
+    val before = fit(spark.read.parquet(dir))
+    // a file lands in the root: the same plan over the same root path
+    vecs(10f, 1000 until 1200).write.mode("append").parquet(dir)
+    val reread = spark.read.parquet(dir)
+    assert(fresh(reread) !== before, "the appended file must move the fit")
+    assert(fit(reread) === fresh(reread), "the re-read frame got the old fit")
+    // two LocalRelations of one shape differ only in their rows
+    assert(fit(vecs(0f, 0 until 40)) === fresh(vecs(0f, 0 until 40)))
+    assert(fit(vecs(10f, 0 until 40)) === fresh(vecs(10f, 0 until 40)),
+      "inline rows of another frame got its fit")
+  }
+
   test("IVF centroids are stable under input reordering (content-defined sample)") {
     val e = Tables.embeddings(spark, sf)
     val forward = IndexBuilder.fitIvfCentroids(e, "embedding", 8, seed = 7L)
